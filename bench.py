@@ -458,7 +458,7 @@ def main() -> None:
                 )
                 return {"bytes": _dir_bytes(vdir), "files": n_files}
 
-            def _on_progress(epoch_id: int, _top) -> None:
+            def _on_progress(epoch_id: int, _top, _stats) -> None:
                 p = _state_probe(churn_state)
                 telemetry.append(
                     {"epoch": epoch_id, "state_bytes": p["bytes"], "state_files": p["files"]}

@@ -37,10 +37,9 @@ def fanout(df: DataFrame, target: int | None = None) -> DataFrame:
     ride the shuffle.
 
     No-op for streaming frames (micro-batch planning re-splits on its
-    own, and the probe needs an RDD) and under SPARK_GRAFT_FANOUT=0
-    (measurement A/B switch).
+    own, and the probe needs an RDD).
     """
-    if df.isStreaming or os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
+    if df.isStreaming:
         return df
     spark = df.sparkSession
     if target is None:

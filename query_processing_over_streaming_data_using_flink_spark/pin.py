@@ -63,13 +63,8 @@ def materialize_concurrently(dfs: list[DataFrame]) -> None:
     nothing survives the run (bench clears the cache between runs).
     No-op inside ``unpinned_for_explain()`` (plan dumps must stay
     job-free) and for fewer than two frames (a single frame would
-    materialize in the composed query anyway).
-    ``SPARK_GRAFT_OVERLAP=0`` disables it — the interleaved A/B switch
-    (the composed query then materializes the persists sequentially,
-    exactly the pre-r15 shape)."""
-    import os
-
-    if _EXPLAIN_MODE or len(dfs) < 2 or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    materialize in the composed query anyway)."""
+    if _EXPLAIN_MODE or len(dfs) < 2:
         return
     from concurrent.futures import ThreadPoolExecutor
 
@@ -83,12 +78,9 @@ def materialize_concurrently(dfs: list[DataFrame]) -> None:
 
 def materialize(df: DataFrame) -> None:
     """Force one persisted frame NOW on the calling thread (noop
-    write); no-op in explain mode / SPARK_GRAFT_OVERLAP=0. Pairs with
-    `materialize_async`: start one subtree in the background, force the
-    other here, join."""
-    import os
-
-    if _EXPLAIN_MODE or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    write); no-op in explain mode. Pairs with `materialize_async`: start
+    one subtree in the background, force the other here, join."""
+    if _EXPLAIN_MODE:
         return
     df.write.format("noop").mode("overwrite").save()
 
@@ -99,12 +91,10 @@ def materialize_async(df: DataFrame):
     overlap one subtree's execution with the CONSTRUCTION of another
     that runs its own jobs eagerly — e.g. a recall cert's exact
     brute-force side computing while the index side trains its
-    quantizers (guide §2.6). In explain mode / SPARK_GRAFT_OVERLAP=0
-    returns a no-op join (the composed query materializes the persist
-    sequentially, the pre-r15 shape)."""
-    import os
-
-    if _EXPLAIN_MODE or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    quantizers (guide §2.6). In explain mode returns a no-op join (plan
+    dumps must stay job-free; the composed query materializes the
+    persist itself)."""
+    if _EXPLAIN_MODE:
         return lambda: None
     from concurrent.futures import ThreadPoolExecutor
 

@@ -216,115 +216,7 @@ class IncrementalQ3:
             }
         )
 
-    def _restrict(self, state: DataFrame, delta: DataFrame) -> DataFrame:
-        """State rows in the buckets the delta touches (semi-join on the
-        partition column → dynamic partition pruning skips the rest)."""
-        return self.state.restrict(state, delta)
-
     # -- delta extraction ----------------------------------------------------
-
-    def _spill_deltas(
-        self, batch: DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Single-pass unified delta spill: ONE scan of the micro-batch,
-        ONE shuffle, ONE write, then pure-metadata moves into the state
-        tables' tmp names (so the append-mode commit publishes these
-        exact files as the epoch's state write). Replaces the round-5
-        three-writes shape (persist + three per-relation shuffles) —
-        every event rides exactly one relation's filter, so the unified
-        write shuffles the same bytes once in one job (r14: SF-1 spill
-        phase 7.8 → ~4 s).
-
-        Filters are weight-preserving (SURVEY §7) and the deltas are
-        deliberately NOT netted per batch: state tables are weight
-        multisets and every delta join is linear in each side, so
-        duplicate keys are exactly correct — and in a sliding-window
-        changelog an insert and its delete are `window` positions apart
-        (≫ one micro-batch), so a per-batch groupBy would cancel
-        nothing while costing an extra shuffle per relation (measured
-        ~30% of SF-1 epoch time). Netting happens where it reclaims
-        rows: `compact_state`.
-
-        The shuffle key is the per-relation JOIN KEY, not the derived
-        bucket column: Spark's HashPartitioning assigns partition id
-        pmod(murmur3(key), n) — exactly `_bucket` — so each task holds
-        exactly one bucket and the dynamic-partition write emits one
-        file per (relation, bucket). Repartitioning on the 32-valued
-        bucket column instead would hash 32 values into 32 partitions
-        (collisions: some tasks own 2-3 buckets, some none — the guide
-        §2.5 synthetic-key skew), measured as a ~2× straggler tail on
-        the spill stage.
-
-        Read back behind a selective predicate: the shape that
-        deterministically arms dynamic partition pruning on every
-        downstream state join."""
-        cut = ts_lit(self.cutoff)
-        keep = (
-            ((F.col("relation") == "customer") & (F.col("mktsegment") == self.segment))
-            | ((F.col("relation") == "orders") & (F.col("orderdate") < cut))
-            | ((F.col("relation") == "lineitem") & (F.col("shipdate") > cut))
-        )
-        key = (
-            F.when(F.col("relation") == "customer", F.col("custkey"))
-            .when(F.col("relation") == "orders", F.col("o_custkey"))
-            .otherwise(F.col("orderkey"))
-        )
-        unified = (
-            batch.filter(keep)
-            .repartition(NUM_BUCKETS, key)
-            .select(
-                # rel = first letter of the relation — exactly the
-                # state-table names, so the partition dirs move 1:1.
-                F.col("relation").substr(1, 1).alias("rel"),
-                _bucket(key).alias("bucket"),
-                F.col("custkey").alias("c_custkey"),
-                F.col("op").cast("long").alias("w_c"),
-                F.col("orderkey").alias("o_orderkey"),
-                F.col("o_custkey"),
-                F.col("orderdate").alias("o_orderdate"),
-                F.col("op").cast("long").alias("w_o"),
-                F.col("orderkey").alias("l_orderkey"),
-                F.col("linenumber"),
-                (
-                    F.col("op")
-                    * F.round(
-                        F.col("extendedprice") * (F.lit(1.0) - F.col("discount")) * 10000, 0
-                    ).cast("long")
-                ).alias("w_cents"),
-            )
-        )
-        # Columns not belonging to a row's relation are NULL in the
-        # changelog wire schema, so each rel=X file carries real values
-        # only for X's columns; the state-table read schemas project
-        # the rest away (state_table.read's documented contract).
-        stage = self._tmp("batchspill")
-        unified.write.partitionBy("rel", "bucket").mode("overwrite").parquet(stage)
-        import os as _os
-
-        for t in ("c", "o", "l"):
-            dst = self._tmp(t)
-            shutil.rmtree(dst, ignore_errors=True)
-            src = _os.path.join(stage, f"rel={t}")
-            if _os.path.isdir(src):
-                _os.replace(src, dst)
-            else:
-                # Relation absent from this batch: an empty dir keeps
-                # the read-back (eager path check) and the emptiness
-                # probes working exactly as an empty parquet write did.
-                _os.makedirs(dst, exist_ok=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-        schemas = {
-            "c": "c_custkey long, w_c long, bucket int",
-            "o": "o_orderkey long, o_custkey long, o_orderdate timestamp_ntz, w_o long, bucket int",
-            "l": "l_orderkey long, linenumber int, w_cents long, bucket int",
-        }
-        # Explicit schemas: an all-empty delta writes no part files, and
-        # schema inference would fail on the bare directory.
-        rdc = _selective(self.spark.read.schema(schemas["c"]).parquet(self._tmp("c")), "c_custkey")
-        rdo = _selective(self.spark.read.schema(schemas["o"]).parquet(self._tmp("o")), "o_orderkey")
-        rdl = _selective(self.spark.read.schema(schemas["l"]).parquet(self._tmp("l")), "l_orderkey")
-        return rdc, rdo, rdl
 
     # Read-back schemas for the spilled deltas (explicit: an all-empty
     # delta writes no part files and schema inference would fail on the
@@ -342,16 +234,40 @@ class IncrementalQ3:
         )
 
     def _spill_l(self, batch: DataFrame) -> DataFrame:
-        """Spill the lineitem delta alone (r15 split-lane spill): filter
+        """Spill the lineitem delta alone (split-lane spill): filter
         → NARROW pre-shuffle projection (guide §2.3 — the shuffle
         carries (l_orderkey, linenumber, w_cents), ~3 of the wire
         schema's 11 columns; w_cents is computed map-side BEFORE the
         exchange so two doubles collapse to one long) → repartition on
-        the join key (partition id == bucket, see _spill_deltas) → one
-        file per bucket, moved into the l table's tmp name. Runs in its
-        own lane so the CO⋈ΔL maintenance term can start the moment the
-        L delta lands, instead of waiting for the whole unified spill
-        (guide §2.6). Returns the selective read-back."""
+        the join key → one file per bucket, moved into the l table's
+        tmp name (so the append-mode commit publishes these exact files
+        as the epoch's state write). Runs in its own lane so the CO⋈ΔL
+        maintenance term can start the moment the L delta lands,
+        instead of waiting for the C/O spill (guide §2.6).
+
+        The shuffle key is the JOIN KEY, not the derived bucket column:
+        Spark's HashPartitioning assigns partition id
+        pmod(murmur3(key), n) — exactly `_bucket` — so each task holds
+        exactly one bucket and the dynamic-partition write emits one
+        file per bucket. Repartitioning on the 32-valued bucket column
+        instead would hash 32 values into 32 partitions (collisions:
+        some tasks own 2-3 buckets, some none — the guide §2.5
+        synthetic-key skew), measured as a ~2× straggler tail on the
+        spill stage. Every other keyed repartition in this class relies
+        on the same identity.
+
+        Filters are weight-preserving (SURVEY §7) and the deltas are
+        deliberately NOT netted per batch: state tables are weight
+        multisets and every delta join is linear in each side, so
+        duplicate keys are exactly correct — and in a sliding-window
+        changelog an insert and its delete are `window` positions apart
+        (≫ one micro-batch), so a per-batch groupBy would cancel
+        nothing while costing an extra shuffle. Netting happens where it
+        reclaims rows: `compact_state`.
+
+        Returns the read-back behind a selective predicate: the shape
+        that deterministically arms dynamic partition pruning on every
+        downstream state join."""
         cut = ts_lit(self.cutoff)
         stage = self._tmp("lspill")
         shutil.rmtree(stage, ignore_errors=True)
@@ -386,12 +302,13 @@ class IncrementalQ3:
         return self._read_spill("l")
 
     def _spill_co(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Spill the customer+orders deltas together (r15 split-lane
+        """Spill the customer+orders deltas together (split-lane
         spill): both relations key on CUSTKEY for their state buckets,
-        so one shuffle places both; the pre-shuffle projection is the
-        narrow (rel, k, o_orderkey, o_orderdate, w) instead of the
-        11-column padded wire row (guide §2.3). Partition dirs move 1:1
-        into the c and o tmp names exactly as the unified spill did;
+        so one shuffle places both (keyed as in `_spill_l`); the
+        pre-shuffle projection is the narrow (rel, k, o_orderkey,
+        o_orderdate, w) instead of the 11-column padded wire row (guide
+        §2.3). Partition dirs move 1:1 into the c and o tmp names (an
+        empty dir when the batch has no rows of that relation);
         per-relation columns the other relation never reads are NULL.
         Returns the selective read-backs (dc, do)."""
         cut = ts_lit(self.cutoff)
@@ -435,6 +352,9 @@ class IncrementalQ3:
             if os.path.isdir(src):
                 os.replace(src, dst)
             else:
+                # Relation absent from this batch: an empty dir keeps
+                # the read-back (eager path check) and the emptiness
+                # probes working.
                 os.makedirs(dst, exist_ok=True)
         shutil.rmtree(stage, ignore_errors=True)
         return self._read_spill("c"), self._read_spill("o")
@@ -447,8 +367,7 @@ class IncrementalQ3:
             # and checkpoint ack): its delta is already in the committed
             # version — applying it again would double the weights.
             return
-        # Phase wall-clock per epoch, exported through last_stats (the
-        # r14 optimization rounds size their work from these numbers).
+        # Phase wall-clock per epoch, exported through last_stats.
         import time as _time
 
         _phase_t0 = _time.time()
@@ -466,12 +385,10 @@ class IncrementalQ3:
         # so a directory listing answers "any rows?" with zero Spark
         # jobs. A batch with no events for a relation contributes
         # nothing through any term containing that Δ — skip those terms.
-        import os as _os
-
         def has_rows(name: str) -> bool:
             tmp = self._tmp(name)
-            return _os.path.isdir(tmp) and any(
-                e.startswith("bucket=") for e in _os.listdir(tmp)
+            return os.path.isdir(tmp) and any(
+                e.startswith("bucket=") for e in os.listdir(tmp)
             )
 
         def spill_bytes(name: str) -> int:
@@ -523,27 +440,18 @@ class IncrementalQ3:
         shutil.rmtree(self._tmp("r"), ignore_errors=True)
         shutil.rmtree(self._tmp("r2"), ignore_errors=True)
 
-        # Lane handshake (r15 split-lane spill, guide §2.6): the L lane
+        # Lane handshake (split-lane spill, guide §2.6): the L lane
         # publishes its spilled delta here and sets the event; the CO
         # lane waits on it only at the point it builds the ΔCO⋈ΔL term
-        # — by which time the (faster) L spill has long landed. In the
-        # unified fallback path the event is pre-set before the
-        # maintenance threads start.
+        # — by which time the (faster) L spill has long landed.
         l_spilled = threading.Event()
         _dl_box: dict[str, DataFrame] = {}
-
-        def _prep_dl(dl: DataFrame) -> None:
-            if has_rows("l"):
-                _dl_box["dl_small"] = dl.select(
-                    F.col("bucket").alias("b_l"), "l_orderkey", "w_cents"
-                )
-            l_spilled.set()
 
         def fold_spill_r(part: DataFrame, tmp_name: str) -> None:
             # Pre-fold the delta before it joins the result log (many
             # lineitems per order collapse to one row per group). The
             # repartition keys the JOIN KEY, so the partition id equals
-            # the bucket value (see _spill_deltas) — the grouped
+            # the bucket value (see _spill_l) — the grouped
             # aggregate reuses that exchange (partitioning on a subset
             # of the grouping keys satisfies its distribution) and the
             # write emits one file per bucket instead of the old
@@ -604,7 +512,7 @@ class IncrementalQ3:
                     dco_all = dco_all.unionByName(part)
                 # Keyed on o_orderkey → partition id == bucket value
                 # (one file per bucket, no 32-into-32 hash-collision
-                # stragglers — see _spill_deltas).
+                # stragglers — see _spill_l).
                 (
                     dco_all.repartition(NUM_BUCKETS, "o_orderkey")
                     .write.partitionBy("bucket")
@@ -631,7 +539,7 @@ class IncrementalQ3:
             sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
             # The ΔCO⋈ΔL term needs the L lane's spill on disk; the ΔCO
             # spill above takes longer than the L spill, so this wait is
-            # effectively free (split-lane mode; pre-set otherwise).
+            # effectively free.
             l_spilled.wait()
             dl_small = _dl_box.get("dl_small")
             # ΔCO ⋈ L — the old-lineitem probe.
@@ -666,11 +574,11 @@ class IncrementalQ3:
         def maintain_r_dl() -> None:
             """CO ⋈ ΔL — probe the maintained view with the lineitem
             delta; depends only on OLD state + the ΔL spill, so it runs
-            concurrently with the whole CO chain (and, in split-lane
-            mode, starts the moment the L spill lands — before the C/O
-            spill has even finished). In a bulk epoch ΔL is millions of
-            rows while the filtered CO view stays compact — `sides`
-            flips the broadcast to the view."""
+            concurrently with the whole CO chain and starts the moment
+            the L spill lands — before the C/O spill has even finished.
+            In a bulk epoch ΔL is millions of rows while the filtered
+            CO view stays compact — `sides` flips the broadcast to the
+            view."""
             dl_small = _dl_box.get("dl_small")
             if dl_small is None:
                 return
@@ -690,70 +598,56 @@ class IncrementalQ3:
             )
             _phases["r_dl"] = round(_time.time() - t0, 3)
 
-        # Two lanes (r15, guide §2.6): each relation's spill feeds only
-        # its own maintenance chain, so the spills themselves overlap
-        # too — lane L (ΔL spill → CO⋈ΔL probe) runs entirely inside
-        # the shadow of lane CO's critical path (ΔC/ΔO spill → ΔCO
-        # spill → ΔCO-driven R terms), where the r14 shape serialized
-        # ONE unified spill before any maintenance could start.
-        # SPARK_GRAFT_IVM_SPLIT=0 restores the unified shape (the
-        # interleaved A/B switch; numbers in OPTIMIZATION_r15.md).
-        if os.environ.get("SPARK_GRAFT_IVM_SPLIT", "1") != "0":
+        # Two lanes (guide §2.6): each relation's spill feeds only its
+        # own maintenance chain, so the spills themselves overlap too —
+        # lane L (ΔL spill → CO⋈ΔL probe) runs entirely inside the
+        # shadow of lane CO's critical path (ΔC/ΔO spill → ΔCO spill →
+        # ΔCO-driven R terms); no maintenance waits on a whole-batch
+        # spill (numbers in OPTIMIZATION_r15.md).
+        def lane_l() -> None:
+            t0 = _time.time()
+            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
+            try:
+                dl = self._spill_l(batch)
+                if has_rows("l"):
+                    _dl_box["dl_small"] = dl.select(
+                        F.col("bucket").alias("b_l"), "l_orderkey", "w_cents"
+                    )
+            finally:
+                l_spilled.set()  # never deadlock lane CO on a failed spill
+            _phases["spill_l"] = round(_time.time() - t0, 3)
+            maintain_r_dl()
 
-            def lane_l() -> None:
-                t0 = _time.time()
-                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
-                try:
-                    _prep_dl(self._spill_l(batch))
-                finally:
-                    l_spilled.set()  # never deadlock lane CO on a failed spill
-                _phases["spill_l"] = round(_time.time() - t0, 3)
-                maintain_r_dl()
+        def lane_co() -> None:
+            t0 = _time.time()
+            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-C/O spill")
+            dc, do = self._spill_co(batch)
+            _phases["spill_co"] = round(_time.time() - t0, 3)
+            maintain_co_chain(dc, do)
 
-            def lane_co() -> None:
-                t0 = _time.time()
-                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-C/O spill")
-                dc, do = self._spill_co(batch)
-                _phases["spill_co"] = round(_time.time() - t0, 3)
-                maintain_co_chain(dc, do)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(lane_l), pool.submit(lane_co)]
-                for f in futs:
-                    f.result()
-        else:
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta spill")
-            dc, do, dl = self._spill_deltas(batch)
-            _mark("spill")
-            _prep_dl(dl)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(maintain_co_chain, dc, do),
-                    pool.submit(maintain_r_dl),
-                ]
-                for f in futs:
-                    f.result()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(lane_l), pool.submit(lane_co)]
+            for f in futs:
+                f.result()
         # Fold the CO⋈ΔL part-set into the r staging dir — pure renames
         # (part-file names are job-UUID-unique), no Spark jobs. Both
         # part-sets were pre-folded within themselves; cross-part
         # netting happens where it reclaims rows: compact_state.
         r2 = self._tmp("r2")
-        if _os.path.isdir(r2):
+        if os.path.isdir(r2):
             rdir = self._tmp("r")
-            for entry in _os.listdir(r2):
+            for entry in os.listdir(r2):
                 if not entry.startswith("bucket="):
                     continue
-                ddir = _os.path.join(rdir, entry)
-                _os.makedirs(ddir, exist_ok=True)
-                sdir = _os.path.join(r2, entry)
-                for fname in _os.listdir(sdir):
-                    spath = _os.path.join(sdir, fname)
-                    if _os.path.isfile(spath):
-                        _os.replace(spath, _os.path.join(ddir, fname))
+                ddir = os.path.join(rdir, entry)
+                os.makedirs(ddir, exist_ok=True)
+                sdir = os.path.join(r2, entry)
+                for fname in os.listdir(sdir):
+                    spath = os.path.join(sdir, fname)
+                    if os.path.isfile(spath):
+                        os.replace(spath, os.path.join(ddir, fname))
             shutil.rmtree(r2, ignore_errors=True)
-        # In split-lane mode this wall covers the spills TOO (they live
-        # inside the lanes); in unified mode it matches the r14 meaning
-        # (maintenance only, spill marked separately above).
+        # This wall covers the spills too: they run inside the lanes.
         _mark("maintain_wall")
 
         # Per-epoch pipeline telemetry (dashboard DAG view): delta rows
@@ -828,9 +722,11 @@ def run_streaming_q3(
     file-driven UnifiedStreamSource,
     `TPCHQuery3_StreamProcessor.java:268-344`) and maintain Q3.
 
-    `on_progress(epoch_id, top_df)` mirrors the periodic Top-N emission
-    (console/WebSocket sink in the reference); pass e.g.
-    ``lambda e, df: df.show()``.
+    `on_progress(epoch_id, top_df, stats)` mirrors the periodic Top-N
+    emission (console/WebSocket sink in the reference); `stats` is the
+    pipeline's `IncrementalQ3.last_stats` telemetry (a replayed epoch
+    applies nothing and leaves it unchanged). Pass e.g.
+    ``lambda e, df, stats: df.show()``.
 
     With `checkpoint_dir`, a restart resumes from the last acknowledged
     batch with stable epoch ids; together with the state store's
@@ -846,28 +742,16 @@ def run_streaming_q3(
     commit itself never rewrites old state).
     """
     import json as _json
-    import os as _os
 
     pipe = IncrementalQ3(
         spark, state_dir, broadcast_threshold_bytes=broadcast_threshold_bytes
     )
     applied = {"n": 0}
-    # A 3-parameter on_progress also receives pipe.last_stats — the
-    # per-epoch delta-row telemetry the dashboard's DAG view renders.
-    # 2-parameter callbacks keep the old contract.
-    wants_stats = False
-    if on_progress is not None:
-        import inspect as _inspect
-
-        try:
-            wants_stats = len(_inspect.signature(on_progress).parameters) >= 3
-        except (TypeError, ValueError):
-            wants_stats = False
 
     def bind_run() -> None:
         if checkpoint_dir is None:
             return
-        meta_path = _os.path.join(checkpoint_dir, "metadata")
+        meta_path = os.path.join(checkpoint_dir, "metadata")
         try:
             with open(meta_path) as fh:
                 pipe.state.check_run(_json.load(fh)["id"])
@@ -883,10 +767,7 @@ def run_streaming_q3(
             if compact_every is not None and applied["n"] % compact_every == 0:
                 pipe.compact_state()
         if on_progress is not None:
-            if wants_stats:
-                on_progress(epoch_id, pipe.top_n(top_n), pipe.last_stats)
-            else:
-                on_progress(epoch_id, pipe.top_n(top_n))
+            on_progress(epoch_id, pipe.top_n(top_n), pipe.last_stats)
 
     drain_file_source(spark, changelog_dir, handle, files_per_trigger, checkpoint_dir)
     return pipe.top_n(top_n)

@@ -1,15 +1,18 @@
-"""Round-14 optimization profiler: time registered queries through the
+"""Query profiler: time registered queries through the
 noop sink (prime + min-of-N, cache cleared between runs — bench.py's
 exact methodology) and dump their `.explain("formatted")` plans.
 
 Usage:
-  python scripts/profile_r15.py time  <sf_dir> name1,name2,...   [runs]
-  python scripts/profile_r15.py plan  <sf_dir> name1,name2,...   [suffix]
-  python scripts/profile_r15.py all   <sf_dir>                   [runs]
+  python scripts/profile.py time  <sf_dir> name1,name2,...   [runs]
+  python scripts/profile.py plan  <sf_dir> name1,name2,...   [suffix]
+  python scripts/profile.py all   <sf_dir>                   [runs]
 
-`plan` writes plans/r15/<name>_<suffix>.txt (suffix defaults to
+`plan` writes plans/profile/<name>_<suffix>.txt (suffix defaults to
 "before"). `time` prints one JSON line per query. `all` times every
-registered query (slow; use for the round bookends).
+registered query (slow; use for before/after bookends).
+
+For the streaming IVM's per-phase, per-job breakdown use
+`python3 perfbench/run.py --workload bulk --trace 1` instead.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ def main() -> None:
     from query_processing_over_streaming_data_using_flink_spark import registry
     from query_processing_over_streaming_data_using_flink_spark.session import get_spark
 
-    spark = get_spark("profile_r15")
+    spark = get_spark("profile")
     queries = registry.all_queries()
 
     if mode == "all":
@@ -53,7 +56,7 @@ def main() -> None:
         )
 
         suffix = sys.argv[4] if len(sys.argv) > 4 else "before"
-        outdir = os.path.join(REPO, "plans", "r15")
+        outdir = os.path.join(REPO, "plans", "profile")
         os.makedirs(outdir, exist_ok=True)
         for n in names:
             # unpinned_for_explain: localCheckpoint pins become no-ops so
@@ -73,7 +76,7 @@ def main() -> None:
     # mode in ("time", "all")
     out: dict[str, dict] = {}
     for n in names:
-        spark.sparkContext.setJobDescription(f"r15-profile: {n}")
+        spark.sparkContext.setJobDescription(f"profile: {n}")
         thunk = lambda: (
             queries[n](spark, sf_dir)
             .write.mode("overwrite")

@@ -5,6 +5,7 @@ sf0.01 — the same check the driver runs (CORRECTNESS gate).
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 import sys
@@ -62,144 +63,51 @@ def test_engine_facade(spark):
         eng.query("q3_shiping_priority")
 
 
-def test_registry_priority_names_are_real():
-    """A typo in the prefix ordering lists would silently change which
-    queries the driver certifies — every listed name must exist, the
-    lists must not overlap, and the checked prefix must be exactly the
-    intended 50 entries."""
-    from query_processing_over_streaming_data_using_flink_spark import registry
-
-    registry._load()
-    known = set(registry._REGISTRY)
-    missing_first = [n for n in registry._PRIORITY_FIRST if n not in known]
-    missing_last = [n for n in registry._PUSH_LAST if n not in known]
-    assert not missing_first, f"unknown names in _PRIORITY_FIRST: {missing_first}"
-    assert not missing_last, f"unknown names in _PUSH_LAST: {missing_last}"
-    overlap = set(registry._PRIORITY_FIRST) & set(registry._PUSH_LAST)
-    assert not overlap, f"names in both lists: {overlap}"
-    assert len(registry._PRIORITY_FIRST) == len(set(registry._PRIORITY_FIRST))
-    assert len(registry._PUSH_LAST) == len(set(registry._PUSH_LAST))
-    # The driver checks a 50-entry prefix. The list may run PAST 50
-    # only as the explicit overflow queue (forced demand > 50 slots, a
-    # rare round shape) — the rotation test validates that overflow is
-    # legitimate; here we pin that the intended prefix itself is 50.
-    assert len(registry._PRIORITY_FIRST) >= 50, (
-        f"driver checks a 50-entry prefix; priority list has "
-        f"{len(registry._PRIORITY_FIRST)}"
-    )
-    # Round 9 shape: 50-entry prefix + the next-stalest cohort queued
-    # contiguously behind it (r5-green overflow, ~20) + this round's new
-    # registrations (which displace prefix fillers into the queue). The
-    # rotation test enforces ordering; this cap only guards runaway
-    # growth of the hand-ordered block.
-    assert len(registry._PRIORITY_FIRST) <= 80, (
-        "overflow queue should stay small — rotate, don't accumulate"
-    )
+# The only environment variables library code may read: deployment
+# settings for the local session (session.py), never behaviour toggles.
+_ALLOWED_ENV = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 
-def test_registry_rotation_covers_stalest_queries():
-    """The rotation POLICY, mechanized (amended round 9 per the round-8
-    verdict — the old fixed 3-calendar-round bound became arithmetically
-    unsatisfiable once the registry outgrew 150 and the r7 driver files
-    never landed):
+def _env_reads(tree: ast.AST):
+    """(line, name) for every os.environ / os.getenv use in `tree`;
+    name is the literal variable read, or None for any other use."""
+    parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    for node in ast.walk(tree):
+        ident = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+        if ident not in ("environ", "getenv"):
+            continue
+        ref, up = node, parents.get(node)
+        if ident == "environ" and isinstance(up, ast.Attribute) and up.attr == "get":
+            ref, up = up, parents.get(up)  # os.environ.get(NAME, ...)
+        key = None
+        if isinstance(up, ast.Call) and up.func is ref and up.args:
+            key = up.args[0]
+        elif ident == "environ" and isinstance(up, ast.Subscript) and up.value is ref:
+            key = up.slice
+        yield node.lineno, key.value if isinstance(key, ast.Constant) else None
 
-    * Staleness is counted in LANDED driver rounds — CORRECTNESS files
-      actually on disk — not calendar rounds, so a driver skip (r7)
-      cannot age two cohorts at once. staleness(q) = 1 + number of
-      landed files newer than q's last green row (i.e. what q's age
-      becomes if the upcoming round's 50-entry check skips it too).
-      Never-checked queries are infinitely stale (first check is always
-      urgent).
-    * The bound is DYNAMIC: with N registered queries cycling through a
-      50-slot prefix, a full certification pass needs ceil(N/50) landed
-      rounds, so the policy allows ceil(N/50) + 1 — one round of slack
-      for red-row retries — instead of the old hard-coded 3.
-    * FORCED = queries at/over the bound (or never checked). All must
-      sit inside the 50-entry prefix; a hand-edited priority list that
-      silently strands one fails here instead of in a future verdict.
-    * FILL rule: prefix slots not needed by forced queries go to the
-      stalest remainder — no query outside the prefix may be STRICTLY
-      staler than one inside (ties are free choice).
-    * QUEUE rule: after the prefix, staleness must be non-increasing,
-      so the overflow block at 51+ is exactly the next-stalest cohort,
-      first in line for the following round, and a freshly registered
-      (never-checked) query can never be parked at the tail.
-    """
-    import glob
-    import json
-    import math
-    import re
 
-    from query_processing_over_streaming_data_using_flink_spark import registry
-
+def test_library_reads_only_deployment_env_settings():
+    """Library behaviour must not fork on environment toggles: every
+    switch doubles the configurations while tests and benchmarks only
+    ever run the defaults. The package may read just the deployment
+    settings in `_ALLOWED_ENV`."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    if not files:
-        pytest.skip("no driver CORRECTNESS files yet (round 1)")
-    last_green: dict[str, int] = {}
-    landed = []
-    for path in files:
-        rnd = int(re.search(r"_r0*(\d+)", os.path.basename(path)).group(1))
-        landed.append(rnd)
-        with open(path) as fh:
-            for name, row in json.load(fh).items():
-                ok = (
-                    row.get("rows_match")
-                    and row.get("schema_match")
-                    and row.get("hash_match") in (True, None)
-                )
-                if ok:
-                    last_green[name] = max(last_green.get(name, 0), rnd)
-
-    names = list(registry.all_queries())
-    NEVER = 10**6
-
-    def staleness(q: str) -> int:
-        if q not in last_green:
-            return NEVER
-        return 1 + sum(1 for r in landed if r > last_green[q])
-
-    bound = math.ceil(len(names) / 50) + 1
-    forced = [n for n in names if staleness(n) >= bound]
-    prefix = names[:50]
-    stranded = [n for n in forced if n not in prefix]
-    if len(forced) <= 50:
-        assert not stranded, (
-            f"queries at the staleness bound ({bound} landed rounds) but "
-            f"outside the 50-entry driver prefix: {stranded}"
-        )
-        # Fill rule: remaining slots hold the stalest of the rest.
-        inside_min = min(staleness(n) for n in prefix)
-        outside_max = max((staleness(n) for n in names[50:]), default=0)
-        assert outside_max <= inside_min, (
-            f"a query outside the prefix (staleness {outside_max}) is "
-            f"strictly staler than one inside (staleness {inside_min}) — "
-            f"fill the free slots stalest-first"
-        )
-    else:
-        # Overflow round: more forced queries than slots — only possible
-        # after repeated driver skips. Then the stranded ones must queue
-        # contiguously at 51+ (first in line next round) and be the
-        # LEAST stale of the forced set (never bump the oldest).
-        assert set(names[50 : 50 + len(stranded)]) == set(stranded), (
-            f"overflow must queue contiguously at position 51+: {stranded}"
-        )
-        kept = [n for n in forced if n in set(prefix)]
-        # With >50 forced queries the prefix must be forced-only: exactly
-        # len(forced) - 50 of them are stranded, no more, no fewer.
-        assert len(kept) == 50 and len(stranded) == len(forced) - 50, (
-            f"overflow prefix must hold exactly 50 forced queries "
-            f"(kept {len(kept)}, stranded {len(stranded)} of {len(forced)})"
-        )
-        bumped_max = max(staleness(n) for n in stranded)
-        kept_min = min(staleness(n) for n in kept)
-        assert bumped_max <= kept_min, "bumped queries must be the least stale"
-    # Queue rule: tail staleness is non-increasing, so position 51+ is
-    # always the next-stalest cohort and new queries can't hide at the end.
-    tail = [staleness(n) for n in names[50:]]
-    assert all(a >= b for a, b in zip(tail, tail[1:])), (
-        "tail must be ordered stalest-first (non-increasing staleness)"
-    )
+    pkg = os.path.join(repo, "query_processing_over_streaming_data_using_flink_spark")
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, repo)}:{line} reads {name!r}"
+                for line, name in _env_reads(tree)
+                if name not in _ALLOWED_ENV
+            ]
+    assert not offenders, "environment reads outside the deployment settings:\n" + "\n".join(offenders)
 
 
 def test_complex_column_lint_catches_planted_offender(spark):

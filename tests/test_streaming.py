@@ -89,7 +89,7 @@ def test_ivm_stream_matches_batch_state(spark, tmp_path):
         changelog_dir,
         str(tmp_path / "state"),
         files_per_trigger=2,
-        on_progress=lambda e, df: emissions.append(e),
+        on_progress=lambda e, df, stats: emissions.append(e),
     )
     assert len(emissions) >= 3, "expected multiple micro-batches"
     assert _rows(result) == _rows(q3_on_state(log))
@@ -124,12 +124,11 @@ def test_ivm_stream_with_interleaved_compaction(spark, tmp_path):
 
 
 def test_ivm_progress_stats_telemetry(spark, tmp_path):
-    """A 3-parameter on_progress receives per-epoch delta-row stats
-    (parquet-footer counts of the spilled deltas — the dashboard DAG's
-    per-node counters); summed across epochs they must equal the
-    changelog's PREDICATE-SURVIVING event count exactly (the split
-    applies Q3's segment/date filters before spilling). 2-parameter
-    callbacks keep the old contract (other tests cover that path)."""
+    """on_progress receives per-epoch delta-row stats (parquet-footer
+    counts of the spilled deltas — the dashboard DAG's per-node
+    counters); summed across epochs they must equal the changelog's
+    PREDICATE-SURVIVING event count exactly (the split applies Q3's
+    segment/date filters before spilling)."""
     n_total = sum(
         load_table(spark, SF_SMOKE, t).count() for t in ("customer", "orders", "lineitem")
     )
@@ -892,8 +891,8 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
     delta touching ONE new customer key must (a) rewrite only that key's
     bucket directory of the c table, (b) carry every other bucket/table
     file over as a hard link (same inode — metadata only, zero row
-    data), and (c) read the state tables through dynamic-partition-
-    pruned scans."""
+    data), and (c) probe the state through a dynamic-partition-pruned
+    scan in the epoch's ΔCO join."""
     import pathlib
 
     from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
@@ -918,13 +917,25 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
     assert before, "seed epoch must have written state"
 
     batch = _single_customer_batch(spark)
-    # Plan shape check: the state restriction must be dynamic-partition-pruned.
-    dc, do, dl = pipe._spill_deltas(batch)
-    restricted = pipe._restrict(pipe._read("c"), dc)
-    plan = restricted._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
+    store = spark._jsparkSession.sharedState().statusStore()
 
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((x.executionId() for x in executions()), default=-1)
     pipe.process_batch(batch, 1)
+    # Plan shape check on the production join: the ΔC ⋈ O probe that
+    # builds ΔCO must read the orders state through dynamic partition
+    # pruning (only the touched bucket is scanned).
+    plans = [
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() > seen
+        and x.description() == "ivm epoch 1: delta-CO join+spill"
+    ]
+    assert plans, "the epoch ran no delta-CO join execution"
+    assert any("dynamicpruning" in p.lower() for p in plans), plans[0][:2000]
     e1, v1 = pipe._current()
     assert e1 == 1 and v1 != v0
     after = inodes(v1)
