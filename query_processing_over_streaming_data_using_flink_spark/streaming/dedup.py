@@ -150,7 +150,9 @@ class IncrementalNearDedup:
         verdict log (doc_id, dup_of, epoch)."""
         done = self._verdict_epochs()
         if not done:
-            return self.spark.createDataFrame([], "doc_id long, dup_of long, epoch long")
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), "doc_id long, dup_of long, epoch long"
+            )
         return self.spark.read.parquet(*[self._verdict_path(e) for e in done])
 
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:

@@ -36,9 +36,9 @@ from pyspark.sql import functions as F
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
+    bucket_of,
+    write_partitions,
 )
-
-NUM_BUCKETS = 32
 
 
 class IncrementalGroupedAgg:
@@ -98,15 +98,17 @@ class IncrementalGroupedAgg:
             for m in self.measure_cols
         ]
 
-    def _bucket(self) -> F.Column:
-        return F.pmod(F.hash(*[F.col(c) for c in self.group_cols]), F.lit(NUM_BUCKETS))
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if epoch_id <= self.state.committed_epoch():
             return  # redelivered epoch: already folded into state
-        delta = self.delta_fn(batch).withColumn("bucket", self._bucket())
+        keys = [F.col(c) for c in self.group_cols]
+        # Keyed on the group columns (the bucket's source key): each of
+        # the `write_partitions` tasks owns whole buckets, so the write
+        # emits at most one file per bucket (see write_partitions).
         (
-            delta.repartition(NUM_BUCKETS, "bucket")
+            self.delta_fn(batch)
+            .withColumn("bucket", bucket_of(*keys))
+            .repartition(write_partitions(self.spark), *keys)
             .write.partitionBy("bucket")
             .mode("overwrite")
             .parquet(self.state._tmp(self.TABLE))

@@ -49,9 +49,15 @@ rewrite even when the delta was tiny):
   Per-epoch cost: zero state-side shuffles, O(delta) data written.
   `compact_state` (scheduled, not per-epoch) folds the log back to one
   net row per key and reclaims cancelled keys.
-* Empty-delta terms are skipped: a micro-batch carrying no customer
-  events contributes nothing through any ΔC term, so those joins are
-  never built (cheap emptiness probe on the spilled delta).
+* Empty terms are skipped: a micro-batch carrying no customer events
+  contributes nothing through any ΔC term, and a term whose old-state
+  side is still empty (Δ⋈∅ = ∅, e.g. every state probe of a stream's
+  first epoch) contributes nothing either, so those joins are never
+  built (zero-job probes: a listing of the spilled delta, the on-disk
+  bytes of the committed table).
+* Every per-epoch write shuffles into `write_partitions` tasks — the
+  cores, not the NUM_BUCKETS buckets — keyed so that each task owns
+  whole buckets (partition = bucket mod n; see `write_partitions`).
 * Crash atomicity (round-2 judge finding): a crash anywhere before the
   pointer flip leaves ``CURRENT`` on the last complete version — every
   reader sees a consistent all-tables snapshot; the half-built version
@@ -82,18 +88,15 @@ from pyspark.sql import functions as F
 from query_processing_over_streaming_data_using_flink_spark.functions.scalar import ts_lit
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
+    NUM_BUCKETS,
     VersionedBucketedState,
+    bucket_of,
     dir_bytes,
     dir_rows,
+    write_partitions,
 )
 
-# Bucket count for the state tables. Local default; on a cluster size it
-# to a few× the executor count so a bucket rewrite is one task's work.
-NUM_BUCKETS = 32
-
-
-def _bucket(col) -> F.Column:
-    return F.pmod(F.hash(col), F.lit(NUM_BUCKETS))
+__all__ = ["NUM_BUCKETS", "IncrementalQ3", "run_streaming_q3"]
 
 
 def _selective(df: DataFrame, key: str) -> DataFrame:
@@ -245,16 +248,16 @@ class IncrementalQ3:
         maintenance term can start the moment the L delta lands,
         instead of waiting for the C/O spill (guide §2.6).
 
-        The shuffle key is the JOIN KEY, not the derived bucket column:
-        Spark's HashPartitioning assigns partition id
-        pmod(murmur3(key), n) — exactly `_bucket` — so each task holds
-        exactly one bucket and the dynamic-partition write emits one
-        file per bucket. Repartitioning on the 32-valued bucket column
-        instead would hash 32 values into 32 partitions (collisions:
-        some tasks own 2-3 buckets, some none — the guide §2.5
-        synthetic-key skew), measured as a ~2× straggler tail on the
-        spill stage. Every other keyed repartition in this class relies
-        on the same identity.
+        The shuffle key is the JOIN KEY, not the derived bucket column,
+        into n = `write_partitions` partitions: Spark's HashPartitioning
+        assigns partition id pmod(murmur3(key), n), and because n
+        divides NUM_BUCKETS that is `bucket_of(key)` mod n — each task
+        owns whole buckets and the dynamic-partition write emits at
+        most one file per bucket. Repartitioning on the 32-valued bucket
+        column instead would hash bucket values (collisions: some tasks
+        own 2-3 buckets, some none — the guide §2.5 synthetic-key skew),
+        measured as a ~2× straggler tail on the spill stage. Every other
+        keyed repartition in this class relies on the same identity.
 
         Filters are weight-preserving (SURVEY §7) and the deltas are
         deliberately NOT netted per batch: state tables are weight
@@ -285,9 +288,9 @@ class IncrementalQ3:
                     ).cast("long")
                 ).alias("w_cents"),
             )
-            .repartition(NUM_BUCKETS, "l_orderkey")
+            .repartition(write_partitions(self.spark), "l_orderkey")
             .select(
-                _bucket(F.col("l_orderkey")).alias("bucket"),
+                bucket_of(F.col("l_orderkey")).alias("bucket"),
                 "l_orderkey",
                 "linenumber",
                 "w_cents",
@@ -330,10 +333,10 @@ class IncrementalQ3:
                 F.col("orderdate").alias("o_orderdate"),
                 F.col("op").cast("long").alias("w"),
             )
-            .repartition(NUM_BUCKETS, "k")
+            .repartition(write_partitions(self.spark), "k")
             .select(
                 "rel",
-                _bucket(F.col("k")).alias("bucket"),
+                bucket_of(F.col("k")).alias("bucket"),
                 F.when(is_c, F.col("k")).alias("c_custkey"),
                 F.when(is_c, F.col("w")).alias("w_c"),
                 "o_orderkey",
@@ -426,8 +429,13 @@ class IncrementalQ3:
         o_old = self._read("o")      # bucketed by o_custkey
         co_old = self._read("co")    # maintained C⋈O view, bucketed by o_orderkey
         l_old = self._read("l")
+        # Committed on-disk bytes of the old state (zero Spark jobs):
+        # they size the broadcast side, and 0 means the table holds no
+        # rows, so every term probing it is empty (Δ⋈∅ = ∅) and skipped.
+        old_bytes = {n: self.state.bytes(n) for n in ("c", "o", "co", "l")}
+        nparts = write_partitions(self.spark)
 
-        REKEY = _bucket(F.col("o_orderkey")).alias("bucket")
+        REKEY = bucket_of(F.col("o_orderkey")).alias("bucket")
 
         # The r delta lands as TWO independently-written part-sets
         # (merged below) so the CO⋈ΔL term — which depends only on the
@@ -450,14 +458,14 @@ class IncrementalQ3:
         def fold_spill_r(part: DataFrame, tmp_name: str) -> None:
             # Pre-fold the delta before it joins the result log (many
             # lineitems per order collapse to one row per group). The
-            # repartition keys the JOIN KEY, so the partition id equals
-            # the bucket value (see _spill_l) — the grouped
-            # aggregate reuses that exchange (partitioning on a subset
-            # of the grouping keys satisfies its distribution) and the
-            # write emits one file per bucket instead of the old
-            # task×bucket spray (~200 files/epoch at SF-1).
+            # repartition keys the JOIN KEY, so partition = bucket mod n
+            # and each task owns whole buckets (see _spill_l) — the
+            # grouped aggregate reuses that exchange (partitioning on a
+            # subset of the grouping keys satisfies its distribution)
+            # and the write emits at most one file per bucket instead of
+            # the old task×bucket spray (~200 files/epoch at SF-1).
             (
-                part.repartition(NUM_BUCKETS, "l_orderkey")
+                part.repartition(nparts, "l_orderkey")
                 .groupBy("bucket", "l_orderkey", "o_orderdate")
                 .agg(F.sum("cents").alias("cents"))
                 .write.partitionBy("bucket")
@@ -473,10 +481,10 @@ class IncrementalQ3:
             have_c, have_o = has_rows("c"), has_rows("o")
             sc.setJobDescription(f"ivm epoch {epoch_id}: delta-CO join+spill")
             co_parts: list[DataFrame] = []
-            if have_c:
+            if have_c and old_bytes["o"]:
                 # ΔC ⋈ O
                 dc_b = dc.select(F.col("bucket"), F.col("c_custkey"), F.col("w_c"))
-                dc_h, o_h = sides(dc_b, spill_bytes("c"), o_old, self.state.bytes("o"))
+                dc_h, o_h = sides(dc_b, spill_bytes("c"), o_old, old_bytes["o"])
                 co_parts.append(
                     o_h.join(
                         dc_h,
@@ -484,13 +492,13 @@ class IncrementalQ3:
                     )
                     .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
                 )
-            if have_o:
+            if have_o and old_bytes["c"]:
                 # C ⋈ ΔO — the segment-filtered customer state is often
                 # the smaller side here; `sides` picks per-epoch.
                 do_c = do.select(
                     F.col("bucket").alias("b_c"), "o_orderkey", "o_custkey", "o_orderdate", "w_o"
                 )
-                do_h, c_h = sides(do_c, spill_bytes("o"), c_old, self.state.bytes("c"))
+                do_h, c_h = sides(do_c, spill_bytes("o"), c_old, old_bytes["c"])
                 co_parts.append(
                     c_h.join(
                         do_h,
@@ -510,11 +518,11 @@ class IncrementalQ3:
                 dco_all = co_parts[0]
                 for part in co_parts[1:]:
                     dco_all = dco_all.unionByName(part)
-                # Keyed on o_orderkey → partition id == bucket value
-                # (one file per bucket, no 32-into-32 hash-collision
-                # stragglers — see _spill_l).
+                # Keyed on o_orderkey → partition = bucket mod n (whole
+                # buckets per task, at most one file per bucket, no
+                # hash-collision stragglers — see _spill_l).
                 (
-                    dco_all.repartition(NUM_BUCKETS, "o_orderkey")
+                    dco_all.repartition(nparts, "o_orderkey")
                     .write.partitionBy("bucket")
                     .mode("overwrite")
                     .parquet(self._tmp("co"))
@@ -542,20 +550,22 @@ class IncrementalQ3:
             # effectively free.
             l_spilled.wait()
             dl_small = _dl_box.get("dl_small")
-            # ΔCO ⋈ L — the old-lineitem probe.
-            dco_h, l_h = sides(dco, spill_bytes("co"), l_old, self.state.bytes("l"))
-            terms = [
-                l_h.join(
-                    dco_h,
-                    (l_old["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
+            terms = []
+            if old_bytes["l"]:
+                # ΔCO ⋈ L — the old-lineitem probe.
+                dco_h, l_h = sides(dco, spill_bytes("co"), l_old, old_bytes["l"])
+                terms.append(
+                    l_h.join(
+                        dco_h,
+                        (l_old["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
+                    )
+                    .select(
+                        l_old["bucket"].alias("bucket"),
+                        "l_orderkey",
+                        "o_orderdate",
+                        (F.col("w") * F.col("w_cents")).alias("cents"),
+                    )
                 )
-                .select(
-                    l_old["bucket"].alias("bucket"),
-                    "l_orderkey",
-                    "o_orderdate",
-                    (F.col("w") * F.col("w_cents")).alias("cents"),
-                )
-            ]
             if dl_small is not None:
                 # ΔCO ⋈ ΔL (both tiny)
                 terms.append(
@@ -568,7 +578,8 @@ class IncrementalQ3:
                         (F.col("w") * F.col("w_cents")).alias("cents"),
                     )
                 )
-            fold_spill_r(terms[0] if len(terms) == 1 else terms[0].unionByName(terms[1]), "r")
+            if terms:
+                fold_spill_r(terms[0] if len(terms) == 1 else terms[0].unionByName(terms[1]), "r")
             _phases["r_dco"] = round(_time.time() - t0, 3)
 
         def maintain_r_dl() -> None:
@@ -580,11 +591,11 @@ class IncrementalQ3:
             CO view stays compact — `sides` flips the broadcast to the
             view."""
             dl_small = _dl_box.get("dl_small")
-            if dl_small is None:
+            if dl_small is None or not old_bytes["co"]:
                 return
             t0 = _time.time()
             sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (CO.dL term) join+spill")
-            dl_h, co_h = sides(dl_small, spill_bytes("l"), co_old, self.state.bytes("co"))
+            dl_h, co_h = sides(dl_small, spill_bytes("l"), co_old, old_bytes["co"])
             fold_spill_r(
                 co_h.join(
                     dl_h,

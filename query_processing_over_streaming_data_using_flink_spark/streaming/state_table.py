@@ -44,7 +44,14 @@ import shutil
 import threading
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+# Bucket count of the bucketed state tables (IVM and incragg): the unit
+# of dynamic partition pruning and of the touched-bucket carry-over. On
+# a cluster size it to a few× the executor count. It does NOT set the
+# per-epoch write's task count — `write_partitions` does.
+NUM_BUCKETS = 32
 
 _VERSION_RE = re.compile(r"v-?\d+c*")
 _POINTER = "CURRENT"
@@ -74,6 +81,35 @@ def dir_rows(path: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
+
+
+def bucket_of(*cols) -> Column:
+    """The state bucket of a key: ``pmod(hash(cols), NUM_BUCKETS)``."""
+    return F.pmod(F.hash(*cols), F.lit(NUM_BUCKETS))
+
+
+def write_partitions(spark: SparkSession) -> int:
+    """Shuffle partition count `n` of a per-epoch bucketed write: the
+    largest divisor of NUM_BUCKETS not above the cores
+    (``sc.defaultParallelism``).
+
+    Callers repartition on the bucket's SOURCE KEY, not on the bucket
+    column: Spark's HashPartitioning puts a row in partition
+    ``pmod(murmur3(key), n)``, and since `n` divides NUM_BUCKETS that is
+    exactly ``bucket_of(key) mod n``. So every task owns whole buckets
+    and the bucket-partitioned write still emits at most one file per
+    bucket. (Repartitioning on the 32-valued bucket column instead would
+    hash bucket values, not keep them: collisions leave some tasks with
+    several buckets and some idle.)
+
+    Why not always NUM_BUCKETS tasks: in local mode a write task pays
+    ~70 ms for the job's Hadoop configuration, and without Hadoop native
+    IO every file and directory it creates forks a ``chmod`` — cost per
+    task and per file, not per row. A 25-row delta written as 32 tasks
+    on 4 cores spent seconds on that. With 32 or more cores `n` is
+    NUM_BUCKETS, i.e. one bucket per task."""
+    cores = spark.sparkContext.defaultParallelism
+    return max(d for d in range(1, min(cores, NUM_BUCKETS) + 1) if NUM_BUCKETS % d == 0)
 
 
 class VersionedBucketedState:
@@ -160,7 +196,11 @@ class VersionedBucketedState:
             _, ver = self._current()
         path = None if ver is None else os.path.join(ver, name)
         if path is None or not os.path.isdir(path):
-            return self.spark.createDataFrame([], self.tables[name])
+            # Zero partitions, built JVM-side: reading an absent table
+            # runs no Spark tasks (a local list would ship a Python RDD).
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), self.tables[name]
+            )
         # Explicit schema: a table dir can exist with zero bucket
         # subdirs (an epoch that touched nothing) — inference would
         # fail. Extra data columns in appended delta files are
@@ -181,8 +221,6 @@ class VersionedBucketedState:
     def restrict(self, state: DataFrame, touched: DataFrame) -> DataFrame:
         """State rows in the buckets `touched` names (semi-join on the
         partition column → dynamic partition pruning skips the rest)."""
-        from pyspark.sql import functions as F
-
         return state.join(
             F.broadcast(touched.select("bucket").distinct()), "bucket", "semi"
         )

@@ -956,6 +956,122 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
     assert _cust_weight(pipe) == [(NEW_CUST_KEY, 1)]
 
 
+def _last_job_id(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def _stages_since(spark, after_job: int) -> dict[str, list]:
+    """Job description -> stage records of the jobs newer than
+    `after_job`, read from the in-process status store once the
+    listener bus has drained (the store is fed asynchronously)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    by_id = {}
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    seq = store.stageList(None, False, False, no_quantiles, None)
+    for i in range(seq.size()):
+        s = seq.apply(i)
+        by_id[s.stageId()] = s
+    out: dict[str, list] = {}
+    jobs = store.jobsList(None)
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= after_job:
+            continue
+        desc = "" if j.description().isEmpty() else j.description().get()
+        ids = j.stageIds()
+        out.setdefault(desc, []).extend(
+            by_id[ids.apply(k)] for k in range(ids.size()) if ids.apply(k) in by_id
+        )
+    return out
+
+
+def _new_files_per_bucket_write(before: set, after: set) -> dict:
+    """(table/bucket dir, write job uuid) -> number of parquet files the
+    epoch added, from the relative paths of two committed versions
+    (part file names carry the writing job's uuid)."""
+    import re
+    from collections import Counter
+
+    pat = re.compile(r"part-\d+-(.+)\.c\d+")
+    return Counter(
+        (os.path.dirname(p), pat.match(os.path.basename(p)).group(1))
+        for p in after - before
+    )
+
+
+def test_bucketed_writes_are_sized_to_the_cores(spark, tmp_path):
+    """Per-epoch work counters: every bucketed write of an IVM epoch and
+    of an incragg epoch runs at most `defaultParallelism` tasks (not
+    NUM_BUCKETS) yet still adds at most one file per bucket per write,
+    and reading an absent state table runs no Spark tasks."""
+    import pathlib
+
+    from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import (
+        monthly_revenue_rollup,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
+        IncrementalQ3,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
+        VersionedBucketedState,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+
+    def files(ver) -> set:
+        return {str(p.relative_to(ver)) for p in pathlib.Path(ver).rglob("*.parquet")}
+
+    def write_tasks(stages) -> list[int]:
+        # A write stage is one whose tasks wrote output rows.
+        return [s.numTasks() for s in stages if s.outputRecords() > 0]
+
+    # Absent table: an empty frame with no partitions, no tasks.
+    absent = VersionedBucketedState(spark, str(tmp_path / "empty"), {"t": "bucket int, k long"})
+    seen = _last_job_id(spark)
+    assert absent.read("t").collect() == []
+    ran = _stages_since(spark, seen)
+    assert sum(s.numTasks() for st in ran.values() for s in st) == 0, ran
+
+    # IVM: a second epoch over non-empty state runs all five writes
+    # (alternate events, so each epoch's keys meet the other's).
+    log = build_changelog(spark, SF_SMOKE)
+    even = F.col("seq") % 2 == 0
+    pipe = IncrementalQ3(spark, str(tmp_path / "ivm"))
+    pipe.process_batch(log.filter(even), 0)
+    before = files(pipe._current()[1])
+    seen = _last_job_id(spark)
+    pipe.process_batch(log.filter(~even), 1)
+    after = files(pipe._current()[1])
+    writes = {
+        desc: write_tasks(st)
+        for desc, st in _stages_since(spark, seen).items()
+        if desc.startswith("ivm epoch 1: ") and write_tasks(st)
+    }
+    assert sorted(writes) == [
+        "ivm epoch 1: delta-C/O spill",
+        "ivm epoch 1: delta-CO join+spill",
+        "ivm epoch 1: delta-L spill",
+        "ivm epoch 1: delta-R (CO.dL term) join+spill",
+        "ivm epoch 1: delta-R (dCO terms) join+spill",
+    ], writes
+    assert all(n <= cores for tasks in writes.values() for n in tasks), (cores, writes)
+    per_bucket = _new_files_per_bucket_write(before, after)
+    assert {p.split("/")[0] for p, _ in per_bucket} == {"c", "o", "co", "l", "r"}
+    assert max(per_bucket.values()) == 1, per_bucket
+
+    # incragg: one grouped write, same bounds.
+    agg = monthly_revenue_rollup(spark, str(tmp_path / "agg"))
+    seen = _last_job_id(spark)
+    agg.process_batch(log.filter(even), 0)
+    tasks = [n for st in _stages_since(spark, seen).values() for n in write_tasks(st)]
+    assert len(tasks) == 1 and tasks[0] <= cores, (cores, tasks)
+    per_bucket = _new_files_per_bucket_write(set(), files(agg.state._current()[1]))
+    assert per_bucket and max(per_bucket.values()) == 1, per_bucket
+
+
 def test_ivm_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
     """A crash mid-commit must leave readers on the previous complete
     version (no half-swapped state); the redelivered epoch then lands
