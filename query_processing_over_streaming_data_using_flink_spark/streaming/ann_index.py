@@ -39,7 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from query_processing_over_streaming_data_using_flink_spark.operators import similarity as sim
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
+    checkpoint_run_id,
+    drain_file_source,
+)
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
 )
@@ -64,23 +67,13 @@ def run_streaming_ann_index(
     cadence a drifting crawl stream needs. With `checkpoint_dir`,
     restarts resume exactly-once (stream run bound to the state dir,
     replayed epochs skipped). Returns the live index handle."""
-    import json as _json
-    import os as _os
-
     idx = IncrementalIVFIndex(spark, state_dir, centroids, nprobe, cells)
     applied = {"n": 0}
 
-    def bind_run() -> None:
-        if checkpoint_dir is None:
-            return
-        try:
-            with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-                idx.state.check_run(_json.load(fh)["id"])
-        except FileNotFoundError:
-            pass
-
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        bind_run()
+        run_id = checkpoint_run_id(checkpoint_dir)
+        if run_id is not None:
+            idx.state.check_run(run_id)
         before = idx.state.committed_epoch()
         idx.process_batch(batch, epoch_id)
         if idx.state.committed_epoch() > before:

@@ -56,7 +56,10 @@ from query_processing_over_streaming_data_using_flink_spark.operators import ded
 from query_processing_over_streaming_data_using_flink_spark.operators import lm
 from query_processing_over_streaming_data_using_flink_spark.operators import text as tx
 from query_processing_over_streaming_data_using_flink_spark.operators.text import doc_fingerprint
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
+    checkpoint_run_id,
+    drain_file_source,
+)
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 from query_processing_over_streaming_data_using_flink_spark.streaming.lm_gate import IncrementalKneserNeyLM
 
@@ -510,21 +513,16 @@ def run_streaming_curation(
     curation state (same harness as every face — production swaps the
     source to Kafka in `streaming/drain.py`, once); returns the
     pipeline for `gate()` / `manifest()`."""
-    import json as _json
-    import os as _os
-
     pipe = StreamingCurationPipeline(spark, state_root)
     bound = False
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
         nonlocal bound
-        if checkpoint_dir is not None and not bound:
-            try:
-                with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-                    pipe.check_run(_json.load(fh)["id"])
+        if not bound:
+            run_id = checkpoint_run_id(checkpoint_dir)
+            if run_id is not None:
+                pipe.check_run(run_id)
                 bound = True
-            except FileNotFoundError:
-                pass
         pipe.process_batch(batch, epoch_id)
 
     drain_file_source(spark, docs_dir, handle, files_per_trigger, checkpoint_dir)
@@ -536,14 +534,13 @@ def run_streaming_curation(
         # silently return an unbound pipeline if even that fails: a
         # caller who asked for a checkpoint is relying on check_run's
         # duplicate-epoch skip across restarts.
-        try:
-            with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-                pipe.check_run(_json.load(fh)["id"])
-        except (FileNotFoundError, KeyError, ValueError) as exc:
+        run_id = checkpoint_run_id(checkpoint_dir)
+        if run_id is None:
             raise RuntimeError(
                 f"run-id binding never engaged: {checkpoint_dir}/metadata "
                 "was unreadable for every micro-batch and after the drain; "
                 "the pipeline state has no replay-skip protection for this "
                 "run"
-            ) from exc
+            )
+        pipe.check_run(run_id)
     return pipe

@@ -16,6 +16,8 @@ through this function with no file source anywhere in the stream.
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from collections.abc import Callable
 
@@ -45,6 +47,22 @@ def drain_file_source(
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     writer.start().awaitTermination()
+
+
+def checkpoint_run_id(checkpoint_dir: str | None) -> str | None:
+    """The stream UUID Spark records in `<checkpoint_dir>/metadata`;
+    None without a checkpoint, or before Spark has written that file.
+    Each streaming face binds its state dir to this id (`check_run`): a
+    recreated checkpoint restarts batch ids at 0, and without the
+    binding replay-skip would silently drop every new batch against the
+    old state."""
+    if checkpoint_dir is None:
+        return None
+    try:
+        with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+            return json.load(fh)["id"]
+    except FileNotFoundError:
+        return None
 
 
 def drain_unbounded_source(

@@ -33,7 +33,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
+    checkpoint_run_id,
+    drain_file_source,
+)
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
     bucket_of,
@@ -206,26 +209,12 @@ def run_streaming_rollup(
     maintain the monthly rollup; returns the final view. Same
     exactly-once contract as `run_streaming_q3` (atomic epoch commit +
     replay skip + optional checkpoint binding)."""
-    import json as _json
-    import os as _os
-
     pipe = monthly_revenue_rollup(spark, state_dir)
 
-    def bind_run() -> None:
-        # Bind the state dir to the checkpoint's stream UUID (same
-        # defense as run_streaming_q3): a recreated checkpoint restarts
-        # epoch ids at 0, and without the binding the replay-skip guard
-        # would silently drop every new batch against old state.
-        if checkpoint_dir is None:
-            return
-        try:
-            with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-                pipe.state.check_run(_json.load(fh)["id"])
-        except FileNotFoundError:
-            pass
-
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        bind_run()
+        run_id = checkpoint_run_id(checkpoint_dir)
+        if run_id is not None:
+            pipe.state.check_run(run_id)
         pipe.process_batch(batch, epoch_id)
 
     drain_file_source(spark, changelog_dir, handle, files_per_trigger, checkpoint_dir)

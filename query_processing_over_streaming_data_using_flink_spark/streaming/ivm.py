@@ -86,7 +86,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.functions.scalar import ts_lit
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
+    checkpoint_run_id,
+    drain_file_source,
+)
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     NUM_BUCKETS,
     VersionedBucketedState,
@@ -752,25 +755,15 @@ def run_streaming_q3(
     read amplification bounded on long-running streams (the append-only
     commit itself never rewrites old state).
     """
-    import json as _json
-
     pipe = IncrementalQ3(
         spark, state_dir, broadcast_threshold_bytes=broadcast_threshold_bytes
     )
     applied = {"n": 0}
 
-    def bind_run() -> None:
-        if checkpoint_dir is None:
-            return
-        meta_path = os.path.join(checkpoint_dir, "metadata")
-        try:
-            with open(meta_path) as fh:
-                pipe.state.check_run(_json.load(fh)["id"])
-        except FileNotFoundError:
-            pass
-
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        bind_run()
+        run_id = checkpoint_run_id(checkpoint_dir)
+        if run_id is not None:
+            pipe.state.check_run(run_id)
         before = pipe.state.committed_epoch()
         pipe.process_batch(batch, epoch_id)
         if pipe.state.committed_epoch() > before:

@@ -1,11 +1,11 @@
 """Query profiler: time registered queries through the
-noop sink (prime + min-of-N, cache cleared between runs — bench.py's
-exact methodology) and dump their `.explain("formatted")` plans.
+noop sink with bench.py's timing rule (`bench.timed`) and dump their
+`.explain("formatted")` plans.
 
 Usage:
-  python scripts/profile.py time  <sf_dir> name1,name2,...   [runs]
+  python scripts/profile.py time  <sf_dir> name1,name2,...
   python scripts/profile.py plan  <sf_dir> name1,name2,...   [suffix]
-  python scripts/profile.py all   <sf_dir>                   [runs]
+  python scripts/profile.py all   <sf_dir>
 
 `plan` writes plans/profile/<name>_<suffix>.txt (suffix defaults to
 "before"). `time` prints one JSON line per query. `all` times every
@@ -20,16 +20,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Replace (not just precede) this script's directory on the path: this
+# file would otherwise shadow the standard library's `profile`, which
+# pyspark imports through cProfile.
+sys.path[0] = REPO
 
 
 def main() -> None:
     mode = sys.argv[1]
     sf_dir = sys.argv[2]
+    import bench
     from query_processing_over_streaming_data_using_flink_spark import registry
     from query_processing_over_streaming_data_using_flink_spark.session import get_spark
 
@@ -38,10 +40,8 @@ def main() -> None:
 
     if mode == "all":
         names = list(queries)
-        runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     else:
         names = [n.strip() for n in sys.argv[3].split(",") if n.strip()]
-        runs = int(sys.argv[4]) if mode == "time" and len(sys.argv) > 4 else 2
 
     unknown = [n for n in names if n not in queries]
     if unknown:
@@ -77,28 +77,12 @@ def main() -> None:
     out: dict[str, dict] = {}
     for n in names:
         spark.sparkContext.setJobDescription(f"profile: {n}")
-        thunk = lambda: (
-            queries[n](spark, sf_dir)
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
         try:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            thunk()
-            prime = round(time.time() - t0, 3)
-            rs = []
-            for _ in range(runs):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                thunk()
-                rs.append(round(time.time() - t0, 3))
-            out[n] = {"min": min(rs), "runs": rs, "prime": prime}
-            print(json.dumps({n: out[n]}), flush=True)
+            t = bench.timed(spark, lambda: bench.write_noop(queries[n](spark, sf_dir)))
+            out[n] = {"min": t.sec, "runs": t.runs, "prime": t.prime}
         except Exception as e:
             out[n] = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(json.dumps({n: out[n]}), flush=True)
+        print(json.dumps({n: out[n]}), flush=True)
     print("TOTALS " + json.dumps({n: v.get("min") for n, v in out.items()}))
 
 
