@@ -40,8 +40,8 @@ from pyspark.sql.window import Window
 
 from query_processing_over_streaming_data_using_flink_spark.operators import similarity as sim
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
-    checkpoint_run_id,
     drain_file_source,
+    run_face,
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
@@ -68,20 +68,16 @@ def run_streaming_ann_index(
     restarts resume exactly-once (stream run bound to the state dir,
     replayed epochs skipped). Returns the live index handle."""
     idx = IncrementalIVFIndex(spark, state_dir, centroids, nprobe, cells)
-    applied = {"n": 0}
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        run_id = checkpoint_run_id(checkpoint_dir)
-        if run_id is not None:
-            idx.state.check_run(run_id)
-        before = idx.state.committed_epoch()
-        idx.process_batch(batch, epoch_id)
-        if idx.state.committed_epoch() > before:
-            applied["n"] += 1
-            if refresh_every is not None and applied["n"] % refresh_every == 0:
-                idx.refresh_centroids()
-
-    drain_file_source(spark, vectors_dir, handle, files_per_trigger, checkpoint_dir)
+    run_face(
+        lambda h: drain_file_source(
+            spark, vectors_dir, h, files_per_trigger, checkpoint_dir
+        ),
+        [idx.state],
+        idx.process_batch,
+        checkpoint_dir,
+        maintain=idx.refresh_centroids,
+        maintain_every=refresh_every,
+    )
     return idx
 
 

@@ -57,8 +57,8 @@ from query_processing_over_streaming_data_using_flink_spark.operators import lm
 from query_processing_over_streaming_data_using_flink_spark.operators import text as tx
 from query_processing_over_streaming_data_using_flink_spark.operators.text import doc_fingerprint
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
-    checkpoint_run_id,
     drain_file_source,
+    run_face,
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 from query_processing_over_streaming_data_using_flink_spark.streaming.lm_gate import IncrementalKneserNeyLM
@@ -73,13 +73,10 @@ class IncrementalExactDedupIndex:
     rule) derives at read time and stays correct under retraction.
     """
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             return (
-                weighted.select(
+                batch.select(
                     doc_fingerprint(F.col("text")).alias("fp"), "doc_id", "op"
                 )
                 .groupBy("fp", "doc_id")
@@ -93,7 +90,6 @@ class IncrementalExactDedupIndex:
             measure_cols=["net"],
             schema="bucket int, fp string, doc_id long, net long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -135,13 +131,10 @@ class IncrementalEvalMinhash:
     signature, as signed net-count rows — inserts register a benchmark,
     retractions withdraw it and its contamination verdicts with it."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
 
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             # Signatures must be computed per (doc_id, CONTENT VERSION),
             # not per doc_id: a benchmark version update delivers
             # retract(old text) + insert(new text) for the SAME doc in
@@ -152,7 +145,7 @@ class IncrementalEvalMinhash:
             # content-derived key and group the state delta back under
             # the real doc id.
             vers = (
-                weighted.groupBy("doc_id", "text")
+                batch.groupBy("doc_id", "text")
                 .agg(F.sum("op").cast("long").alias("op"))
                 .filter(F.col("op") != 0)
             )
@@ -189,7 +182,6 @@ class IncrementalEvalMinhash:
                 "sig array<bigint>, net long"
             ),
             delta_fn=delta,
-            run_id=run_id,
         )
         self._cached: list[DataFrame] = []
 
@@ -266,18 +258,15 @@ class IncrementalDedupTelemetry:
     and the graph-sized clustering never touch text, and the rollup
     adds one |sources|-row aggregate."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
 
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             # Fold per (doc_id, CONTENT VERSION): see
             # IncrementalEvalMinhash.delta — signing per doc_id would
             # cancel a same-micro-batch version update.
             vers = (
-                weighted.groupBy("doc_id", "text", "source")
+                batch.groupBy("doc_id", "text", "source")
                 .agg(F.sum("op").cast("long").alias("op"))
                 .filter(F.col("op") != 0)
             )
@@ -322,7 +311,6 @@ class IncrementalDedupTelemetry:
                 "sh array<bigint>, sig array<bigint>, net long"
             ),
             delta_fn=delta,
-            run_id=run_id,
         )
         self._cached: list[DataFrame] = []
 
@@ -393,17 +381,13 @@ class StreamingCurationPipeline:
     `curation_pipeline_full` artifact is reproduced from streaming
     state (bit-equality pinned in tests)."""
 
-    def __init__(self, spark: SparkSession, state_root: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_root: str):
         from query_processing_over_streaming_data_using_flink_spark.plans import suite_quality as q
 
         self._q = q
-        self.kn = IncrementalKneserNeyLM(spark, f"{state_root}/kn", run_id=run_id)
-        self.dedup = IncrementalExactDedupIndex(
-            spark, f"{state_root}/fp", run_id=run_id
-        )
-        self.eval_mh = IncrementalEvalMinhash(
-            spark, f"{state_root}/eval_mh", run_id=run_id
-        )
+        self.kn = IncrementalKneserNeyLM(spark, f"{state_root}/kn")
+        self.dedup = IncrementalExactDedupIndex(spark, f"{state_root}/fp")
+        self.eval_mh = IncrementalEvalMinhash(spark, f"{state_root}/eval_mh")
         self._cached: list[DataFrame] = []
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -424,16 +408,6 @@ class StreamingCurationPipeline:
         self.kn.compact()
         self.dedup.compact()
         self.eval_mh.compact()
-
-    def check_run(self, run_id: str) -> None:
-        """Bind all three state dirs to one stream run id — a
-        recreated checkpoint restarts epoch ids at 0, and without the
-        binding the replay-skip guard would silently drop new batches
-        against old state (the `run_streaming_q3` defense, applied to
-        the whole composed face at once)."""
-        self.kn.agg.state.check_run(run_id)
-        self.dedup.agg.state.check_run(run_id)
-        self.eval_mh.agg.state.check_run(run_id)
 
     def gate(self, docs: DataFrame) -> DataFrame:
         """Apply the batch pipeline's gate chain to a documents frame
@@ -514,33 +488,10 @@ def run_streaming_curation(
     source to Kafka in `streaming/drain.py`, once); returns the
     pipeline for `gate()` / `manifest()`."""
     pipe = StreamingCurationPipeline(spark, state_root)
-    bound = False
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal bound
-        if not bound:
-            run_id = checkpoint_run_id(checkpoint_dir)
-            if run_id is not None:
-                pipe.check_run(run_id)
-                bound = True
-        pipe.process_batch(batch, epoch_id)
-
-    drain_file_source(spark, docs_dir, handle, files_per_trigger, checkpoint_dir)
-    if checkpoint_dir is not None and not bound:
-        # The replay-skip defense never engaged mid-stream (metadata
-        # unreadable on every micro-batch, or the source was empty and
-        # no batch fired). The drained query has written its metadata
-        # by now, so bind once more directly — and raise rather than
-        # silently return an unbound pipeline if even that fails: a
-        # caller who asked for a checkpoint is relying on check_run's
-        # duplicate-epoch skip across restarts.
-        run_id = checkpoint_run_id(checkpoint_dir)
-        if run_id is None:
-            raise RuntimeError(
-                f"run-id binding never engaged: {checkpoint_dir}/metadata "
-                "was unreadable for every micro-batch and after the drain; "
-                "the pipeline state has no replay-skip protection for this "
-                "run"
-            )
-        pipe.check_run(run_id)
+    run_face(
+        lambda h: drain_file_source(spark, docs_dir, h, files_per_trigger, checkpoint_dir),
+        [pipe.kn.agg.state, pipe.dedup.agg.state, pipe.eval_mh.agg.state],
+        pipe.process_batch,
+        checkpoint_dir,
+    )
     return pipe

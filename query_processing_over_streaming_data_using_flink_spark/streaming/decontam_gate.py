@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.operators import text as tx
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source, run_face
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 
 
@@ -37,7 +37,6 @@ class IncrementalNgramDecontam:
         spark: SparkSession,
         state_dir: str,
         k: int | None = None,
-        run_id: str | None = None,
     ):
         from query_processing_over_streaming_data_using_flink_spark.plans.suite_llm_data import (
             NGRAM_DECONTAM_K,
@@ -48,9 +47,6 @@ class IncrementalNgramDecontam:
         def delta(batch: DataFrame) -> DataFrame:
             from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
 
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             # Grams must be attributed per (doc, CONTENT VERSION): a
             # benchmark version update delivers retract(old) +
             # insert(new) for one doc_id in one micro-batch, and
@@ -59,7 +55,7 @@ class IncrementalNgramDecontam:
             # the whole update to 0. Fold identical versions first,
             # then shingle each surviving version under its own key.
             vers = (
-                weighted.groupBy("doc_id", "text")
+                batch.groupBy("doc_id", "text")
                 .agg(F.sum("op").cast("long").alias("op"))
                 .filter(F.col("op") != 0)
             )
@@ -84,7 +80,6 @@ class IncrementalNgramDecontam:
             measure_cols=["net_docs"],
             schema="bucket int, h long, net_docs long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -133,8 +128,10 @@ def run_streaming_decontam(
     is the benchmark registry's change stream); returns the pipeline
     for `flag()`."""
     pipe = IncrementalNgramDecontam(spark, state_dir)
-    drain_file_source(
-        spark, eval_docs_dir, lambda b, e: pipe.process_batch(b, e),
-        files_per_trigger, checkpoint_dir,
+    run_face(
+        lambda h: drain_file_source(spark, eval_docs_dir, h, files_per_trigger, checkpoint_dir),
+        [pipe.agg.state],
+        pipe.process_batch,
+        checkpoint_dir,
     )
     return pipe

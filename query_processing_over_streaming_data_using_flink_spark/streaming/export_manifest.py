@@ -39,14 +39,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source, run_face
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 
 
 class IncrementalShardManifest:
     """foreachBatch handler maintaining the live shard manifest."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         from query_processing_over_streaming_data_using_flink_spark.plans.suite_llm_data import (
             _FP_MOD,
             shard_doc_frame,
@@ -55,10 +55,7 @@ class IncrementalShardManifest:
         self.fp_mod = _FP_MOD
 
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
-            d = shard_doc_frame(weighted, extra=("op",))
+            d = shard_doc_frame(batch, extra=("op",))
             return d.groupBy("shard_id").agg(
                 F.sum("op").cast("long").alias("n_docs"),
                 F.sum(F.col("op") * F.col("n_chars_txt")).cast("long").alias(
@@ -86,7 +83,6 @@ class IncrementalShardManifest:
             measure_cols=["n_docs", "total_chars", "fp_res"],
             schema="bucket int, shard_id long, n_docs long, total_chars long, fp_res long",
             delta_fn=delta,
-            run_id=run_id,
             fold_exprs={"fp_res": mod_fold},
         )
 
@@ -124,8 +120,10 @@ def run_streaming_manifest(
     — in production the source is the ingest stream's Kafka topic);
     returns the pipeline for `manifest()`."""
     pipe = IncrementalShardManifest(spark, state_dir)
-    drain_file_source(
-        spark, docs_dir, lambda b, e: pipe.process_batch(b, e),
-        files_per_trigger, checkpoint_dir,
+    run_face(
+        lambda h: drain_file_source(spark, docs_dir, h, files_per_trigger, checkpoint_dir),
+        [pipe.agg.state],
+        pipe.process_batch,
+        checkpoint_dir,
     )
     return pipe

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
-    checkpoint_run_id,
     drain_file_source,
+    run_face,
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
@@ -51,7 +51,10 @@ class IncrementalGroupedAgg:
     Parameters
     ----------
     delta_fn : batch DataFrame -> DataFrame
-        Aggregates a micro-batch to one row per touched group:
+        Aggregates a micro-batch to one row per touched group. The batch
+        always carries a signed ``op`` weight: a batch without one is
+        all inserts, and `process_batch` adds ``op = 1`` before calling
+        it. Returns
         ``(group_cols..., measure_cols...)`` where every measure is an
         INTEGER signed sum (op-weighted, quantized) — integer adds keep
         the fold associative and bit-identical under any batching.
@@ -79,7 +82,6 @@ class IncrementalGroupedAgg:
         measure_cols: list[str],
         schema: str,
         delta_fn: Callable[[DataFrame], DataFrame],
-        run_id: str | None = None,
         fold_exprs: dict[str, Callable[[str], F.Column]] | None = None,
     ) -> None:
         self.spark = spark
@@ -89,8 +91,6 @@ class IncrementalGroupedAgg:
         self.delta_fn = delta_fn
         self.fold_exprs = dict(fold_exprs or {})
         self.state = VersionedBucketedState(spark, state_dir, {self.TABLE: schema})
-        if run_id is not None:
-            self.state.check_run(run_id)
         self.epoch = self.state.committed_epoch()
 
     def _folds(self) -> list[F.Column]:
@@ -104,6 +104,8 @@ class IncrementalGroupedAgg:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if epoch_id <= self.state.committed_epoch():
             return  # redelivered epoch: already folded into state
+        if "op" not in batch.columns:
+            batch = batch.withColumn("op", F.lit(1))
         keys = [F.col(c) for c in self.group_cols]
         # Keyed on the group columns (the bucket's source key): each of
         # the `write_partitions` tasks owns whole buckets, so the write
@@ -206,16 +208,16 @@ def run_streaming_rollup(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Consume a parquet changelog directory as micro-batches and
-    maintain the monthly rollup; returns the final view. Same
-    exactly-once contract as `run_streaming_q3` (atomic epoch commit +
-    replay skip + optional checkpoint binding)."""
+    maintain the monthly rollup; returns the final view. Same driver
+    and exactly-once contract as `run_streaming_q3` (atomic epoch
+    commit + replay skip + checkpoint run binding)."""
     pipe = monthly_revenue_rollup(spark, state_dir)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        run_id = checkpoint_run_id(checkpoint_dir)
-        if run_id is not None:
-            pipe.state.check_run(run_id)
-        pipe.process_batch(batch, epoch_id)
-
-    drain_file_source(spark, changelog_dir, handle, files_per_trigger, checkpoint_dir)
+    run_face(
+        lambda h: drain_file_source(
+            spark, changelog_dir, h, files_per_trigger, checkpoint_dir
+        ),
+        [pipe.state],
+        pipe.process_batch,
+        checkpoint_dir,
+    )
     return present_monthly_revenue(pipe.result())

@@ -87,8 +87,8 @@ from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.functions.scalar import ts_lit
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
-    checkpoint_run_id,
     drain_file_source,
+    run_face,
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     NUM_BUCKETS,
@@ -157,7 +157,6 @@ class IncrementalQ3:
         state_dir: str,
         segment: str = "BUILDING",
         cutoff: str = "1995-03-15",
-        run_id: str | None = None,
         broadcast_threshold_bytes: int | None = None,
     ) -> None:
         self.spark = spark
@@ -173,8 +172,6 @@ class IncrementalQ3:
         self.state = VersionedBucketedState(
             spark, state_dir, {n: schema for n, (_k, schema) in self._TABLES.items()}
         )
-        if run_id is not None:
-            self.state.check_run(run_id)
         self.swap_lock = self.state.swap_lock
         # Restart recovery: resume from the last committed epoch.
         self.epoch = self.state.committed_epoch()
@@ -734,7 +731,9 @@ def run_streaming_q3(
     """Consume a parquet-directory changelog as a Structured Streaming
     source (micro-batches of whole files, like the reference's
     file-driven UnifiedStreamSource,
-    `TPCHQuery3_StreamProcessor.java:268-344`) and maintain Q3.
+    `TPCHQuery3_StreamProcessor.java:268-344`) and maintain Q3 through
+    the shared stream driver (`drain.run_face`); returns the final
+    Top-N.
 
     `on_progress(epoch_id, top_df, stats)` mirrors the periodic Top-N
     emission (console/WebSocket sink in the reference); `stats` is the
@@ -745,10 +744,11 @@ def run_streaming_q3(
     With `checkpoint_dir`, a restart resumes from the last acknowledged
     batch with stable epoch ids; together with the state store's
     atomic epoch commit + replay skip this gives exactly-once state
-    maintenance across crashes. The checkpoint's stream UUID is bound
-    to the state dir: pointing old state at a NEW checkpoint (whose
-    batch ids restart at 0) hard-fails instead of silently dropping
-    every batch — wipe state and checkpoint together.
+    maintenance across crashes. The driver binds the checkpoint's
+    stream UUID to the state dir: pointing old state at a NEW
+    checkpoint (whose batch ids restart at 0) raises `RuntimeError`
+    instead of silently dropping every batch — wipe state and
+    checkpoint together.
 
     `compact_every=N` folds the log-structured state back to net rows
     after every N applied epochs — the scheduled OPTIMIZE that keeps
@@ -758,20 +758,19 @@ def run_streaming_q3(
     pipe = IncrementalQ3(
         spark, state_dir, broadcast_threshold_bytes=broadcast_threshold_bytes
     )
-    applied = {"n": 0}
 
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        run_id = checkpoint_run_id(checkpoint_dir)
-        if run_id is not None:
-            pipe.state.check_run(run_id)
-        before = pipe.state.committed_epoch()
-        pipe.process_batch(batch, epoch_id)
-        if pipe.state.committed_epoch() > before:
-            applied["n"] += 1
-            if compact_every is not None and applied["n"] % compact_every == 0:
-                pipe.compact_state()
-        if on_progress is not None:
-            on_progress(epoch_id, pipe.top_n(top_n), pipe.last_stats)
+    def progress(epoch_id: int) -> None:
+        on_progress(epoch_id, pipe.top_n(top_n), pipe.last_stats)
 
-    drain_file_source(spark, changelog_dir, handle, files_per_trigger, checkpoint_dir)
+    run_face(
+        lambda h: drain_file_source(
+            spark, changelog_dir, h, files_per_trigger, checkpoint_dir
+        ),
+        [pipe.state],
+        pipe.process_batch,
+        checkpoint_dir,
+        maintain=pipe.compact_state,
+        maintain_every=compact_every,
+        on_epoch=None if on_progress is None else progress,
+    )
     return pipe.top_n(top_n)

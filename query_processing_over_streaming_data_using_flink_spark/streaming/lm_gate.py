@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.operators import lm
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source, run_face
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 
 
@@ -47,12 +47,9 @@ class IncrementalBigramLM:
     counts and derives the context totals and vocabulary — the same
     three frames `operators.lm.perplexity` scores against."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
-            pairs = lm.doc_bigrams(weighted)
+            pairs = lm.doc_bigrams(batch)
             return pairs.groupBy("prev", "w").agg(
                 F.sum("op").cast("long").alias("c_pw")
             )
@@ -64,7 +61,6 @@ class IncrementalBigramLM:
             measure_cols=["c_pw"],
             schema="bucket int, prev string, w string, c_pw long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -97,12 +93,9 @@ class IncrementalKneserNeyLM:
     bit-equality structural rather than coincidental. The rollups cost
     one pass over the vocabulary-bounded t3, not the corpus."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
-            tris = lm.doc_trigrams(weighted)
+            tris = lm.doc_trigrams(batch)
             return tris.groupBy("u", "v", "w").agg(
                 F.sum("op").cast("long").alias("c3")
             )
@@ -114,7 +107,6 @@ class IncrementalKneserNeyLM:
             measure_cols=["c3"],
             schema="bucket int, u string, v string, w string, c3 long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -164,9 +156,11 @@ def run_streaming_lm_train(
     else:
         raise ValueError(f"unknown model_class {model_class!r}")
 
-    drain_file_source(
-        spark, docs_dir, lambda b, e: pipe.process_batch(b, e),
-        files_per_trigger, checkpoint_dir,
+    run_face(
+        lambda h: drain_file_source(spark, docs_dir, h, files_per_trigger, checkpoint_dir),
+        [pipe.agg.state],
+        pipe.process_batch,
+        checkpoint_dir,
     )
     return pipe
 
@@ -271,7 +265,7 @@ class IncrementalDsirModel:
     with the batch path's own arithmetic, so stream==batch equality is
     structural."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, state_dir: str):
         from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
         from query_processing_over_streaming_data_using_flink_spark.operators import text as tx
         from query_processing_over_streaming_data_using_flink_spark.plans import suite_quality as q
@@ -279,11 +273,8 @@ class IncrementalDsirModel:
         self._q = q
 
         def delta(batch: DataFrame) -> DataFrame:
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             feats = (
-                weighted.withColumn("tk", tx.tokens(F.col("text")))
+                batch.withColumn("tk", tx.tokens(F.col("text")))
                 .select(
                     "op",
                     "source",
@@ -309,7 +300,6 @@ class IncrementalDsirModel:
             measure_cols=["c_q", "c_p"],
             schema="bucket int, b long, c_q long, c_p long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from query_processing_over_streaming_data_using_flink_spark.operators import dedup as dd
-from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source
+from query_processing_over_streaming_data_using_flink_spark.streaming.drain import drain_file_source, run_face
 from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import IncrementalGroupedAgg
 
 
@@ -46,7 +46,6 @@ class IncrementalSubstringDecontam:
         spark: SparkSession,
         state_dir: str,
         span_tokens: int | None = None,
-        run_id: str | None = None,
     ):
         from query_processing_over_streaming_data_using_flink_spark.plans.suite_llm_data import (
             _SPAN_TOKENS_Q,
@@ -57,11 +56,8 @@ class IncrementalSubstringDecontam:
         def delta(batch: DataFrame) -> DataFrame:
             from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
 
-            weighted = batch
-            if "op" not in batch.columns:
-                weighted = batch.withColumn("op", F.lit(1))
             vers = (
-                weighted.groupBy("doc_id", "text")
+                batch.groupBy("doc_id", "text")
                 .agg(F.sum("op").cast("long").alias("op"))
                 .filter(F.col("op") != 0)
             )
@@ -90,7 +86,6 @@ class IncrementalSubstringDecontam:
             measure_cols=["net"],
             schema="bucket int, doc_h long, pos_h int, h long, net long",
             delta_fn=delta,
-            run_id=run_id,
         )
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
@@ -153,8 +148,10 @@ def run_streaming_substring_decontam(
     is the benchmark registry's change stream); returns the pipeline
     for `flag()`."""
     pipe = IncrementalSubstringDecontam(spark, state_dir)
-    drain_file_source(
-        spark, eval_docs_dir, lambda b, e: pipe.process_batch(b, e),
-        files_per_trigger, checkpoint_dir,
+    run_face(
+        lambda h: drain_file_source(spark, eval_docs_dir, h, files_per_trigger, checkpoint_dir),
+        [pipe.agg.state],
+        pipe.process_batch,
+        checkpoint_dir,
     )
     return pipe

@@ -111,6 +111,35 @@ def test_library_reads_only_deployment_env_settings():
     assert not offenders, "environment reads outside the deployment settings:\n" + "\n".join(offenders)
 
 
+# Stream-run binding: the calls only the shared stream driver may make.
+_BINDING_CALLS = {"check_run", "checkpoint_run_id"}
+
+
+def test_only_the_stream_driver_binds_state_to_a_run():
+    """A runner that binds its own state can forget to: four runners
+    once never bound, so a recreated checkpoint silently dropped every
+    new batch. Binding lives in `streaming/drain.py:run_face`, and no
+    other package module may call `check_run` or `checkpoint_run_id`."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "query_processing_over_streaming_data_using_flink_spark")
+    driver = os.path.join(pkg, "streaming", "drain.py")
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for path in (os.path.join(root, f) for f in sorted(files) if f.endswith(".py")):
+            if path == driver:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, repo)}:{node.lineno} calls {name}()"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and (name := getattr(node.func, "attr", getattr(node.func, "id", None)))
+                in _BINDING_CALLS
+            ]
+    assert not offenders, "run binding outside the stream driver:\n" + "\n".join(offenders)
+
+
 def test_complex_column_lint_catches_planted_offender(spark):
     """The round-4 red row (`embedding_label_centroids`) was a correct
     query whose array<double> column crashed the driver's pandas

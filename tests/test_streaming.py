@@ -1123,30 +1123,6 @@ def test_ivm_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
     assert _cust_weight(pipe2) == [(NEW_CUST_KEY, 1)]
 
 
-def test_ivm_state_bound_to_stream_run(spark, tmp_path):
-    """A state dir written under one stream identity must HARD-FAIL
-    when re-attached to a different stream (judge-advice fix): a
-    deleted-and-recreated checkpoint restarts epoch ids at 0, and the
-    replay-skip would silently discard every new batch."""
-    import pytest
-
-    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
-        IncrementalQ3,
-    )
-
-    state = str(tmp_path / "state")
-    pipe = IncrementalQ3(spark, state, run_id="run-A")
-    pipe.process_batch(_single_customer_batch(spark), 0)
-
-    # Same run re-attaches fine (restart with the same checkpoint).
-    IncrementalQ3(spark, state, run_id="run-A")
-    # No declared identity also attaches (library/test use).
-    IncrementalQ3(spark, state)
-    # A DIFFERENT stream identity must refuse the state dir.
-    with pytest.raises(RuntimeError, match="run-A"):
-        IncrementalQ3(spark, state, run_id="run-B")
-
-
 def test_state_gc_keeps_reader_window(spark, tmp_path):
     """GC must retain the current version plus two predecessors: a lazy
     DataFrame issued before a commit must still evaluate after ONE
@@ -1327,8 +1303,9 @@ def test_streaming_latest_per_key_equals_batch(spark, tmp_path):
 
 def test_ivm_top_n_reentrant_under_swap_lock(spark, tmp_path):
     """An emission timer may hold swap_lock around its state read
-    (soak_demo does); _read acquires the same lock internally, so it
-    must be reentrant — this deadlocked with a plain Lock."""
+    (a dashboard polling Top-N between commits); _read acquires the
+    same lock internally, so it must be reentrant — this deadlocked
+    with a plain Lock."""
     from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
         IncrementalQ3,
     )

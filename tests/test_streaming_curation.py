@@ -199,30 +199,6 @@ def test_eval_minhash_same_batch_version_update(spark, tmp_path):
     emh.release_cache()
 
 
-def test_composed_state_bound_to_stream_run(spark, tmp_path):
-    """Re-attaching the composed state to a DIFFERENT stream run
-    (deleted-and-recreated checkpoint → epoch ids restart at 0) must
-    hard-fail on all of the face's state dirs instead of silently
-    replay-skipping new batches."""
-    import pytest
-
-    from query_processing_over_streaming_data_using_flink_spark.streaming.curation import (
-        StreamingCurationPipeline,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(40)
-    src = str(tmp_path / "src")
-    docs.repartition(2).write.parquet(src)
-
-    run_streaming_curation(
-        spark, src, str(tmp_path / "state"),
-        files_per_trigger=1, checkpoint_dir=str(tmp_path / "ckpt_a"),
-    )
-    pipe = StreamingCurationPipeline(spark, str(tmp_path / "state"))
-    with pytest.raises(RuntimeError, match="belongs to stream run"):
-        pipe.check_run("another-stream-uuid")
-
-
 def test_exact_index_canonical_promotion(spark, tmp_path):
     """Retracting the canonical member PROMOTES the next-smallest live
     doc — the read-time min over net membership rows, which a
