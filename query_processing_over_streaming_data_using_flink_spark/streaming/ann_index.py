@@ -104,7 +104,6 @@ class IncrementalIVFIndex:
         self.cells = cells
         self._bootstrap_cents = centroids
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-        self.epoch = self.state.committed_epoch()
 
     # -- centroids -----------------------------------------------------------
 
@@ -131,16 +130,16 @@ class IncrementalIVFIndex:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         """Ingest one micro-batch of (vec_id, embedding) rows."""
-        if epoch_id <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch_id):
             return  # redelivered epoch — its vectors are already indexed
-        first_epoch = self.state._current()[1] is None
+        first_epoch = self.state.committed_epoch() < 0
         if first_epoch:
             cents = (
                 self._bootstrap_cents
                 if self._bootstrap_cents is not None
                 else sim.ivf_centroids(batch, cells=self.cells)
             )
-            self.state.write_merged("cents", self._cents_long(cents))
+            self.state.stage(self._cents_long(cents), "cents")
         else:
             cents = self.centroids()
         corpus = batch.select(
@@ -153,11 +152,10 @@ class IncrementalIVFIndex:
             F.col("vec").alias("n_vec"),
             F.col("cell").cast("int").alias("cell"),
         )
-        self.state.write_merged("inv", delta)
+        self.state.stage(delta, "inv")
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
         self.state.commit(epoch_id, append=True)
-        self.epoch = epoch_id
 
     # -- maintenance ---------------------------------------------------------
 
@@ -309,7 +307,6 @@ class IncrementalIVFPQIndex:
         self._bootstrap_cents = centroids
         self._bootstrap_books = books
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-        self.epoch = self.state.committed_epoch()
 
     # -- quantizers ----------------------------------------------------------
 
@@ -352,9 +349,9 @@ class IncrementalIVFPQIndex:
         to codes under the frozen codebooks, append the codes to the
         cell's inverted list. The raw embedding is read once, here, and
         never stored."""
-        if epoch_id <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch_id):
             return  # redelivered epoch — already indexed
-        first_epoch = self.state._current()[1] is None
+        first_epoch = self.state.committed_epoch() < 0
         if first_epoch:
             cents = (
                 self._bootstrap_cents
@@ -366,8 +363,8 @@ class IncrementalIVFPQIndex:
                 if self._bootstrap_books is not None
                 else sim.pq_codebooks(batch, self.m)
             )
-            self.state.write_merged("cents", self._cents_long(cents))
-            self.state.write_merged("books", self._books_long(books))
+            self.state.stage(self._cents_long(cents), "cents")
+            self.state.stage(self._books_long(books), "books")
         else:
             cents = self.centroids()
             books = self.books()
@@ -386,9 +383,8 @@ class IncrementalIVFPQIndex:
                 F.col("code").cast("int").alias("code"),
             )
         )
-        self.state.write_merged("inv", delta)
+        self.state.stage(delta, "inv")
         self.state.commit(epoch_id, append=True)
-        self.epoch = epoch_id
 
     # -- maintenance ---------------------------------------------------------
 

@@ -42,11 +42,8 @@ from query_processing_over_streaming_data_using_flink_spark.functions.scalar imp
 from query_processing_over_streaming_data_using_flink_spark.operators.text import normalized_text
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
+    bucket_of,
 )
-
-# Bucket count for the band-ownership state. Same sizing rule as the
-# IVM's: a few× the executor count on a cluster.
-NUM_BAND_BUCKETS = 32
 
 
 def with_fingerprint(stream: DataFrame, text_col: str = "text") -> DataFrame:
@@ -115,16 +112,13 @@ class IncrementalNearDedup:
         perceptual-hash IMAGE near-dedup over (doc_id, content,
         media_type) batches — the ownership state, bucket pruning,
         crash-atomicity and verdict log are modality-agnostic."""
-        import os
-
         self.spark = spark
         self.state_dir = state_dir
         self._band_fn = band_fn
-        os.makedirs(state_dir, exist_ok=True)
+        # Restart recovery: the store resumes from the last committed
+        # epoch (ids need NOT be dense — a checkpointed restart skips
+        # numbers).
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-        # Restart recovery: resume from the last committed epoch (ids
-        # need NOT be dense — a checkpointed restart skips numbers).
-        self.epoch = self.state.committed_epoch()
 
     def _verdict_path(self, epoch: int) -> str:
         import os
@@ -160,7 +154,7 @@ class IncrementalNearDedup:
         and records the verdict frame (doc_id, dup_of nullable)."""
         from query_processing_over_streaming_data_using_flink_spark.operators import dedup as dd
 
-        if epoch <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch):
             # Redelivered epoch: its claims are already committed —
             # return the recorded verdicts instead of re-applying.
             return self.spark.read.parquet(self._verdict_path(epoch)).select(
@@ -175,7 +169,7 @@ class IncrementalNearDedup:
             ).select("doc_id", "band_key")
         bands = (
             band_rows.distinct()
-            .withColumn("bucket", F.pmod(F.hash("band_key"), F.lit(NUM_BAND_BUCKETS)))
+            .withColumn("bucket", bucket_of("band_key"))
             .persist()
         )
         # Only the buckets this batch touches are read...
@@ -210,8 +204,7 @@ class IncrementalNearDedup:
         out.withColumn("epoch", F.lit(epoch)).write.mode("overwrite").parquet(
             self._verdict_path(epoch)
         )
-        self.state.write_merged("bands", merged)
+        self.state.stage(merged, "bands")
         self.state.commit(epoch)
-        self.epoch = epoch
         bands.unpersist()
         return out

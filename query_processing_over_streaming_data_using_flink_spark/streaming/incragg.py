@@ -91,7 +91,6 @@ class IncrementalGroupedAgg:
         self.delta_fn = delta_fn
         self.fold_exprs = dict(fold_exprs or {})
         self.state = VersionedBucketedState(spark, state_dir, {self.TABLE: schema})
-        self.epoch = self.state.committed_epoch()
 
     def _folds(self) -> list[F.Column]:
         return [
@@ -102,7 +101,7 @@ class IncrementalGroupedAgg:
         ]
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch_id):
             return  # redelivered epoch: already folded into state
         if "op" not in batch.columns:
             batch = batch.withColumn("op", F.lit(1))
@@ -110,16 +109,13 @@ class IncrementalGroupedAgg:
         # Keyed on the group columns (the bucket's source key): each of
         # the `write_partitions` tasks owns whole buckets, so the write
         # emits at most one file per bucket (see write_partitions).
-        (
+        self.state.stage(
             self.delta_fn(batch)
             .withColumn("bucket", bucket_of(*keys))
-            .repartition(write_partitions(self.spark), *keys)
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(self.state._tmp(self.TABLE))
+            .repartition(write_partitions(self.spark), *keys),
+            self.TABLE,
         )
         self.state.commit(epoch_id, append=True)
-        self.epoch = epoch_id
 
     def compact(self) -> None:
         """Scheduled OPTIMIZE: fold the log to one row per group, drop

@@ -29,8 +29,10 @@ rewrite even when the delta was tiny):
   followed by ΔR = ΔCO·L + CO·ΔL + ΔCO·ΔL, so ΔCO is computed once and
   spilled, and every state table is scanned exactly once per epoch —
   higher-order IVM in the style of recursive delta compilation.
-* Micro-batch deltas are spilled bucket-partitioned and read back with
-  a trivially-true selective predicate: that is exactly the plan shape
+* Micro-batch deltas are spilled bucket-partitioned into the state
+  store's staging area (`VersionedBucketedState.stage`; this module
+  never touches a file itself) and read back with a trivially-true
+  selective predicate: that is exactly the plan shape
   that makes Spark's dynamic partition pruning attach a
   ``dynamicpruningexpression`` to every state-table scan, so each delta
   join READS only the buckets the delta touches (asserted in
@@ -40,20 +42,20 @@ rewrite even when the delta was tiny):
   streaming (arming DPP), the state when a bulk micro-batch dwarfs a
   compact view; when neither fits the threshold both are left
   unhinted and AQE picks the join from runtime sizes.
-* The COMMIT is append-only: the spilled delta files themselves become
-  the epoch's state write — the new version directory hard-links every
-  previous file (metadata only, zero row data) and moves the delta
-  part files in next to them. State tables are weight MULTISETS: the
-  net weight of a key is the SUM over its rows, every delta join is
-  linear in each side, so probing un-netted rows is exactly correct.
-  Per-epoch cost: zero state-side shuffles, O(delta) data written.
-  `compact_state` (scheduled, not per-epoch) folds the log back to one
-  net row per key and reclaims cancelled keys.
+* The COMMIT is append-only: the staged delta files themselves become
+  the epoch's state write — the store's new version directory
+  hard-links every previous file (metadata only, zero row data) and moves
+  the staged part files in next to them. State tables are weight
+  MULTISETS: the net weight of a key is the SUM over its rows, every
+  delta join is linear in each side, so probing un-netted rows is
+  exactly correct. Per-epoch cost: zero state-side shuffles, O(delta)
+  data written. `compact_state` (scheduled, not per-epoch) folds the
+  log back to one net row per key and reclaims cancelled keys.
 * Empty terms are skipped: a micro-batch carrying no customer events
   contributes nothing through any ΔC term, and a term whose old-state
   side is still empty (Δ⋈∅ = ∅, e.g. every state probe of a stream's
   first epoch) contributes nothing either, so those joins are never
-  built (zero-job probes: a listing of the spilled delta, the on-disk
+  built (zero-job probes: a listing of the staged delta, the on-disk
   bytes of the committed table).
 * Every per-epoch write shuffles into `write_partitions` tasks — the
   cores, not the NUM_BUCKETS buckets — keyed so that each task owns
@@ -61,13 +63,14 @@ rewrite even when the delta was tiny):
 * Crash atomicity (round-2 judge finding): a crash anywhere before the
   pointer flip leaves ``CURRENT`` on the last complete version — every
   reader sees a consistent all-tables snapshot; the half-built version
-  dir is debris, removed on the retried commit. A replayed epoch
-  (``epoch_id <= committed``) is skipped entirely, so Structured
-  Streaming's redelivery after failure is idempotent — and the state
-  dir is BOUND to its stream: the checkpoint's run id is persisted in
-  the ``CURRENT`` pointer and a mismatch hard-fails instead of
-  silently replay-skipping a fresh stream's epochs (judge-advice fix).
-  On a real cluster the same pipeline swaps the directory dance for
+  dir is debris, removed on the retried commit, and the retry clears
+  the crashed attempt's staged files before staging its own. A
+  replayed epoch (``epoch_id <= committed``) is skipped entirely, so
+  Structured Streaming's redelivery after failure is idempotent — and
+  the state dir is BOUND to its stream: the checkpoint's run id is
+  persisted in the ``CURRENT`` pointer and a mismatch hard-fails
+  instead of silently replay-skipping a fresh stream's epochs. On a
+  real cluster the same pipeline swaps the directory dance for
   Delta/Iceberg ``MERGE INTO`` with exactly-once `foreachBatch`
   semantics.
 
@@ -77,10 +80,11 @@ like the reference's keyBy(0) TopN.
 
 from __future__ import annotations
 
-import os
-import shutil
 import threading
+import time
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,8 +98,6 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.state_tabl
     NUM_BUCKETS,
     VersionedBucketedState,
     bucket_of,
-    dir_bytes,
-    dir_rows,
     write_partitions,
 )
 
@@ -107,6 +109,14 @@ def _selective(df: DataFrame, key: str) -> DataFrame:
     counts as a 'selective' predicate for Spark's PartitionPruning rule,
     which is what arms dynamic partition pruning on the state scans."""
     return df.filter(F.col(key) >= F.lit(-(1 << 62)))
+
+
+@contextmanager
+def _phase(phase_sec: dict[str, float], name: str) -> Iterator[None]:
+    """Record the block's wall seconds as `phase_sec[name]`."""
+    t0 = time.time()
+    yield
+    phase_sec[name] = round(time.time() - t0, 3)
 
 
 class IncrementalQ3:
@@ -160,7 +170,6 @@ class IncrementalQ3:
         broadcast_threshold_bytes: int | None = None,
     ) -> None:
         self.spark = spark
-        self.state_dir = state_dir
         if broadcast_threshold_bytes is not None:
             self.broadcast_threshold_bytes = broadcast_threshold_bytes
         # Per-epoch delta-row telemetry; populated by process_batch.
@@ -173,24 +182,6 @@ class IncrementalQ3:
             spark, state_dir, {n: schema for n, (_k, schema) in self._TABLES.items()}
         )
         self.swap_lock = self.state.swap_lock
-        # Restart recovery: resume from the last committed epoch.
-        self.epoch = self.state.committed_epoch()
-
-    # -- state I/O (thin delegation; see streaming/state_table.py) ----------
-
-    def _current(self) -> tuple[int, str | None]:
-        return self.state._current()
-
-    def _tmp(self, name: str) -> str:
-        return self.state._tmp(name)
-
-    def _read(self, name: str) -> DataFrame:
-        return self.state.read(name)
-
-    def _commit_epoch(self, epoch_id: int) -> None:
-        # Append-mode: the spilled delta files ARE the epoch's write.
-        self.state.commit(epoch_id, append=True)
-        self.epoch = epoch_id
 
     def compact_state(self) -> None:
         """Maintenance: fold each log-structured table down to one net
@@ -221,29 +212,20 @@ class IncrementalQ3:
 
     # -- delta extraction ----------------------------------------------------
 
-    # Read-back schemas for the spilled deltas (explicit: an all-empty
-    # delta writes no part files and schema inference would fail on the
-    # bare directory).
-    _SPILL_SCHEMAS = {
-        "c": "c_custkey long, w_c long, bucket int",
-        "o": "o_orderkey long, o_custkey long, o_orderdate timestamp_ntz, w_o long, bucket int",
-        "l": "l_orderkey long, linenumber int, w_cents long, bucket int",
-    }
+    def _delta(self, name: str, key: str) -> DataFrame | None:
+        """The staged delta of `name` behind a selective predicate on its
+        key (None when the epoch staged no rows for it)."""
+        df = self.state.staged(name)
+        return None if df is None else _selective(df, key)
 
-    def _read_spill(self, name: str) -> DataFrame:
-        return _selective(
-            self.spark.read.schema(self._SPILL_SCHEMAS[name]).parquet(self._tmp(name)),
-            {"c": "c_custkey", "o": "o_orderkey", "l": "l_orderkey"}[name],
-        )
-
-    def _spill_l(self, batch: DataFrame) -> DataFrame:
+    def _spill_l(self, batch: DataFrame) -> DataFrame | None:
         """Spill the lineitem delta alone (split-lane spill): filter
         → NARROW pre-shuffle projection (guide §2.3 — the shuffle
         carries (l_orderkey, linenumber, w_cents), ~3 of the wire
         schema's 11 columns; w_cents is computed map-side BEFORE the
         exchange so two doubles collapse to one long) → repartition on
-        the join key → one file per bucket, moved into the l table's
-        tmp name (so the append-mode commit publishes these exact files
+        the join key → one file per bucket, staged as the l table's
+        part-set (so the append-mode commit publishes these exact files
         as the epoch's state write). Runs in its own lane so the CO⋈ΔL
         maintenance term can start the moment the L delta lands,
         instead of waiting for the C/O spill (guide §2.6).
@@ -268,13 +250,11 @@ class IncrementalQ3:
         nothing while costing an extra shuffle. Netting happens where it
         reclaims rows: `compact_state`.
 
-        Returns the read-back behind a selective predicate: the shape
+        Returns the read-back behind a selective predicate — the shape
         that deterministically arms dynamic partition pruning on every
-        downstream state join."""
+        downstream state join — or None when no lineitem row survived."""
         cut = ts_lit(self.cutoff)
-        stage = self._tmp("lspill")
-        shutil.rmtree(stage, ignore_errors=True)
-        (
+        self.state.stage(
             batch.filter(
                 (F.col("relation") == "lineitem") & (F.col("shipdate") > cut)
             )
@@ -294,26 +274,21 @@ class IncrementalQ3:
                 "l_orderkey",
                 "linenumber",
                 "w_cents",
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(stage)
+            ),
+            "l",
         )
-        dst = self._tmp("l")
-        shutil.rmtree(dst, ignore_errors=True)
-        os.replace(stage, dst)
-        return self._read_spill("l")
+        return self._delta("l", "l_orderkey")
 
-    def _spill_co(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def _spill_co(self, batch: DataFrame) -> tuple[DataFrame | None, DataFrame | None]:
         """Spill the customer+orders deltas together (split-lane
         spill): both relations key on CUSTKEY for their state buckets,
-        so one shuffle places both (keyed as in `_spill_l`); the
-        pre-shuffle projection is the narrow (rel, k, o_orderkey,
+        so one shuffle places both (keyed as in `_spill_l`) and one
+        write stages both tables — the `table` column routes each row;
+        the pre-shuffle projection is the narrow (table, k, o_orderkey,
         o_orderdate, w) instead of the 11-column padded wire row (guide
-        §2.3). Partition dirs move 1:1 into the c and o tmp names (an
-        empty dir when the batch has no rows of that relation);
-        per-relation columns the other relation never reads are NULL.
-        Returns the selective read-backs (dc, do)."""
+        §2.3). Per-relation columns the other relation never reads are
+        NULL. Returns the selective read-backs (dc, do), each None when
+        the batch has no rows of that relation."""
         cut = ts_lit(self.cutoff)
         keep = (
             (F.col("relation") == "customer") & (F.col("mktsegment") == self.segment)
@@ -321,13 +296,11 @@ class IncrementalQ3:
         key = F.when(
             F.col("relation") == "customer", F.col("custkey")
         ).otherwise(F.col("o_custkey"))
-        stage = self._tmp("cospill")
-        shutil.rmtree(stage, ignore_errors=True)
-        is_c = F.col("rel") == "c"
-        (
+        is_c = F.col("table") == "c"
+        self.state.stage(
             batch.filter(keep)
             .select(
-                F.col("relation").substr(1, 1).alias("rel"),
+                F.col("relation").substr(1, 1).alias("table"),
                 key.alias("k"),
                 F.col("orderkey").alias("o_orderkey"),
                 F.col("orderdate").alias("o_orderdate"),
@@ -335,7 +308,7 @@ class IncrementalQ3:
             )
             .repartition(write_partitions(self.spark), "k")
             .select(
-                "rel",
+                "table",
                 bucket_of(F.col("k")).alias("bucket"),
                 F.when(is_c, F.col("k")).alias("c_custkey"),
                 F.when(is_c, F.col("w")).alias("w_c"),
@@ -343,62 +316,61 @@ class IncrementalQ3:
                 F.when(~is_c, F.col("k")).alias("o_custkey"),
                 "o_orderdate",
                 F.when(~is_c, F.col("w")).alias("w_o"),
-            )
-            .write.partitionBy("rel", "bucket")
-            .mode("overwrite")
-            .parquet(stage)
+            ),
+            part="c_o",
         )
-        for t in ("c", "o"):
-            dst = self._tmp(t)
-            shutil.rmtree(dst, ignore_errors=True)
-            src = os.path.join(stage, f"rel={t}")
-            if os.path.isdir(src):
-                os.replace(src, dst)
-            else:
-                # Relation absent from this batch: an empty dir keeps
-                # the read-back (eager path check) and the emptiness
-                # probes working.
-                os.makedirs(dst, exist_ok=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        return self._read_spill("c"), self._read_spill("o")
+        return self._delta("c", "c_custkey"), self._delta("o", "o_orderkey")
 
     # -- the foreachBatch hook ----------------------------------------------
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch_id):
             # Redelivered epoch (restart after a crash between commit
             # and checkpoint ack): its delta is already in the committed
             # version — applying it again would double the weights.
             return
-        # Phase wall-clock per epoch, exported through last_stats.
-        import time as _time
+        # Wall seconds per phase, exported through last_stats.
+        phase_sec: dict[str, float] = {}
+        with _phase(phase_sec, "maintain_wall"):  # covers the spill lanes too
+            self._maintain(batch, epoch_id, phase_sec)
 
-        _phase_t0 = _time.time()
-        _phases: dict[str, float] = {}
+        # Per-epoch pipeline telemetry (dashboard DAG view): delta rows
+        # per stage, read from the staged files' parquet FOOTERS —
+        # driver-side metadata, no extra Spark jobs. `events` counts
+        # the PREDICATE-SURVIVING rows (the split applies Q3's
+        # segment/date filters before spilling), i.e. what actually
+        # enters the pipeline — not the raw micro-batch size, which
+        # would cost an extra action to know.
+        with _phase(phase_sec, "telemetry"):
+            rows = {n: self.state.staged_rows(n) for n in self._TABLES}
 
-        def _mark(name: str) -> None:
-            nonlocal _phase_t0
-            now = _time.time()
-            _phases[name] = _phases.get(name, 0.0) + round(now - _phase_t0, 3)
-            _phase_t0 = now
+        # Everything is staged — the append-mode commit hard-links
+        # every previous state file and moves the staged delta files in
+        # next to them (pure filesystem metadata; no further Spark
+        # jobs), then atomically publishes the epoch.
+        with _phase(phase_sec, "commit"):
+            self.state.commit(epoch_id, append=True)
+        self.spark.sparkContext.setJobDescription(None)
+        events = rows["c"] + rows["o"] + rows["l"]
+        self.last_stats = {
+            "epoch": epoch_id,
+            "events": events,
+            "delta_c": rows["c"],
+            "delta_o": rows["o"],
+            "delta_l": rows["l"],
+            "delta_co": rows["co"],
+            "delta_r": rows["r"],
+            "state_rows_appended": events + rows["co"] + rows["r"],
+            "phase_sec": phase_sec,
+        }
 
+    def _maintain(self, batch: DataFrame, epoch_id: int, phase_sec: dict[str, float]) -> None:
+        """Stage the epoch's delta of every table: the two spill lanes
+        and the maintenance terms they feed."""
         sc = self.spark.sparkContext
-        # Emptiness probes on the spilled deltas: the bucket-partitioned
-        # write creates bucket= subdirectories only for rows that exist,
-        # so a directory listing answers "any rows?" with zero Spark
-        # jobs. A batch with no events for a relation contributes
-        # nothing through any term containing that Δ — skip those terms.
-        def has_rows(name: str) -> bool:
-            tmp = self._tmp(name)
-            return os.path.isdir(tmp) and any(
-                e.startswith("bucket=") for e in os.listdir(tmp)
-            )
-
-        def spill_bytes(name: str) -> int:
-            return dir_bytes(self._tmp(name))
 
         # Adaptive physical strategy, sized from REAL on-disk bytes of
-        # both sides (spilled delta files + committed state files; zero
+        # both sides (staged delta files + committed state files; zero
         # Spark jobs): each delta-vs-state join broadcasts whichever
         # side is SMALLER, provided it fits the threshold. Broadcasting
         # the delta arms dynamic partition pruning on the state scan
@@ -425,10 +397,10 @@ class IncrementalQ3:
                 return delta_df, F.broadcast(state_df)
             return delta_df, state_df
 
-        c_old = self._read("c")
-        o_old = self._read("o")      # bucketed by o_custkey
-        co_old = self._read("co")    # maintained C⋈O view, bucketed by o_orderkey
-        l_old = self._read("l")
+        c_old = self.state.read("c")
+        o_old = self.state.read("o")      # bucketed by o_custkey
+        co_old = self.state.read("co")    # maintained C⋈O view, bucketed by o_orderkey
+        l_old = self.state.read("l")
         # Committed on-disk bytes of the old state (zero Spark jobs):
         # they size the broadcast side, and 0 means the table holds no
         # rows, so every term probing it is empty (Δ⋈∅ = ∅) and skipped.
@@ -437,17 +409,6 @@ class IncrementalQ3:
 
         REKEY = bucket_of(F.col("o_orderkey")).alias("bucket")
 
-        # The r delta lands as TWO independently-written part-sets
-        # (merged below) so the CO⋈ΔL term — which depends only on the
-        # OLD co state and the ΔL spill — can run concurrently with the
-        # ΔCO spill and the ΔCO-driven terms (guide §2.6: overlap
-        # independent jobs; the state is a weight multiset, so two
-        # appended part-sets sum to exactly what the single folded
-        # write summed to). Clear both staging dirs up front so a
-        # crashed prior attempt can never leak stale rows.
-        shutil.rmtree(self._tmp("r"), ignore_errors=True)
-        shutil.rmtree(self._tmp("r2"), ignore_errors=True)
-
         # Lane handshake (split-lane spill, guide §2.6): the L lane
         # publishes its spilled delta here and sets the event; the CO
         # lane waits on it only at the point it builds the ΔCO⋈ΔL term
@@ -455,7 +416,14 @@ class IncrementalQ3:
         l_spilled = threading.Event()
         _dl_box: dict[str, DataFrame] = {}
 
-        def fold_spill_r(part: DataFrame, tmp_name: str) -> None:
+        def fold_spill_r(part: DataFrame, part_set: str) -> None:
+            # The r delta lands as TWO independently-staged part-sets
+            # (r_dco, r_dl) so the CO⋈ΔL term — which depends only on
+            # the OLD co state and the ΔL spill — can run concurrently
+            # with the ΔCO spill and the ΔCO-driven terms (guide §2.6:
+            # overlap independent jobs; the state is a weight multiset,
+            # so two appended part-sets sum to exactly what one folded
+            # write would; cross-part netting happens in compact_state).
             # Pre-fold the delta before it joins the result log (many
             # lineitems per order collapse to one row per group). The
             # repartition keys the JOIN KEY, so partition = bucket mod n
@@ -464,123 +432,102 @@ class IncrementalQ3:
             # subset of the grouping keys satisfies its distribution)
             # and the write emits at most one file per bucket instead of
             # the old task×bucket spray (~200 files/epoch at SF-1).
-            (
+            self.state.stage(
                 part.repartition(nparts, "l_orderkey")
                 .groupBy("bucket", "l_orderkey", "o_orderdate")
-                .agg(F.sum("cents").alias("cents"))
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(self._tmp(tmp_name))
+                .agg(F.sum("cents").alias("cents")),
+                "r",
+                part=part_set,
             )
 
-        def maintain_co_chain(dc: DataFrame, do: DataFrame) -> None:
-            """Stage 1 (ΔCO = ΔC·O + C·ΔO + ΔC·ΔO, spilled once as the
+        def maintain_co_chain(dc: DataFrame | None, do: DataFrame | None) -> None:
+            """Stage 1 (ΔCO = ΔC·O + C·ΔO + ΔC·ΔO, staged once as the
             co table's epoch delta) followed by the ΔCO-driven r terms
             (ΔCO·L + ΔCO·ΔL) — the dependent chain, one thread."""
-            t0 = _time.time()
-            have_c, have_o = has_rows("c"), has_rows("o")
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-CO join+spill")
-            co_parts: list[DataFrame] = []
-            if have_c and old_bytes["o"]:
-                # ΔC ⋈ O
-                dc_b = dc.select(F.col("bucket"), F.col("c_custkey"), F.col("w_c"))
-                dc_h, o_h = sides(dc_b, spill_bytes("c"), o_old, old_bytes["o"])
-                co_parts.append(
-                    o_h.join(
-                        dc_h,
-                        (o_old["bucket"] == dc_b["bucket"]) & (F.col("o_custkey") == F.col("c_custkey")),
+            with _phase(phase_sec, "co"):
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-CO join+spill")
+                co_parts: list[DataFrame] = []
+                if dc is not None and old_bytes["o"]:
+                    # ΔC ⋈ O
+                    dc_b = dc.select(F.col("bucket"), F.col("c_custkey"), F.col("w_c"))
+                    dc_h, o_h = sides(dc_b, self.state.staged_bytes("c"), o_old, old_bytes["o"])
+                    co_parts.append(
+                        o_h.join(
+                            dc_h,
+                            (o_old["bucket"] == dc_b["bucket"]) & (F.col("o_custkey") == F.col("c_custkey")),
+                        )
+                        .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
                     )
-                    .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
-                )
-            if have_o and old_bytes["c"]:
-                # C ⋈ ΔO — the segment-filtered customer state is often
-                # the smaller side here; `sides` picks per-epoch.
-                do_c = do.select(
-                    F.col("bucket").alias("b_c"), "o_orderkey", "o_custkey", "o_orderdate", "w_o"
-                )
-                do_h, c_h = sides(do_c, spill_bytes("o"), c_old, old_bytes["c"])
-                co_parts.append(
-                    c_h.join(
-                        do_h,
-                        (F.col("bucket") == F.col("b_c")) & (F.col("c_custkey") == F.col("o_custkey")),
+                if do is not None and old_bytes["c"]:
+                    # C ⋈ ΔO — the segment-filtered customer state is
+                    # often the smaller side here; `sides` picks per-epoch.
+                    do_c = do.select(
+                        F.col("bucket").alias("b_c"), "o_orderkey", "o_custkey", "o_orderdate", "w_o"
                     )
-                    .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
-                )
-            if have_c and have_o:
-                # ΔC ⋈ ΔO (both tiny)
-                co_parts.append(
-                    dc.select("c_custkey", "w_c")
-                    .join(do, F.col("c_custkey") == F.col("o_custkey"))
-                    .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
-                )
-
-            if co_parts:
-                dco_all = co_parts[0]
-                for part in co_parts[1:]:
-                    dco_all = dco_all.unionByName(part)
-                # Keyed on o_orderkey → partition = bucket mod n (whole
-                # buckets per task, at most one file per bucket, no
-                # hash-collision stragglers — see _spill_l).
-                (
-                    dco_all.repartition(nparts, "o_orderkey")
-                    .write.partitionBy("bucket")
-                    .mode("overwrite")
-                    .parquet(self._tmp("co"))
-                )
-            else:
-                shutil.rmtree(self._tmp("co"), ignore_errors=True)
-            _phases["co"] = round(_time.time() - t0, 3)
-            t0 = _time.time()
-            if not has_rows("co"):
-                # Guarded: with no ΔCO rows there are no ΔCO-driven r
-                # terms (and with no C/O events the co tmp dir does not
-                # even exist — spark.read.parquet fails EAGERLY on a
-                # missing path; a lineitem-only micro-batch must not
-                # kill the stream).
+                    do_h, c_h = sides(do_c, self.state.staged_bytes("o"), c_old, old_bytes["c"])
+                    co_parts.append(
+                        c_h.join(
+                            do_h,
+                            (F.col("bucket") == F.col("b_c")) & (F.col("c_custkey") == F.col("o_custkey")),
+                        )
+                        .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
+                    )
+                if dc is not None and do is not None:
+                    # ΔC ⋈ ΔO (both tiny)
+                    co_parts.append(
+                        dc.select("c_custkey", "w_c")
+                        .join(do, F.col("c_custkey") == F.col("o_custkey"))
+                        .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
+                    )
+                if co_parts:
+                    dco_all = co_parts[0]
+                    for part in co_parts[1:]:
+                        dco_all = dco_all.unionByName(part)
+                    # Keyed on o_orderkey → partition = bucket mod n
+                    # (whole buckets per task, at most one file per
+                    # bucket, no hash-collision stragglers — see _spill_l).
+                    self.state.stage(dco_all.repartition(nparts, "o_orderkey"), "co")
+            # With no ΔCO rows there are no ΔCO-driven r terms.
+            dco = self._delta("co", "o_orderkey")
+            if dco is None:
                 return
-            dco = _selective(
-                self.spark.read.schema(
-                    "o_orderkey long, o_orderdate timestamp_ntz, w long, bucket int"
-                ).parquet(self._tmp("co")),
-                "o_orderkey",
-            )
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
-            # The ΔCO⋈ΔL term needs the L lane's spill on disk; the ΔCO
-            # spill above takes longer than the L spill, so this wait is
-            # effectively free.
-            l_spilled.wait()
-            dl_small = _dl_box.get("dl_small")
-            terms = []
-            if old_bytes["l"]:
-                # ΔCO ⋈ L — the old-lineitem probe.
-                dco_h, l_h = sides(dco, spill_bytes("co"), l_old, old_bytes["l"])
-                terms.append(
-                    l_h.join(
-                        dco_h,
-                        (l_old["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
+            with _phase(phase_sec, "r_dco"):
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
+                # The ΔCO⋈ΔL term needs the L lane's spill on disk; the
+                # ΔCO spill above takes longer than the L spill, so this
+                # wait is effectively free.
+                l_spilled.wait()
+                dl_small = _dl_box.get("dl_small")
+                terms = []
+                if old_bytes["l"]:
+                    # ΔCO ⋈ L — the old-lineitem probe.
+                    dco_h, l_h = sides(dco, self.state.staged_bytes("co"), l_old, old_bytes["l"])
+                    terms.append(
+                        l_h.join(
+                            dco_h,
+                            (l_old["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
+                        )
+                        .select(
+                            l_old["bucket"].alias("bucket"),
+                            "l_orderkey",
+                            "o_orderdate",
+                            (F.col("w") * F.col("w_cents")).alias("cents"),
+                        )
                     )
-                    .select(
-                        l_old["bucket"].alias("bucket"),
-                        "l_orderkey",
-                        "o_orderdate",
-                        (F.col("w") * F.col("w_cents")).alias("cents"),
+                if dl_small is not None:
+                    # ΔCO ⋈ ΔL (both tiny)
+                    terms.append(
+                        dco.join(
+                            dl_small,
+                            (dco["bucket"] == F.col("b_l")) & (F.col("o_orderkey") == F.col("l_orderkey")),
+                        )
+                        .select(
+                            F.col("b_l").alias("bucket"), "l_orderkey", "o_orderdate",
+                            (F.col("w") * F.col("w_cents")).alias("cents"),
+                        )
                     )
-                )
-            if dl_small is not None:
-                # ΔCO ⋈ ΔL (both tiny)
-                terms.append(
-                    dco.join(
-                        dl_small,
-                        (dco["bucket"] == F.col("b_l")) & (F.col("o_orderkey") == F.col("l_orderkey")),
-                    )
-                    .select(
-                        F.col("b_l").alias("bucket"), "l_orderkey", "o_orderdate",
-                        (F.col("w") * F.col("w_cents")).alias("cents"),
-                    )
-                )
-            if terms:
-                fold_spill_r(terms[0] if len(terms) == 1 else terms[0].unionByName(terms[1]), "r")
-            _phases["r_dco"] = round(_time.time() - t0, 3)
+                if terms:
+                    fold_spill_r(terms[0] if len(terms) == 1 else terms[0].unionByName(terms[1]), "r_dco")
 
         def maintain_r_dl() -> None:
             """CO ⋈ ΔL — probe the maintained view with the lineitem
@@ -593,21 +540,20 @@ class IncrementalQ3:
             dl_small = _dl_box.get("dl_small")
             if dl_small is None or not old_bytes["co"]:
                 return
-            t0 = _time.time()
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (CO.dL term) join+spill")
-            dl_h, co_h = sides(dl_small, spill_bytes("l"), co_old, old_bytes["co"])
-            fold_spill_r(
-                co_h.join(
-                    dl_h,
-                    (co_old["bucket"] == F.col("b_l")) & (F.col("o_orderkey") == F.col("l_orderkey")),
+            with _phase(phase_sec, "r_dl"):
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (CO.dL term) join+spill")
+                dl_h, co_h = sides(dl_small, self.state.staged_bytes("l"), co_old, old_bytes["co"])
+                fold_spill_r(
+                    co_h.join(
+                        dl_h,
+                        (co_old["bucket"] == F.col("b_l")) & (F.col("o_orderkey") == F.col("l_orderkey")),
+                    )
+                    .select(
+                        F.col("b_l").alias("bucket"), "l_orderkey", "o_orderdate",
+                        (F.col("w") * F.col("w_cents")).alias("cents"),
+                    ),
+                    "r_dl",
                 )
-                .select(
-                    F.col("b_l").alias("bucket"), "l_orderkey", "o_orderdate",
-                    (F.col("w") * F.col("w_cents")).alias("cents"),
-                ),
-                "r2",
-            )
-            _phases["r_dl"] = round(_time.time() - t0, 3)
 
         # Two lanes (guide §2.6): each relation's spill feeds only its
         # own maintenance chain, so the spills themselves overlap too —
@@ -616,80 +562,28 @@ class IncrementalQ3:
         # ΔCO-driven R terms); no maintenance waits on a whole-batch
         # spill (numbers in OPTIMIZATION_r15.md).
         def lane_l() -> None:
-            t0 = _time.time()
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
-            try:
-                dl = self._spill_l(batch)
-                if has_rows("l"):
-                    _dl_box["dl_small"] = dl.select(
-                        F.col("bucket").alias("b_l"), "l_orderkey", "w_cents"
-                    )
-            finally:
-                l_spilled.set()  # never deadlock lane CO on a failed spill
-            _phases["spill_l"] = round(_time.time() - t0, 3)
+            with _phase(phase_sec, "spill_l"):
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
+                try:
+                    dl = self._spill_l(batch)
+                    if dl is not None:
+                        _dl_box["dl_small"] = dl.select(
+                            F.col("bucket").alias("b_l"), "l_orderkey", "w_cents"
+                        )
+                finally:
+                    l_spilled.set()  # never deadlock lane CO on a failed spill
             maintain_r_dl()
 
         def lane_co() -> None:
-            t0 = _time.time()
-            sc.setJobDescription(f"ivm epoch {epoch_id}: delta-C/O spill")
-            dc, do = self._spill_co(batch)
-            _phases["spill_co"] = round(_time.time() - t0, 3)
+            with _phase(phase_sec, "spill_co"):
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-C/O spill")
+                dc, do = self._spill_co(batch)
             maintain_co_chain(dc, do)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(lane_l), pool.submit(lane_co)]
             for f in futs:
                 f.result()
-        # Fold the CO⋈ΔL part-set into the r staging dir — pure renames
-        # (part-file names are job-UUID-unique), no Spark jobs. Both
-        # part-sets were pre-folded within themselves; cross-part
-        # netting happens where it reclaims rows: compact_state.
-        r2 = self._tmp("r2")
-        if os.path.isdir(r2):
-            rdir = self._tmp("r")
-            for entry in os.listdir(r2):
-                if not entry.startswith("bucket="):
-                    continue
-                ddir = os.path.join(rdir, entry)
-                os.makedirs(ddir, exist_ok=True)
-                sdir = os.path.join(r2, entry)
-                for fname in os.listdir(sdir):
-                    spath = os.path.join(sdir, fname)
-                    if os.path.isfile(spath):
-                        os.replace(spath, os.path.join(ddir, fname))
-            shutil.rmtree(r2, ignore_errors=True)
-        # This wall covers the spills too: they run inside the lanes.
-        _mark("maintain_wall")
-
-        # Per-epoch pipeline telemetry (dashboard DAG view): delta rows
-        # per stage, read from the spilled files' parquet FOOTERS —
-        # driver-side metadata, no extra Spark jobs. `events` counts
-        # the PREDICATE-SURVIVING rows (the split applies Q3's
-        # segment/date filters before spilling), i.e. what actually
-        # enters the pipeline — not the raw micro-batch size, which
-        # would cost an extra action to know.
-        drc, dro, drl = (dir_rows(self._tmp(n)) for n in ("c", "o", "l"))
-        drco, drr = dir_rows(self._tmp("co")), dir_rows(self._tmp("r"))
-        _mark("telemetry")
-
-        # All spills are complete — the append-mode commit hard-links
-        # every previous state file and moves the delta files in next to
-        # them (pure filesystem metadata; no further Spark jobs), then
-        # atomically publishes the epoch.
-        self._commit_epoch(epoch_id)
-        _mark("commit")
-        sc.setJobDescription(None)
-        self.last_stats = {
-            "epoch": epoch_id,
-            "events": drc + dro + drl,
-            "delta_c": drc,
-            "delta_o": dro,
-            "delta_l": drl,
-            "delta_co": drco,
-            "delta_r": drr,
-            "state_rows_appended": drc + dro + drl + drco + drr,
-            "phase_sec": _phases,
-        }
 
     # -- result --------------------------------------------------------------
 
@@ -701,7 +595,7 @@ class IncrementalQ3:
         aggregation is map-side per bucket), then
         TakeOrderedAndProject: per-partition bounded heaps, O(n) driver
         memory."""
-        r = self._read("r")
+        r = self.state.read("r")
         return (
             r.groupBy("l_orderkey", "o_orderdate")
             .agg(F.sum("cents").alias("cents"))

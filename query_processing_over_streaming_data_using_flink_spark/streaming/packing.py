@@ -37,9 +37,8 @@ from pyspark.sql.window import Window
 from query_processing_over_streaming_data_using_flink_spark.operators import bpe as bp
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
+    bucket_of,
 )
-
-NUM_CURSOR_BUCKETS = 32
 
 
 class IncrementalSequencePacker:
@@ -59,9 +58,7 @@ class IncrementalSequencePacker:
         self.state_dir = state_dir
         self.budget = budget_tokens
         self.merges = merges
-        os.makedirs(state_dir, exist_ok=True)
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-        self.epoch = self.state.committed_epoch()
 
     def _verdict_path(self, epoch: int) -> str:
         return os.path.join(self.state_dir, f"packed_{epoch}")
@@ -89,7 +86,7 @@ class IncrementalSequencePacker:
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Pack one micro-batch of (doc_id, lang, text) rows. Returns
         and records (doc_id, lang, n_tokens, seq_id, seq_offset)."""
-        if epoch <= self.state.committed_epoch():
+        if not self.state.begin_epoch(epoch):
             # Redelivered epoch — return the recorded assignments
             # rather than re-spending the budget.
             return self.spark.read.parquet(self._verdict_path(epoch)).select(
@@ -101,7 +98,7 @@ class IncrementalSequencePacker:
         rows = (
             batch.select("doc_id", "lang")
             .join(counts, "doc_id")
-            .withColumn("bucket", F.pmod(F.hash("lang"), F.lit(NUM_CURSOR_BUCKETS)))
+            .withColumn("bucket", bucket_of("lang"))
         )
         w = (
             Window.partitionBy("lang")
@@ -124,7 +121,7 @@ class IncrementalSequencePacker:
         )
         # New cursors: previous spent (0 for new lanes) + this batch's
         # token mass per lane. Untouched lanes in a touched bucket must
-        # be carried forward (write_merged replaces whole buckets).
+        # be carried forward (a staged bucket replaces the old one).
         batch_mass = rows.groupBy("bucket", "lang").agg(
             F.sum("n_tokens").alias("mass")
         )
@@ -144,8 +141,7 @@ class IncrementalSequencePacker:
         out.withColumn("epoch", F.lit(epoch)).write.mode("overwrite").parquet(
             self._verdict_path(epoch)
         )
-        self.state.write_merged("cursor", merged)
+        self.state.stage(merged, "cursor")
         self.state.commit(epoch)
-        self.epoch = epoch
         rows.unpersist()
         return out

@@ -1,21 +1,35 @@
 """Versioned bucketed state tables for foreachBatch pipelines — the
-state discipline shared by the Q3 IVM (`streaming/ivm.py`) and the
-streaming near-dedup (`streaming/dedup.py`).
+state discipline shared by the Q3 IVM (`streaming/ivm.py`) and every
+other stateful face. This module is the only code that creates, moves,
+links or removes anything under a state dir (a face's own verdict log
+aside): faces read and stage DataFrames, the store owns the files.
 
-Layout: ``state_dir/v<epoch>[c...]/<table>/bucket=N/*.parquet`` plus an
-atomically-renamed ``CURRENT`` pointer file naming the live version and
-its epoch. Contract (same as the IVM's, factored out):
+Layout::
 
-* `write_merged` stages ONLY the buckets an epoch touched;
+    state_dir/CURRENT                       pointer: live version + epoch
+    state_dir/v<epoch>[c...]/<table>/bucket=N/part-*.parquet
+    state_dir/_staged/<part>/table=<table>/bucket=N/part-*.parquet
+
+Contract:
+
+* `begin_epoch(epoch)` opens an epoch — or returns False for a
+  redelivered one, which the caller skips. Opening clears `_staged/`,
+  so a crashed attempt's staged files are never published.
+* `stage(df, table, part=...)` is one Spark write of `df`, partitioned
+  by (table, bucket), into its own part-set. `df` carries a `table`
+  column when one write stages several tables (the IVM's ΔC/ΔO
+  spill), and several part-sets may stage the same table (its two ΔR
+  terms). `staged(table)` reads a table's staged delta back with the
+  table's schema (None when nothing was staged); `staged_bytes` and
+  `staged_rows` size it from the files alone, with no Spark job.
 * `commit(epoch)` builds the next version — staged buckets moved in,
   untouched buckets carried over as hard links (metadata only, no row
   data) — then flips the pointer. With ``append=True`` the staged
-  files are ADDED to the carried-over bucket contents instead of
-  replacing them (log-structured state: per-epoch write cost is the
-  delta itself; readers aggregate, `compact` folds the log down).
-  A crash before the flip leaves the previous complete version live;
-  redelivered epochs are detected via `committed_epoch()` and skipped
-  by the caller, so replay is exactly-once.
+  files of every part-set are ADDED to the carried-over bucket contents
+  instead of replacing them (log-structured state: per-epoch write cost
+  is the delta itself; readers aggregate, `compact` folds the log
+  down). A crash before the flip leaves the previous complete version
+  live; redelivered epochs are skipped, so replay is exactly-once.
 * `compact(transforms)` rewrites tables through per-table DataFrame
   transforms (aggregate a log-structured table down, drop dead rows —
   carry-over disabled so emptied buckets vanish), preserving the epoch.
@@ -24,6 +38,11 @@ its epoch. Contract (same as the IVM's, factored out):
   mismatch HARD-FAILS instead of silently replay-skipping epochs from
   a different stream whose ids restarted at 0 (a fresh checkpoint over
   old state would otherwise discard every new batch).
+
+Durability: the pointer file is fsynced before its rename, but the
+state dir is not fsynced after the rename, and neither are the moved
+or linked part files. A commit survives a process kill, not a power
+loss.
 
 Reader window: `read` resolves the version under `swap_lock`, but the
 returned DataFrame is lazy — GC keeps the current version plus the two
@@ -37,6 +56,7 @@ discipline is identical.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -47,8 +67,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Bucket count of the bucketed state tables (IVM and incragg): the unit
-# of dynamic partition pruning and of the touched-bucket carry-over. On
+# Bucket count of the hash-bucketed state tables (IVM, incragg, near-dedup
+# bands, packing cursors): the unit of dynamic partition pruning and of the touched-bucket carry-over. On
 # a cluster size it to a few× the executor count. It does NOT set the
 # per-epoch write's task count — `write_partitions` does.
 NUM_BUCKETS = 32
@@ -62,7 +82,7 @@ _KEEP_PREDECESSORS = 2
 
 def dir_bytes(path: str) -> int:
     """Total bytes of files under `path` (0 if absent) — shared by the
-    committed-state and tmp-spill size probes."""
+    committed-state and staged-delta size probes."""
     total = 0
     for root, _dirs, files in os.walk(path):
         total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
@@ -122,6 +142,7 @@ class VersionedBucketedState:
         self.state_dir = state_dir
         self.tables = dict(tables)
         self._run_id: str | None = None
+        self._staging = os.path.join(state_dir, "_staged")
         # REENTRANT: read() takes it internally; external emission
         # timers may already hold it around a read.
         self.swap_lock = threading.RLock()
@@ -188,9 +209,6 @@ class VersionedBucketedState:
 
     # -- I/O -----------------------------------------------------------------
 
-    def _tmp(self, name: str) -> str:
-        return os.path.join(self.state_dir, f"_tmp_{name}")
-
     def read(self, name: str) -> DataFrame:
         with self.swap_lock:
             _, ver = self._current()
@@ -225,10 +243,61 @@ class VersionedBucketedState:
             F.broadcast(touched.select("bucket").distinct()), "bucket", "semi"
         )
 
-    def write_merged(self, name: str, merged: DataFrame) -> None:
-        """Stage an epoch's merged contents for `name` — ONLY the
-        touched buckets need be present."""
-        merged.write.partitionBy("bucket").mode("overwrite").parquet(self._tmp(name))
+    # -- staging -------------------------------------------------------------
+
+    def begin_epoch(self, epoch_id: int) -> bool:
+        """Open `epoch_id` for staging: False for a redelivered epoch
+        (already committed — the caller skips it), else True with the
+        staging area cleared, so files a crashed attempt staged are
+        never published by this one."""
+        if epoch_id <= self.committed_epoch():
+            return False
+        shutil.rmtree(self._staging, ignore_errors=True)
+        return True
+
+    def stage(self, df: DataFrame, table: str | None = None, part: str | None = None) -> None:
+        """Stage `df` for the next commit as part-set `part` (default
+        `table`): one Spark write partitioned by (table, bucket). Rows go
+        to `table`, or — when it is None — to the table their own
+        `table` column names. In replace mode ONLY the touched buckets
+        need be present."""
+        if table is not None:
+            df = df.withColumn("table", F.lit(table))
+        df.write.partitionBy("table", "bucket").mode("overwrite").parquet(
+            os.path.join(self._staging, part or table)
+        )
+
+    def _staged_dirs(self, name: str) -> list[str]:
+        """`<part>/table=<name>` dirs holding at least one bucket: an
+        empty partitioned write leaves only its `_SUCCESS` marker, so
+        bucket dirs — not bytes — say whether anything was staged."""
+        parts = sorted(os.listdir(self._staging)) if os.path.isdir(self._staging) else []
+        dirs = [os.path.join(self._staging, p, f"table={name}") for p in parts]
+        return [
+            d
+            for d in dirs
+            if os.path.isdir(d) and any(e.startswith("bucket=") for e in os.listdir(d))
+        ]
+
+    def staged(self, name: str) -> DataFrame | None:
+        """`name`'s staged delta, read with the table's schema (`bucket`
+        is the only partition column below ``table=<name>``); None when
+        nothing is staged. Valid until the commit that publishes it.
+        Each part-set is its own read: Spark refuses several partition
+        roots in one."""
+        dirs = self._staged_dirs(name)
+        if not dirs:
+            return None
+        read = self.spark.read.schema(self.tables[name]).parquet
+        return functools.reduce(DataFrame.unionByName, [read(d) for d in dirs])
+
+    def staged_bytes(self, name: str) -> int:
+        """On-disk bytes of `name`'s staged delta — no Spark job."""
+        return sum(dir_bytes(d) for d in self._staged_dirs(name))
+
+    def staged_rows(self, name: str) -> int:
+        """Rows of `name`'s staged delta, from parquet footers."""
+        return sum(dir_rows(d) for d in self._staged_dirs(name))
 
     # -- commit --------------------------------------------------------------
 
@@ -247,10 +316,11 @@ class VersionedBucketedState:
         committed, ver = self._current()
         if ver is None:
             return
+        shutil.rmtree(self._staging, ignore_errors=True)
         for name in self.tables:
             fn = transforms.get(name)
             df = self.read(name)
-            self.write_merged(name, fn(df) if fn is not None else df)
+            self.stage(fn(df) if fn is not None else df, name)
         self._commit_version(os.path.basename(ver) + "c", committed, carry_over=False)
 
     def _commit_version(
@@ -263,22 +333,16 @@ class VersionedBucketedState:
         for name in self.tables:
             dst_table = os.path.join(new_ver, name)
             os.makedirs(dst_table)
-            replaced: set[str] = set()
-            tmp = self._tmp(name)
-            staged = (
-                [e for e in os.listdir(tmp) if e.startswith("bucket=")]
-                if os.path.isdir(tmp)
-                else []
-            )
-            if not append:
-                # Replace mode: move staged bucket dirs wholesale.
-                for entry in staged:
-                    os.replace(os.path.join(tmp, entry), os.path.join(dst_table, entry))
-                    replaced.add(entry)
+            staged: dict[str, list[str]] = {}
+            for tdir in self._staged_dirs(name):
+                for entry in os.listdir(tdir):
+                    if entry.startswith("bucket="):
+                        staged.setdefault(entry, []).append(os.path.join(tdir, entry))
             src_table = None if old_ver is None else os.path.join(old_ver, name)
             if carry_over and src_table and os.path.isdir(src_table):
                 for entry in os.listdir(src_table):
-                    if not entry.startswith("bucket=") or entry in replaced:
+                    # Replace mode: a staged bucket supersedes the old one.
+                    if not entry.startswith("bucket=") or (entry in staged and not append):
                         continue
                     sdir = os.path.join(src_table, entry)
                     ddir = os.path.join(dst_table, entry)
@@ -287,19 +351,18 @@ class VersionedBucketedState:
                         spath = os.path.join(sdir, fname)
                         if os.path.isfile(spath):
                             os.link(spath, os.path.join(ddir, fname))
-            if append:
-                # Append mode: staged part files land NEXT TO the
-                # carried-over links (names are job-UUID-unique).
-                for entry in staged:
-                    sdir = os.path.join(tmp, entry)
-                    ddir = os.path.join(dst_table, entry)
-                    os.makedirs(ddir, exist_ok=True)
+            for entry, sdirs in staged.items():
+                ddir = os.path.join(dst_table, entry)
+                for sdir in sdirs:
+                    if not os.path.isdir(ddir):
+                        # A bucket new to this version: move it wholesale.
+                        os.replace(sdir, ddir)
+                        continue
+                    # Append mode, or a second part-set of the table:
+                    # staged part files land NEXT TO the bucket's files
+                    # (names are job-UUID-unique).
                     for fname in os.listdir(sdir):
-                        spath = os.path.join(sdir, fname)
-                        if os.path.isfile(spath):
-                            os.replace(spath, os.path.join(ddir, fname))
-            if staged:
-                shutil.rmtree(tmp, ignore_errors=True)
+                        os.replace(os.path.join(sdir, fname), os.path.join(ddir, fname))
         meta = {"epoch": epoch_id, "version": version}
         run_id = self._run_id if self._run_id is not None else self._pointer().get("run_id")
         if run_id is not None:

@@ -6,7 +6,8 @@ numbers; `README.md:735-820` in the reference).
 For each core count we build a fresh local[N] session with
 shuffle.partitions = N and time the reference-comparable workload
 (full insert+delete changelog generation + signed-weight Q3 over its
-state). Prints one table + one JSON line.
+state) with bench.py's timing rule (`bench.timed`). Prints one table +
+one JSON line.
 
 Usage: python scripts/bench_sweep.py [sf_dir] [--cpus 1,2,4,8,16,32]
 """
@@ -17,12 +18,16 @@ import argparse
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Replace (not just precede) this script's directory on the path: its
+# sibling scripts/profile.py would otherwise shadow the standard
+# library's `profile`, which pyspark imports through cProfile.
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_once(cpus: int, sf_dir: str) -> tuple[float, int]:
+def run_once(cpus: int, sf_dir: str):
+    """(`bench.Timing` of the workload, events in its changelog)."""
+    import bench
     from query_processing_over_streaming_data_using_flink_spark.session import get_spark
 
     spark = get_spark(f"sweep-{cpus}", cpus=cpus, shuffle_partitions=cpus)
@@ -39,12 +44,14 @@ def run_once(cpus: int, sf_dir: str) -> tuple[float, int]:
         n_total = sum(
             load_table(spark, sf_dir, t).count() for t in ("customer", "orders", "lineitem")
         )
-        # Warm file listing/codegen so the sweep measures the workload.
-        load_table(spark, sf_dir, "lineitem").count()
-        t0 = time.time()
-        log = build_changelog(spark, sf_dir, window=(n_total * 2) // 3, pin=False)
-        q3_on_state(log).write.mode("overwrite").format("noop").save()
-        return time.time() - t0, 2 * n_total
+        window = (n_total * 2) // 3
+        t = bench.timed(
+            spark,
+            lambda: bench.write_noop(
+                q3_on_state(build_changelog(spark, sf_dir, window=window, pin=False))
+            ),
+        )
+        return t, 2 * n_total
     finally:
         spark.stop()
 
@@ -59,8 +66,11 @@ def main() -> None:
     results = {}
     print(f"{'cores':>6} {'wall_s':>8} {'events/s':>10}")
     for cpus in cpus_list:
-        wall, n_events = run_once(cpus, args.sf_dir)
-        results[cpus] = {"wall_s": round(wall, 3), "events_per_sec": round(n_events / wall, 1)}
+        t, n_events = run_once(cpus, args.sf_dir)
+        wall = t.sec
+        results[cpus] = {
+            "wall_s": wall, "runs": t.runs, "events_per_sec": round(n_events / wall, 1)
+        }
         print(f"{cpus:>6} {wall:>8.2f} {n_events / wall:>10.0f}", flush=True)
     best = max(results.values(), key=lambda r: r["events_per_sec"])
     print(json.dumps({"metric": "changelog_sweep", "sf_dir": args.sf_dir,

@@ -205,7 +205,7 @@ def stream_main() -> None:
         )
         # epoch ids start at 0, so the final committed epoch + 1 is the
         # micro-batch count.
-        n_batches = pipe.dedup.agg.epoch + 1
+        n_batches = pipe.dedup.agg.state.committed_epoch() + 1
         live = sorted(tuple(r) for r in pipe.manifest(docs).collect())
         pipe.release_gate_cache()
     batch = sorted(

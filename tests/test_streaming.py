@@ -534,7 +534,7 @@ def test_near_dedup_restart_with_epoch_gap(spark, tmp_path):
 
     # "Restart": new handler, same dir — recovers the on-disk epoch.
     h2 = IncrementalNearDedup(spark, str(tmp_path / "state"))
-    assert h2.epoch == 0
+    assert h2.state.committed_epoch() == 0
     # Resumes at a non-contiguous epoch id (gap 1-4).
     b2 = spark.createDataFrame(
         [(10, base[0]), (11, " ".join(f"q{j}" for j in range(30)))],
@@ -576,7 +576,7 @@ def test_ivm_checkpoint_restart_end_to_end(spark, tmp_path):
                      checkpoint_dir=ckpt)
     from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import IncrementalQ3
 
-    mid_epoch = IncrementalQ3(spark, state).epoch
+    mid_epoch = IncrementalQ3(spark, state).state.committed_epoch()
     assert mid_epoch >= 0, "first run must have committed epochs"
 
     # ...the rest of the stream arrives, and the pipeline restarts on
@@ -584,7 +584,7 @@ def test_ivm_checkpoint_restart_end_to_end(spark, tmp_path):
     parts.filter(F.spark_partition_id() >= 4).write.mode("append").parquet(changelog_dir)
     result = run_streaming_q3(spark, changelog_dir, state, files_per_trigger=2,
                               checkpoint_dir=ckpt)
-    final_epoch = IncrementalQ3(spark, state).epoch
+    final_epoch = IncrementalQ3(spark, state).state.committed_epoch()
     assert final_epoch > mid_epoch, "restart must process the new files"
     assert _rows(result) == _rows(q3_on_state(log))
 
@@ -648,7 +648,7 @@ def test_incremental_ivf_index_restart(spark, tmp_path):
 
     # Restart: no centroids passed — they must come from state, frozen.
     idx2 = IncrementalIVFIndex(spark, d)
-    assert idx2.epoch == 0
+    assert idx2.state.committed_epoch() == 0
     idx2.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
     assert idx2.state.read("inv").count() == emb.count()
 
@@ -810,7 +810,7 @@ def test_incremental_ivfpq_index_restart(spark, tmp_path):
     idx.process_batch(emb.filter(F.col("vec_id") % 2 == 0), 0)
 
     idx2 = IncrementalIVFPQIndex(spark, d)
-    assert idx2.epoch == 0
+    assert idx2.state.committed_epoch() == 0
     idx2.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
 
     queries = emb.filter(F.col("vec_id") < 5)
@@ -881,7 +881,7 @@ def _single_customer_batch(spark, key=NEW_CUST_KEY):
 
 
 def _cust_weight(pipe, key=NEW_CUST_KEY):
-    got = pipe._read("c").filter(F.col("c_custkey") == key).collect()
+    got = pipe.state.read("c").filter(F.col("c_custkey") == key).collect()
     return [(r["c_custkey"], r["w_c"]) for r in got]
 
 
@@ -911,7 +911,7 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
             if p.is_file()
         }
 
-    e0, v0 = pipe._current()
+    e0, v0 = pipe.state._current()
     assert e0 == 0
     before = inodes(v0)
     assert before, "seed epoch must have written state"
@@ -936,7 +936,7 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
     ]
     assert plans, "the epoch ran no delta-CO join execution"
     assert any("dynamicpruning" in p.lower() for p in plans), plans[0][:2000]
-    e1, v1 = pipe._current()
+    e1, v1 = pipe.state._current()
     assert e1 == 1 and v1 != v0
     after = inodes(v1)
 
@@ -1041,10 +1041,10 @@ def test_bucketed_writes_are_sized_to_the_cores(spark, tmp_path):
     even = F.col("seq") % 2 == 0
     pipe = IncrementalQ3(spark, str(tmp_path / "ivm"))
     pipe.process_batch(log.filter(even), 0)
-    before = files(pipe._current()[1])
+    before = files(pipe.state._current()[1])
     seen = _last_job_id(spark)
     pipe.process_batch(log.filter(~even), 1)
-    after = files(pipe._current()[1])
+    after = files(pipe.state._current()[1])
     writes = {
         desc: write_tasks(st)
         for desc, st in _stages_since(spark, seen).items()
@@ -1106,16 +1106,16 @@ def test_ivm_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
     assert calls["n"] > 3, "crash must have hit mid carry-over"
 
     # Readers still see the complete epoch-0 snapshot.
-    assert pipe._current()[0] == 0
+    assert pipe.state.committed_epoch() == 0
     assert _rows(pipe.top_n()) == top_before
     assert _cust_weight(pipe) == []
 
     # Fresh handler (restart): recovers the committed epoch, applies the
     # redelivered batch exactly once.
     pipe2 = IncrementalQ3(spark, state)
-    assert pipe2.epoch == 0
+    assert pipe2.state.committed_epoch() == 0
     pipe2.process_batch(batch, 1)
-    assert pipe2._current()[0] == 1
+    assert pipe2.state.committed_epoch() == 1
     assert _cust_weight(pipe2) == [(NEW_CUST_KEY, 1)]
 
     # Second redelivery of the same epoch: skipped, weight NOT doubled.
@@ -1134,7 +1134,7 @@ def test_state_gc_keeps_reader_window(spark, tmp_path):
 
     pipe = IncrementalQ3(spark, str(tmp_path / "state"))
     pipe.process_batch(_single_customer_batch(spark, key=1), 0)
-    lazy = pipe._read("c")  # resolves version v0 now, evaluates later
+    lazy = pipe.state.read("c")  # resolves version v0 now, evaluates later
     pipe.process_batch(_single_customer_batch(spark, key=2), 1)
     pipe.process_batch(_single_customer_batch(spark, key=3), 2)
     # v0 is two commits back — still on disk, the straddling read works.
@@ -1216,21 +1216,21 @@ def test_ivm_compaction_reclaims_cancelled_keys(spark, tmp_path):
     pipe = IncrementalQ3(spark, state)
     pipe.process_batch(full_cycle, 0)
     assert pipe.top_n().count() == 0, "drained stream has no live revenue"
-    n_dead = sum(pipe._read(t).count() for t in pipe._TABLES)
+    n_dead = sum(pipe.state.read(t).count() for t in pipe._TABLES)
     assert n_dead > 0, "cancelled keys are kept by the per-epoch merge"
 
     pipe.compact_state()
-    assert pipe._current()[0] == 0, "compaction must not advance the epoch"
-    assert sum(pipe._read(t).count() for t in pipe._TABLES) == 0
+    assert pipe.state.committed_epoch() == 0, "compaction must not advance the epoch"
+    assert sum(pipe.state.read(t).count() for t in pipe._TABLES) == 0
     assert pipe.top_n().count() == 0
 
     # Compaction is idempotent and the version chain stays consistent.
     pipe.compact_state()
-    assert pipe._current()[0] == 0
+    assert pipe.state.committed_epoch() == 0
 
     # The stream continues: a post-compaction delta lands exactly once.
     pipe.process_batch(_single_customer_batch(spark), 1)
-    assert pipe._current()[0] == 1
+    assert pipe.state.committed_epoch() == 1
     assert _cust_weight(pipe) == [(NEW_CUST_KEY, 1)]
 
 
@@ -1397,13 +1397,43 @@ def test_ivm_crash_at_pointer_flip_recovers(spark, tmp_path, monkeypatch):
         pipe.process_batch(_single_customer_batch(spark), 1)
     monkeypatch.undo()
 
-    assert pipe._current()[0] == 0
+    assert pipe.state.committed_epoch() == 0
     assert _rows(pipe.top_n()) == top_before
     assert _cust_weight(pipe) == []
 
     pipe.process_batch(_single_customer_batch(spark), 1)
-    assert pipe._current()[0] == 1
+    assert pipe.state.committed_epoch() == 1
     assert _cust_weight(pipe) == [(NEW_CUST_KEY, 1)]
+
+
+def test_ivm_never_publishes_stale_staged_files(spark, tmp_path):
+    """A crashed attempt can leave a staged part-set behind. Opening the
+    next epoch clears the staging area, so an epoch that stages no r
+    terms of its own publishes none of the stale r rows either."""
+    import datetime
+
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
+        IncrementalQ3,
+    )
+
+    log = build_changelog(spark, SF_SMOKE)
+    pipe = IncrementalQ3(spark, str(tmp_path / "state"))
+    pipe.process_batch(log, 0)
+
+    # A stale ΔR row large enough to top the Top-20 if it were published.
+    stale = spark.createDataFrame(
+        [(0, NEW_CUST_KEY, datetime.datetime(1995, 1, 1), 10**15)],
+        "bucket int, l_orderkey long, o_orderdate timestamp_ntz, cents long",
+    )
+    pipe.state.stage(stale, "r", part="r_dco")
+    assert pipe.state.staged_rows("r") == 1
+
+    # One new customer with no orders: no ΔCO, no ΔL, so no r terms.
+    batch = _single_customer_batch(spark)
+    pipe.process_batch(batch, 1)
+    assert pipe.last_stats["delta_r"] == 0
+    applied = log.unionByName(batch, allowMissingColumns=True)
+    assert _rows(pipe.top_n(20)) == _rows(q3_on_state(applied))
 
 
 @pytest.mark.slow  # re-run soak: dedup verdicts/state correctness stays attested by
@@ -1685,7 +1715,7 @@ def test_ivm_lineitem_only_batch(spark, tmp_path):
     pipe = IncrementalQ3(spark, str(tmp_path / "state"))
     # Epoch 0: customers + orders only (builds CO state, no lineitems).
     pipe.process_batch(log.filter(F.col("relation") != "lineitem"), 0)
-    # Epoch 1: lineitem-only — co_parts is empty, tmp("co") absent.
+    # Epoch 1: lineitem-only — co_parts is empty, nothing staged for co.
     pipe.process_batch(log.filter(F.col("relation") == "lineitem"), 1)
     assert _rows(pipe.top_n(20)) == _rows(q3_on_state(log))
 
@@ -1704,9 +1734,8 @@ def test_state_layout_mismatch_hard_fails(spark, tmp_path):
     old = VersionedBucketedState(
         spark, str(tmp_path / "state"), {"o2": "bucket int, k long"}
     )
-    spark.range(3).selectExpr("0 as bucket", "id as k").write.partitionBy(
-        "bucket"
-    ).mode("overwrite").parquet(old._tmp("o2"))
+    assert old.begin_epoch(0)
+    old.stage(spark.range(3).selectExpr("0 as bucket", "id as k"), "o2")
     old.commit(0, append=True)
 
     with _pytest.raises(RuntimeError, match="different pipeline version"):
@@ -1887,7 +1916,7 @@ def test_streaming_sequence_packing_matches_batch(spark, tmp_path):
     packer2 = IncrementalSequencePacker(
         spark, str(tmp_path / "pack"), budget_tokens=2048
     )
-    assert packer2.epoch == 2
+    assert packer2.state.committed_epoch() == 2
     late = spark.createDataFrame(
         [(100000, "en", "late arrival doc with some tokens")],
         "doc_id long, lang string, text string",
