@@ -97,7 +97,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     back — a full shuffle of the shingle rows that existed only to
     undo the explode. CollapseProject keeps the multiply-referenced
     hash array materialized (SPARK-36718), so shingling runs once per
-    row, not once per permutation (check with scripts/profile.py plan).
+    row, not once per permutation (check with scripts/query_profile.py plan).
 
     `sh` element ORDER differs from the old collect_set rendering
     (first-occurrence vs hash-table order); every consumer treats it

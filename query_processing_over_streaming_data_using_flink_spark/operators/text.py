@@ -164,7 +164,7 @@ def shingle_hash_arrays(docs, k: int = 3):
     outright). The two projection layers stay materialized — Catalyst's
     CollapseProject keeps multiply-referenced non-cheap aliases (the
     token array feeds size() + k element_at's; SPARK-36718) — so the
-    tokenizer runs once per row (check with scripts/profile.py plan).
+    tokenizer runs once per row (check with scripts/query_profile.py plan).
 
     Docs with fewer than k tokens yield hs = []; NULL text yields
     hs = NULL (size(NULL) < k is NULL, so the short-doc guard inside

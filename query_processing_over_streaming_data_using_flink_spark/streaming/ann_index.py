@@ -20,7 +20,7 @@ Design:
 * each micro-batch assigns its vectors to their nearest centroid (one
   broadcast join against ≤ `cells` centroid rows — no corpus shuffle)
   and APPENDS them to the inverted lists: state table `inv` is
-  bucketed BY CELL, so the append-mode commit writes only the delta
+  bucketed BY CELL, so the append commit writes only the delta
   and a search's cell probes prune to `nprobe` bucket directories;
 * vectors are immutable (no retraction), so the log-structured state
   needs no compaction — per-epoch cost is exactly the new vectors;
@@ -155,7 +155,7 @@ class IncrementalIVFIndex:
         self.state.stage(delta, "inv")
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
-        self.state.commit(epoch_id, append=True)
+        self.state.commit(epoch_id)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -384,7 +384,7 @@ class IncrementalIVFPQIndex:
             )
         )
         self.state.stage(delta, "inv")
-        self.state.commit(epoch_id, append=True)
+        self.state.commit(epoch_id)
 
     # -- maintenance ---------------------------------------------------------
 

@@ -21,10 +21,9 @@ Near-dup (MinHash-band) streaming dedup is `IncrementalNearDedup`
 below — a foreachBatch band-ownership state table with a deterministic
 first-wins/min-doc-id collision policy, held in the same versioned
 bucketed state store as the Q3 IVM (`streaming/state_table.py`): each
-epoch READS only the state buckets its band keys hash into and WRITES
-only those buckets back, so per-epoch cost is O(batch × state/buckets),
-not O(state) — the round-4 scale fix (the previous form rewrote the
-full ownership table every micro-batch).
+epoch READS only the state buckets its band keys hash into and APPENDS
+only its new claims, so per-epoch cost is O(batch × state/buckets),
+not O(state).
 
 The ownership machinery is MODALITY-AGNOSTIC: `band_fn` swaps the
 candidate-key generator, so the same class does streaming perceptual
@@ -43,6 +42,7 @@ from query_processing_over_streaming_data_using_flink_spark.operators.text impor
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
     bucket_of,
+    write_partitions,
 )
 
 
@@ -95,14 +95,15 @@ class IncrementalNearDedup:
     State = one (bucket, band_key, owner) table in the shared
     `VersionedBucketedState` store: per batch the state scan is
     restricted to the buckets the batch's band keys hash into (dynamic
-    partition pruning), and only those buckets are rewritten and
-    committed — crash-atomic with replay-skip, like the Q3 IVM.
-    Verdicts land in a per-epoch parquet log (distributed sink, never
-    driver memory — round-1 judge finding); a redelivered epoch returns
-    its recorded verdicts instead of re-applying.
+    partition pruning), and the epoch's new claims are appended —
+    crash-atomic with replay-skip, like the Q3 IVM. Each epoch's
+    verdicts are its store output (parquet, never driver memory); a
+    redelivered epoch returns its recorded verdicts instead of
+    re-applying.
     """
 
     _TABLES = {"bands": "bucket int, band_key long, owner long"}
+    _OUTPUT = "doc_id long, dup_of long"
 
     def __init__(self, spark, state_dir: str, band_fn=None) -> None:
         """`band_fn(batch) -> DataFrame(doc_id, band_key long)` swaps
@@ -111,43 +112,17 @@ class IncrementalNearDedup:
         ``lambda b: hamming_band_key_rows(image_dhash(b), "dh")`` for
         perceptual-hash IMAGE near-dedup over (doc_id, content,
         media_type) batches — the ownership state, bucket pruning,
-        crash-atomicity and verdict log are modality-agnostic."""
+        crash-atomicity and verdict output are modality-agnostic."""
         self.spark = spark
-        self.state_dir = state_dir
         self._band_fn = band_fn
         # Restart recovery: the store resumes from the last committed
         # epoch (ids need NOT be dense — a checkpointed restart skips
         # numbers).
-        self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-
-    def _verdict_path(self, epoch: int) -> str:
-        import os
-
-        return os.path.join(self.state_dir, f"verdicts_{epoch}")
-
-    def _verdict_epochs(self) -> list[int]:
-        """Completed verdict epochs discovered from disk (non-dense ids
-        supported; dirs without _SUCCESS are aborted writes)."""
-        import os
-        import re
-
-        pat = re.compile(r"verdicts_(\d+)")
-        out = []
-        for entry in os.listdir(self.state_dir):
-            m = pat.fullmatch(entry)
-            if m and os.path.exists(os.path.join(self.state_dir, entry, "_SUCCESS")):
-                out.append(int(m.group(1)))
-        return sorted(out)
+        self.state = VersionedBucketedState(spark, state_dir, self._TABLES, output=self._OUTPUT)
 
     def verdicts_df(self) -> DataFrame:
-        """All verdicts emitted so far, as a DataFrame over the parquet
-        verdict log (doc_id, dup_of, epoch)."""
-        done = self._verdict_epochs()
-        if not done:
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), "doc_id long, dup_of long, epoch long"
-            )
-        return self.spark.read.parquet(*[self._verdict_path(e) for e in done])
+        """All committed verdicts (doc_id, dup_of, epoch)."""
+        return self.state.outputs()
 
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Apply one micro-batch of documents (doc_id, text). Returns
@@ -157,9 +132,7 @@ class IncrementalNearDedup:
         if not self.state.begin_epoch(epoch):
             # Redelivered epoch: its claims are already committed —
             # return the recorded verdicts instead of re-applying.
-            return self.spark.read.parquet(self._verdict_path(epoch)).select(
-                "doc_id", "dup_of"
-            )
+            return self.state.output(epoch)
 
         if self._band_fn is not None:
             band_rows = self._band_fn(batch)
@@ -187,24 +160,17 @@ class IncrementalNearDedup:
                 F.when(F.col("eff_owner") != F.col("doc_id"), F.col("eff_owner"))
             ).alias("dup_of")
         )
+        # ...and only the new claims are appended: a claimed band_key
+        # had no owner, so no bucket row is rewritten. One task per
+        # write partition owns whole buckets (see `write_partitions`).
         new_claims = (
             owners.filter(F.col("owner").isNull())
             .select("bucket", "band_key", F.col("batch_owner").alias("owner"))
+            .repartition(write_partitions(self.spark), "band_key")
             .distinct()
         )
-        # ...and only those buckets are written back (state rows of a
-        # touched bucket ∪ that bucket's new claims — disjoint on
-        # band_key by construction).
-        merged = touched_state.unionByName(new_claims)
-        out = verdicts.select("doc_id", "dup_of")
-        # Verdict log first, commit second: a crash between them leaves
-        # the epoch uncommitted, so the retry recomputes and overwrites
-        # the (possibly partial) log before committing. Once committed,
-        # the log is guaranteed present for the replay path above.
-        out.withColumn("epoch", F.lit(epoch)).write.mode("overwrite").parquet(
-            self._verdict_path(epoch)
-        )
-        self.state.stage(merged, "bands")
+        self.state.stage(new_claims, "bands")
+        self.state.stage_output(verdicts.select("doc_id", "dup_of"))
         self.state.commit(epoch)
         bands.unpersist()
-        return out
+        return self.state.output(epoch)

@@ -115,7 +115,7 @@ class IncrementalGroupedAgg:
             .repartition(write_partitions(self.spark), *keys),
             self.TABLE,
         )
-        self.state.commit(epoch_id, append=True)
+        self.state.commit(epoch_id)
 
     def compact(self) -> None:
         """Scheduled OPTIMIZE: fold the log to one row per group, drop

@@ -17,9 +17,7 @@ on the right of any join. The signed-weight algebra is commutative, so
 any batching/ordering of events converges to the same state (unlike the
 reference, which needs an ordered single-threaded source).
 
-State discipline (round-5 redesign — LOG-STRUCTURED; rounds 2-4
-merged every touched bucket per epoch, an O(touched-state) shuffle +
-rewrite even when the delta was tiny):
+State discipline (LOG-STRUCTURED):
 
 * Every state table is hash-bucketed on its join key —
   ``bucket = pmod(hash(key), NUM_BUCKETS)`` — and stored as
@@ -60,7 +58,7 @@ rewrite even when the delta was tiny):
 * Every per-epoch write shuffles into `write_partitions` tasks — the
   cores, not the NUM_BUCKETS buckets — keyed so that each task owns
   whole buckets (partition = bucket mod n; see `write_partitions`).
-* Crash atomicity (round-2 judge finding): a crash anywhere before the
+* Crash atomicity: a crash anywhere before the
   pointer flip leaves ``CURRENT`` on the last complete version — every
   reader sees a consistent all-tables snapshot; the half-built version
   dir is debris, removed on the retried commit, and the retry clears
@@ -144,7 +142,7 @@ class IncrementalQ3:
     # parquet bytes to an in-memory BroadcastHashJoin relation.
     PARQUET_EXPANSION: int = 4
 
-    # table -> (partition bucket's source key, schema). `co` is the
+    # table -> schema. `co` is the
     # MAINTAINED INTERMEDIATE VIEW C⋈O (weight = w_c·w_o, bucketed by
     # orderkey — the key of its downstream join): maintaining the
     # two-way join as its own state table means ΔCO is computed once,
@@ -154,11 +152,11 @@ class IncrementalQ3:
     # ΔL→orders→customer. CO is also ~5× smaller than orders (segment
     # and date filters applied), so the ΔL probe reads less state.
     _TABLES = {
-        "c": ("c_custkey", "bucket int, c_custkey long, w_c long"),
-        "o": ("o_custkey", "bucket int, o_orderkey long, o_custkey long, o_orderdate timestamp_ntz, w_o long"),
-        "co": ("o_orderkey", "bucket int, o_orderkey long, o_orderdate timestamp_ntz, w long"),
-        "l": ("l_orderkey", "bucket int, l_orderkey long, linenumber int, w_cents long"),
-        "r": ("l_orderkey", "bucket int, l_orderkey long, o_orderdate timestamp_ntz, cents long"),
+        "c": "bucket int, c_custkey long, w_c long",
+        "o": "bucket int, o_orderkey long, o_custkey long, o_orderdate timestamp_ntz, w_o long",
+        "co": "bucket int, o_orderkey long, o_orderdate timestamp_ntz, w long",
+        "l": "bucket int, l_orderkey long, linenumber int, w_cents long",
+        "r": "bucket int, l_orderkey long, o_orderdate timestamp_ntz, cents long",
     }
 
     def __init__(
@@ -178,9 +176,7 @@ class IncrementalQ3:
         self.cutoff = cutoff
         # All state mechanics (versioned dirs, hard-link carry-over,
         # atomic pointer commit, GC) live in the shared helper.
-        self.state = VersionedBucketedState(
-            spark, state_dir, {n: schema for n, (_k, schema) in self._TABLES.items()}
-        )
+        self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
         self.swap_lock = self.state.swap_lock
 
     def compact_state(self) -> None:
@@ -225,7 +221,7 @@ class IncrementalQ3:
         schema's 11 columns; w_cents is computed map-side BEFORE the
         exchange so two doubles collapse to one long) → repartition on
         the join key → one file per bucket, staged as the l table's
-        part-set (so the append-mode commit publishes these exact files
+        part-set (so the append commit publishes these exact files
         as the epoch's state write). Runs in its own lane so the CO⋈ΔL
         maintenance term can start the moment the L delta lands,
         instead of waiting for the C/O spill (guide §2.6).
@@ -344,12 +340,12 @@ class IncrementalQ3:
         with _phase(phase_sec, "telemetry"):
             rows = {n: self.state.staged_rows(n) for n in self._TABLES}
 
-        # Everything is staged — the append-mode commit hard-links
+        # Everything is staged — the append commit hard-links
         # every previous state file and moves the staged delta files in
         # next to them (pure filesystem metadata; no further Spark
         # jobs), then atomically publishes the epoch.
         with _phase(phase_sec, "commit"):
-            self.state.commit(epoch_id, append=True)
+            self.state.commit(epoch_id)
         self.spark.sparkContext.setJobDescription(None)
         events = rows["c"] + rows["o"] + rows["l"]
         self.last_stats = {

@@ -12,14 +12,15 @@ position immediately (arrival order within a language lane is the
 packing order), so a training shard can be cut the moment its budget
 fills, while ingest continues.
 
-State discipline (the engine's standard): one `cursor` row per
-language (spent-token count) in the shared crash-atomic
-`VersionedBucketedState`; verdicts (doc → seq assignment) land in a
-per-epoch parquet log, so a redelivered epoch returns its recorded
-assignments instead of double-spending the budget — exactly-once
-packing under foreachBatch redelivery. Per-epoch cost is the batch's
-tokenizer pass plus a per-lane window over the batch; state reads
-prune to the buckets the batch's languages hash into.
+State discipline (the engine's standard): the `cursor` table of the
+shared crash-atomic `VersionedBucketedState` gets one row per language
+per epoch (that epoch's token mass); a lane's cursor is the sum of its
+rows, and `compact` folds them to one. Each epoch's assignments
+(doc → seq) are its store output, so a redelivered epoch returns its
+recorded assignments instead of double-spending the budget —
+exactly-once packing under foreachBatch redelivery. Per-epoch cost is
+the batch's tokenizer pass plus a per-lane window over the batch;
+state reads prune to the buckets the batch's languages hash into.
 
 Equivalence: feeding batches in doc_id order reproduces the batch
 `pack_sequences_bpe` assignment exactly (tested) — the stream==batch
@@ -27,8 +28,6 @@ convergence criterion applied to the packing operator.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,11 +40,17 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.state_tabl
 )
 
 
+def _fold(cursor: DataFrame) -> DataFrame:
+    """One cursor row per lane: the sum of its per-epoch rows."""
+    return cursor.groupBy("bucket", "lang").agg(F.sum("spent").alias("spent"))
+
+
 class IncrementalSequencePacker:
     """foreachBatch handler assigning (seq_id, seq_offset) to each
     arriving document under a per-language token budget."""
 
     _TABLES = {"cursor": "bucket int, lang string, spent long"}
+    _OUTPUT = "doc_id long, lang string, n_tokens long, seq_id long, seq_offset long"
 
     def __init__(
         self,
@@ -55,33 +60,19 @@ class IncrementalSequencePacker:
         merges: tuple[tuple[str, str], ...] = bp.DEFAULT_MERGES,
     ) -> None:
         self.spark = spark
-        self.state_dir = state_dir
         self.budget = budget_tokens
         self.merges = merges
-        self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
-
-    def _verdict_path(self, epoch: int) -> str:
-        return os.path.join(self.state_dir, f"packed_{epoch}")
+        self.state = VersionedBucketedState(spark, state_dir, self._TABLES, output=self._OUTPUT)
 
     def packed_df(self) -> DataFrame:
-        """Everything packed so far (doc_id, lang, n_tokens, seq_id,
-        seq_offset, epoch) from the per-epoch logs."""
-        import re
+        """Everything committed so far (doc_id, lang, n_tokens, seq_id,
+        seq_offset, epoch)."""
+        return self.state.outputs()
 
-        pat = re.compile(r"packed_(\d+)")
-        done = [
-            os.path.join(self.state_dir, e)
-            for e in os.listdir(self.state_dir)
-            if pat.fullmatch(e)
-            and os.path.exists(os.path.join(self.state_dir, e, "_SUCCESS"))
-        ]
-        if not done:
-            return self.spark.createDataFrame(
-                [],
-                "doc_id long, lang string, n_tokens long, seq_id long, "
-                "seq_offset long, epoch long",
-            )
-        return self.spark.read.parquet(*done)
+    def compact(self) -> None:
+        """Maintenance: fold each lane's per-epoch cursor rows into one
+        (crash-safe version flip, epoch preserved)."""
+        self.state.compact({"cursor": _fold})
 
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Pack one micro-batch of (doc_id, lang, text) rows. Returns
@@ -89,9 +80,7 @@ class IncrementalSequencePacker:
         if not self.state.begin_epoch(epoch):
             # Redelivered epoch — return the recorded assignments
             # rather than re-spending the budget.
-            return self.spark.read.parquet(self._verdict_path(epoch)).select(
-                "doc_id", "lang", "n_tokens", "seq_id", "seq_offset"
-            )
+            return self.state.output(epoch)
         counts = bp.bpe_token_counts(batch, self.merges).select(
             "doc_id", F.col("n_tokens_bpe").alias("n_tokens")
         )
@@ -108,7 +97,7 @@ class IncrementalSequencePacker:
         rows = rows.withColumn(
             "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
         ).persist()
-        touched = self.state.restrict(self.state.read("cursor"), rows)
+        touched = _fold(self.state.restrict(self.state.read("cursor"), rows))
         carried = rows.join(
             touched.select("lang", "spent"), "lang", "left"
         ).withColumn("offset", F.coalesce(F.col("spent"), F.lit(0)) + F.col("cum_before"))
@@ -119,29 +108,10 @@ class IncrementalSequencePacker:
             F.floor(F.col("offset") / self.budget).cast("long").alias("seq_id"),
             (F.col("offset") % self.budget).cast("long").alias("seq_offset"),
         )
-        # New cursors: previous spent (0 for new lanes) + this batch's
-        # token mass per lane. Untouched lanes in a touched bucket must
-        # be carried forward (a staged bucket replaces the old one).
-        batch_mass = rows.groupBy("bucket", "lang").agg(
-            F.sum("n_tokens").alias("mass")
-        )
-        merged = (
-            touched.join(batch_mass, ["bucket", "lang"], "full")
-            .select(
-                "bucket",
-                "lang",
-                (
-                    F.coalesce(F.col("spent"), F.lit(0))
-                    + F.coalesce(F.col("mass"), F.lit(0))
-                ).cast("long").alias("spent"),
-            )
-        )
-        # Log first, commit second (IncrementalNearDedup's crash rule):
-        # an epoch is only ever replay-skipped if its log exists.
-        out.withColumn("epoch", F.lit(epoch)).write.mode("overwrite").parquet(
-            self._verdict_path(epoch)
-        )
-        self.state.stage(merged, "cursor")
+        # This batch's token mass per lane is appended as a cursor row.
+        batch_mass = rows.groupBy("bucket", "lang").agg(F.sum("n_tokens").alias("spent"))
+        self.state.stage(batch_mass, "cursor")
+        self.state.stage_output(out)
         self.state.commit(epoch)
         rows.unpersist()
-        return out
+        return self.state.output(epoch)

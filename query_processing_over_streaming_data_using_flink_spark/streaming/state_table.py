@@ -1,20 +1,23 @@
 """Versioned bucketed state tables for foreachBatch pipelines — the
 state discipline shared by the Q3 IVM (`streaming/ivm.py`) and every
 other stateful face. This module is the only code that creates, moves,
-links or removes anything under a state dir (a face's own verdict log
-aside): faces read and stage DataFrames, the store owns the files.
+links or removes anything under a state dir: faces read and stage
+DataFrames, the store owns the files.
 
 Layout::
 
     state_dir/CURRENT                       pointer: live version + epoch
     state_dir/v<epoch>[c...]/<table>/bucket=N/part-*.parquet
     state_dir/_staged/<part>/table=<table>/bucket=N/part-*.parquet
+    state_dir/_staged/_output/part-*.parquet
+    state_dir/_outputs/epoch=<epoch>/part-*.parquet
 
 Contract:
 
 * `begin_epoch(epoch)` opens an epoch — or returns False for a
-  redelivered one, which the caller skips. Opening clears `_staged/`,
-  so a crashed attempt's staged files are never published.
+  redelivered one, which the caller skips. Opening clears `_staged/`
+  and any output past the committed epoch, so a crashed attempt's
+  files are never published.
 * `stage(df, table, part=...)` is one Spark write of `df`, partitioned
   by (table, bucket), into its own part-set. `df` carries a `table`
   column when one write stages several tables (the IVM's ΔC/ΔO
@@ -22,17 +25,23 @@ Contract:
   terms). `staged(table)` reads a table's staged delta back with the
   table's schema (None when nothing was staged); `staged_bytes` and
   `staged_rows` size it from the files alone, with no Spark job.
-* `commit(epoch)` builds the next version — staged buckets moved in,
-  untouched buckets carried over as hard links (metadata only, no row
-  data) — then flips the pointer. With ``append=True`` the staged
-  files of every part-set are ADDED to the carried-over bucket contents
-  instead of replacing them (log-structured state: per-epoch write cost
-  is the delta itself; readers aggregate, `compact` folds the log
-  down). A crash before the flip leaves the previous complete version
-  live; redelivered epochs are skipped, so replay is exactly-once.
-* `compact(transforms)` rewrites tables through per-table DataFrame
-  transforms (aggregate a log-structured table down, drop dead rows —
-  carry-over disabled so emptied buckets vanish), preserving the epoch.
+* `stage_output(df)` stages the epoch's output rows (a face's verdicts
+  or assignments, declared by the `output` schema); `output(epoch)`
+  reads one committed epoch's output back, `outputs()` every committed
+  epoch's, with an `epoch` column. A redelivered epoch returns its
+  recorded output instead of being re-applied.
+* `commit(epoch)` builds the next version — every old file carried
+  over as a hard link (metadata only, no row data), the staged files
+  of every part-set moved in next to them — moves the staged output to
+  `_outputs/epoch=<epoch>/`, then flips the pointer. State is
+  log-structured: per-epoch write cost is the delta itself, readers
+  aggregate, `compact` folds the log down. A crash before the flip
+  leaves the previous complete version live and its output unread;
+  redelivered epochs are skipped, so replay is exactly-once.
+* `compact(transforms)` is the only rewrite: it passes tables through
+  per-table DataFrame transforms (aggregate a log-structured table
+  down, drop dead rows — carry-over disabled so emptied buckets
+  vanish), preserving the epoch.
 * A `run_id` (e.g. the Structured Streaming checkpoint's UUID) can be
   bound via `check_run`; it is persisted in the pointer, and a
   mismatch HARD-FAILS instead of silently replay-skipping epochs from
@@ -135,14 +144,24 @@ def write_partitions(spark: SparkSession) -> int:
 class VersionedBucketedState:
     """Crash-atomic, hard-link-versioned, bucket-partitioned parquet
     state tables. `tables` maps table name -> DDL schema string whose
-    first column is ``bucket int`` (the partition column)."""
+    first column is ``bucket int`` (the partition column); `output` is
+    the DDL schema of the per-epoch output rows, if the face has any."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, tables: dict[str, str]) -> None:
+    def __init__(
+        self,
+        spark: SparkSession,
+        state_dir: str,
+        tables: dict[str, str],
+        output: str | None = None,
+    ) -> None:
         self.spark = spark
         self.state_dir = state_dir
         self.tables = dict(tables)
+        self.output_schema = output
         self._run_id: str | None = None
         self._staging = os.path.join(state_dir, "_staged")
+        self._staged_output = os.path.join(self._staging, "_output")
+        self._outputs = os.path.join(state_dir, "_outputs")
         # REENTRANT: read() takes it internally; external emission
         # timers may already hold it around a read.
         self.swap_lock = threading.RLock()
@@ -209,16 +228,17 @@ class VersionedBucketedState:
 
     # -- I/O -----------------------------------------------------------------
 
+    def _empty(self, schema: str) -> DataFrame:
+        # Zero partitions, built JVM-side: reading an absent table or
+        # output runs no Spark tasks (a local list would ship a Python RDD).
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
+
     def read(self, name: str) -> DataFrame:
         with self.swap_lock:
             _, ver = self._current()
         path = None if ver is None else os.path.join(ver, name)
         if path is None or not os.path.isdir(path):
-            # Zero partitions, built JVM-side: reading an absent table
-            # runs no Spark tasks (a local list would ship a Python RDD).
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), self.tables[name]
-            )
+            return self._empty(self.tables[name])
         # Explicit schema: a table dir can exist with zero bucket
         # subdirs (an epoch that touched nothing) — inference would
         # fail. Extra data columns in appended delta files are
@@ -236,6 +256,24 @@ class VersionedBucketedState:
             return 0
         return dir_bytes(os.path.join(ver, name))
 
+    def output(self, epoch_id: int) -> DataFrame:
+        """Committed epoch `epoch_id`'s output rows (empty if the epoch
+        is not committed or staged none)."""
+        path = os.path.join(self._outputs, f"epoch={epoch_id}")
+        if epoch_id > self.committed_epoch() or not os.path.isdir(path):
+            return self._empty(self.output_schema)
+        return self.spark.read.schema(self.output_schema).parquet(path)
+
+    def outputs(self) -> DataFrame:
+        """Every committed epoch's output rows, plus `epoch long`."""
+        schema = f"{self.output_schema}, epoch long"
+        if not os.path.isdir(self._outputs):
+            return self._empty(schema)
+        committed = self.committed_epoch()
+        return self.spark.read.schema(schema).parquet(self._outputs).filter(
+            F.col("epoch") <= committed
+        )
+
     def restrict(self, state: DataFrame, touched: DataFrame) -> DataFrame:
         """State rows in the buckets `touched` names (semi-join on the
         partition column → dynamic partition pruning skips the rest)."""
@@ -249,18 +287,23 @@ class VersionedBucketedState:
         """Open `epoch_id` for staging: False for a redelivered epoch
         (already committed — the caller skips it), else True with the
         staging area cleared, so files a crashed attempt staged are
-        never published by this one."""
-        if epoch_id <= self.committed_epoch():
+        never published by this one. An attempt that crashed at the
+        pointer flip has already moved its output in: outputs past the
+        committed epoch are removed too."""
+        committed = self.committed_epoch()
+        if epoch_id <= committed:
             return False
         shutil.rmtree(self._staging, ignore_errors=True)
+        for entry in os.listdir(self._outputs) if os.path.isdir(self._outputs) else []:
+            if int(entry.removeprefix("epoch=")) > committed:
+                shutil.rmtree(os.path.join(self._outputs, entry))
         return True
 
     def stage(self, df: DataFrame, table: str | None = None, part: str | None = None) -> None:
         """Stage `df` for the next commit as part-set `part` (default
         `table`): one Spark write partitioned by (table, bucket). Rows go
         to `table`, or — when it is None — to the table their own
-        `table` column names. In replace mode ONLY the touched buckets
-        need be present."""
+        `table` column names."""
         if table is not None:
             df = df.withColumn("table", F.lit(table))
         df.write.partitionBy("table", "bucket").mode("overwrite").parquet(
@@ -299,15 +342,19 @@ class VersionedBucketedState:
         """Rows of `name`'s staged delta, from parquet footers."""
         return sum(dir_rows(d) for d in self._staged_dirs(name))
 
+    def stage_output(self, df: DataFrame) -> None:
+        """Stage `df` (the `output` schema's columns) as the epoch's
+        output, published by its commit."""
+        df.write.mode("overwrite").parquet(self._staged_output)
+
     # -- commit --------------------------------------------------------------
 
-    def commit(self, epoch_id: int, append: bool = False) -> None:
-        """Publish staged buckets as version v<epoch>. Replace mode
-        (default): a staged bucket replaces the old bucket's contents.
-        Append mode: staged files are added to every old bucket's
-        hard-linked contents — per-epoch cost is O(delta) in data AND
-        in shuffles (no read-merge-rewrite of old state)."""
-        self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True, append=append)
+    def commit(self, epoch_id: int) -> None:
+        """Publish the staged files as version v<epoch>: they are added
+        to every old bucket's hard-linked contents, so per-epoch cost is
+        O(delta) in data AND in shuffles (no read-merge-rewrite of old
+        state). The staged output becomes `output(epoch_id)`."""
+        self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True)
 
     def compact(self, transforms: dict[str, Callable[[DataFrame], DataFrame]]) -> None:
         """Rewrite tables through their transform (aggregate a
@@ -323,9 +370,7 @@ class VersionedBucketedState:
             self.stage(fn(df) if fn is not None else df, name)
         self._commit_version(os.path.basename(ver) + "c", committed, carry_over=False)
 
-    def _commit_version(
-        self, version: str, epoch_id: int, carry_over: bool, append: bool = False
-    ) -> None:
+    def _commit_version(self, version: str, epoch_id: int, carry_over: bool) -> None:
         _, old_ver = self._current()
         new_ver = os.path.join(self.state_dir, version)
         # Debris from a crashed attempt at this same version.
@@ -333,16 +378,10 @@ class VersionedBucketedState:
         for name in self.tables:
             dst_table = os.path.join(new_ver, name)
             os.makedirs(dst_table)
-            staged: dict[str, list[str]] = {}
-            for tdir in self._staged_dirs(name):
-                for entry in os.listdir(tdir):
-                    if entry.startswith("bucket="):
-                        staged.setdefault(entry, []).append(os.path.join(tdir, entry))
             src_table = None if old_ver is None else os.path.join(old_ver, name)
             if carry_over and src_table and os.path.isdir(src_table):
                 for entry in os.listdir(src_table):
-                    # Replace mode: a staged bucket supersedes the old one.
-                    if not entry.startswith("bucket=") or (entry in staged and not append):
+                    if not entry.startswith("bucket="):
                         continue
                     sdir = os.path.join(src_table, entry)
                     ddir = os.path.join(dst_table, entry)
@@ -351,18 +390,21 @@ class VersionedBucketedState:
                         spath = os.path.join(sdir, fname)
                         if os.path.isfile(spath):
                             os.link(spath, os.path.join(ddir, fname))
-            for entry, sdirs in staged.items():
-                ddir = os.path.join(dst_table, entry)
-                for sdir in sdirs:
+            for tdir in self._staged_dirs(name):
+                for entry in (e for e in os.listdir(tdir) if e.startswith("bucket=")):
+                    sdir = os.path.join(tdir, entry)
+                    ddir = os.path.join(dst_table, entry)
                     if not os.path.isdir(ddir):
                         # A bucket new to this version: move it wholesale.
                         os.replace(sdir, ddir)
                         continue
-                    # Append mode, or a second part-set of the table:
-                    # staged part files land NEXT TO the bucket's files
+                    # Staged part files land NEXT TO the bucket's files
                     # (names are job-UUID-unique).
                     for fname in os.listdir(sdir):
                         os.replace(os.path.join(sdir, fname), os.path.join(ddir, fname))
+        if os.path.isdir(self._staged_output):
+            os.makedirs(self._outputs, exist_ok=True)
+            os.replace(self._staged_output, os.path.join(self._outputs, f"epoch={epoch_id}"))
         meta = {"epoch": epoch_id, "version": version}
         run_id = self._run_id if self._run_id is not None else self._pointer().get("run_id")
         if run_id is not None:

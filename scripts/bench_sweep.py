@@ -19,10 +19,7 @@ import json
 import os
 import sys
 
-# Replace (not just precede) this script's directory on the path: its
-# sibling scripts/profile.py would otherwise shadow the standard
-# library's `profile`, which pyspark imports through cProfile.
-sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run_once(cpus: int, sf_dir: str):

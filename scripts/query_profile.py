@@ -3,9 +3,9 @@ noop sink with bench.py's timing rule (`bench.timed`) and dump their
 `.explain("formatted")` plans.
 
 Usage:
-  python scripts/profile.py time  <sf_dir> name1,name2,...
-  python scripts/profile.py plan  <sf_dir> name1,name2,...   [suffix]
-  python scripts/profile.py all   <sf_dir>
+  python scripts/query_profile.py time  <sf_dir> name1,name2,...
+  python scripts/query_profile.py plan  <sf_dir> name1,name2,...   [suffix]
+  python scripts/query_profile.py all   <sf_dir>
 
 `plan` writes plans/profile/<name>_<suffix>.txt (suffix defaults to
 "before"). `time` prints one JSON line per query. `all` times every
@@ -22,10 +22,7 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# Replace (not just precede) this script's directory on the path: this
-# file would otherwise shadow the standard library's `profile`, which
-# pyspark imports through cProfile.
-sys.path[0] = REPO
+sys.path.insert(0, REPO)
 
 
 def main() -> None:

@@ -140,6 +140,16 @@ def test_only_the_stream_driver_binds_state_to_a_run():
     assert not offenders, "run binding outside the stream driver:\n" + "\n".join(offenders)
 
 
+def test_no_script_shadows_a_stdlib_module():
+    """`python scripts/x.py` puts `scripts/` first on `sys.path`, so a
+    script named like a standard-library module replaces it for every
+    import in that process — `scripts/profile.py` once broke pyspark's
+    cProfile import in all its siblings."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = {f[:-3] for f in os.listdir(os.path.join(repo, "scripts")) if f.endswith(".py")}
+    assert not names & sys.stdlib_module_names, sorted(names & sys.stdlib_module_names)
+
+
 def test_complex_column_lint_catches_planted_offender(spark):
     """The round-4 red row (`embedding_label_centroids`) was a correct
     query whose array<double> column crashed the driver's pandas
