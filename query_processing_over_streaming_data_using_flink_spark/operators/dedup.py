@@ -27,7 +27,6 @@ from query_processing_over_streaming_data_using_flink_spark.operators.text impor
     doc_fingerprint,
     shingle_hash_arrays,
     shingle_hash_rows,
-    shingle_hashes,
     tokens,
 )
 from query_processing_over_streaming_data_using_flink_spark.functions.scalar import md5_hash64
@@ -67,25 +66,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 def _perm_expr(h: Column, a: int, b: int) -> Column:
     return (F.lit(a) * (h % MINHASH_P) + F.lit(b)) % MINHASH_P
-
-
-def minhash_signature(text: Column) -> Column:
-    """Array of MinHash values, one per permutation, over distinct
-    3-gram shingle hashes — as a single column expression.
-
-    NOTE: expression-level only (for small/ad-hoc use). The array
-    constructor duplicates the shingle-hash subtree once per
-    permutation (no cross-element CSE in Catalyst), so for real
-    datasets use `minhash_signatures`, which hashes each shingle once
-    and takes the 12 mins in one aggregation pass (~25× faster)."""
-    hashes = shingle_hashes(text)
-
-    def perm(a: int, b: int):
-        return lambda h: _perm_expr(h, a, b)
-
-    return F.array(
-        *[F.array_min(F.transform(hashes, perm(a, b))) for a, b in MINHASH_PERMS]
-    )
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:

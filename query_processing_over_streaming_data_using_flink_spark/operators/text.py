@@ -137,19 +137,6 @@ def shingles(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingle_hashes(text: Column, k: int = 3) -> Column:
-    """Distinct 60-bit hashes of the k-gram shingles (shared md5-based
-    hash — DuckDB-reproducible), as a single column expression.
-
-    NOTE: expression-level only. Each element_at() inside the transform
-    lambda re-evaluates the tokenizer subtree, making this O(tokens²)
-    per document — use `shingle_hash_rows` (relational, one hash per
-    shingle) for real datasets."""
-    return F.array_distinct(
-        F.transform(shingles(tokens(text), k), lambda s: md5_hash64(s))
-    )
-
-
 def shingle_hash_arrays(docs, k: int = 3):
     """Per-doc distinct shingle-hash ARRAY — (doc_id, hs array<long>) —
     computed entirely MAP-SIDE: tokenize once into a materialized array

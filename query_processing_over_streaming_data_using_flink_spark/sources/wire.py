@@ -78,11 +78,6 @@ def read_streamdata(spark: SparkSession, path: str) -> DataFrame:
     return parse_stream_lines(spark.read.text(path))
 
 
-def read_streamdata_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming read of a directory of wire-format files."""
-    return parse_stream_lines(spark.readStream.text(path))
-
-
 def format_stream_lines(changelog: DataFrame) -> DataFrame:
     """Render the engine's changelog as wire lines (single string
     column `value`, ready for `df.write.text`). Projected fields land

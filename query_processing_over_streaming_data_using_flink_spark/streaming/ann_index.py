@@ -20,10 +20,12 @@ Design:
 * each micro-batch assigns its vectors to their nearest centroid (one
   broadcast join against ≤ `cells` centroid rows — no corpus shuffle)
   and APPENDS them to the inverted lists: state table `inv` is
-  bucketed BY CELL, so the append commit writes only the delta
+  bucketed BY CELL, so the append commit writes only the delta (one
+  file per touched cell: it is hashed on `cell` before the write)
   and a search's cell probes prune to `nprobe` bucket directories;
-* vectors are immutable (no retraction), so the log-structured state
-  needs no compaction — per-epoch cost is exactly the new vectors;
+* vectors are immutable (no retraction), so the tables declare no
+  fold — per-epoch cost is exactly the new vectors, and the store's
+  compaction only merges a cell's files once there are too many;
 * replayed epochs are skipped via the store's committed-epoch pointer:
   exactly-once index maintenance under foreachBatch redelivery.
 
@@ -45,6 +47,7 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.drain impo
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
+    write_partitions,
 )
 
 
@@ -139,7 +142,8 @@ class IncrementalIVFIndex:
                 if self._bootstrap_cents is not None
                 else sim.ivf_centroids(batch, cells=self.cells)
             )
-            self.state.stage(self._cents_long(cents), "cents")
+            # KB-sized quantizer tables: one file, not one per partition.
+            self.state.stage(self._cents_long(cents).repartition(1), "cents")
         else:
             cents = self.centroids()
         corpus = batch.select(
@@ -152,7 +156,7 @@ class IncrementalIVFIndex:
             F.col("vec").alias("n_vec"),
             F.col("cell").cast("int").alias("cell"),
         )
-        self.state.stage(delta, "inv")
+        self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
         self.state.commit(epoch_id)
@@ -363,8 +367,9 @@ class IncrementalIVFPQIndex:
                 if self._bootstrap_books is not None
                 else sim.pq_codebooks(batch, self.m)
             )
-            self.state.stage(self._cents_long(cents), "cents")
-            self.state.stage(self._books_long(books), "books")
+            # KB-sized quantizer tables: one file, not one per partition.
+            self.state.stage(self._cents_long(cents).repartition(1), "cents")
+            self.state.stage(self._books_long(books).repartition(1), "books")
         else:
             cents = self.centroids()
             books = self.books()
@@ -383,7 +388,7 @@ class IncrementalIVFPQIndex:
                 F.col("code").cast("int").alias("code"),
             )
         )
-        self.state.stage(delta, "inv")
+        self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
         self.state.commit(epoch_id)
 
     # -- maintenance ---------------------------------------------------------

@@ -95,9 +95,6 @@ class IncrementalExactDedupIndex:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def canonicals(self) -> DataFrame:
         """(fp, canonical_id, group_size) over LIVE docs — bit-equal to
         the batch `exact_dedup` group table over the net corpus."""
@@ -187,9 +184,6 @@ class IncrementalEvalMinhash:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
-
-    def compact(self) -> None:
-        self.agg.compact()
 
     def live(self) -> DataFrame:
         """(doc_id, sh, sig) of the net (insert − retract) eval set."""
@@ -317,9 +311,6 @@ class IncrementalDedupTelemetry:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def live(self) -> DataFrame:
         """(doc_id, source, sh, sig) of the net (insert − retract)
         corpus."""
@@ -403,11 +394,6 @@ class StreamingCurationPipeline:
         self.eval_mh.process_batch(
             batch.filter((F.col("doc_id") % 7) == 0), epoch_id
         )
-
-    def compact(self) -> None:
-        self.kn.compact()
-        self.dedup.compact()
-        self.eval_mh.compact()
 
     def gate(self, docs: DataFrame) -> DataFrame:
         """Apply the batch pipeline's gate chain to a documents frame

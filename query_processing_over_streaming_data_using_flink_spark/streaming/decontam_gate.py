@@ -85,9 +85,6 @@ class IncrementalNgramDecontam:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def live_grams(self) -> DataFrame:
         """Distinct 13-gram hashes of the net (insert − retract) eval
         corpus — the gate set."""

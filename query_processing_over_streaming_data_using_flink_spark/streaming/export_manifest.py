@@ -89,9 +89,6 @@ class IncrementalShardManifest:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def manifest(self) -> DataFrame:
         """(shard_id, n_docs, total_chars, content_fp) for live shards —
         bit-equal to the batch `export_shard_manifest` (minus order_fp)

@@ -12,7 +12,8 @@ the current view is the fold of the state log, read on demand.
 
 Shares ALL state mechanics with the join IVM (versioned dirs,
 hard-link carry-over, atomic pointer commit, replay skip, run-id
-binding, GC, scheduled compaction) via `VersionedBucketedState` —
+binding, GC, compaction scheduled by the store) via
+`VersionedBucketedState` —
 demonstrating the state store is a framework, not a Q3 one-off.
 
 Reference parity: the reference maintains exactly one aggregate this
@@ -22,12 +23,14 @@ Delete); this generalizes it to arbitrary grouped integer measures.
 
 At scale: the per-epoch shuffle is bounded by the number of DISTINCT
 GROUPS IN THE BATCH (not state size, not corpus size); state grows by
-touched groups per epoch and `compact()` folds it back to one row per
-live group on a schedule.
+touched groups per epoch, and the store's compaction folds it back to
+one row per live group (`_fold`, declared with the table) once a bucket
+holds too many files.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,7 +71,7 @@ class IncrementalGroupedAgg:
         ``pmod(sum(decimal), p)`` so the stored value stays a bounded
         residue across any number of epochs. The override MUST still be
         associative/commutative over the per-epoch delta rows (it is
-        applied at both ``compact`` and ``result``), and must map an
+        applied at both compaction and ``result``), and must map an
         all-cancelled group to integer 0 so liveness filtering works.
     """
 
@@ -90,9 +93,11 @@ class IncrementalGroupedAgg:
         self.schema = schema
         self.delta_fn = delta_fn
         self.fold_exprs = dict(fold_exprs or {})
-        self.state = VersionedBucketedState(spark, state_dir, {self.TABLE: schema})
+        self.state = VersionedBucketedState(
+            spark, state_dir, {self.TABLE: schema}, folds={self.TABLE: self._fold}
+        )
 
-    def _folds(self) -> list[F.Column]:
+    def _measures(self) -> list[F.Column]:
         return [
             self.fold_exprs[m](m).alias(m)
             if m in self.fold_exprs
@@ -117,26 +122,18 @@ class IncrementalGroupedAgg:
         )
         self.state.commit(epoch_id)
 
-    def compact(self) -> None:
-        """Scheduled OPTIMIZE: fold the log to one row per group, drop
-        groups whose every measure cancelled to zero."""
-        sums = self._folds()
-        alive = None
-        for m in self.measure_cols:
-            cond = F.col(m) != 0
-            alive = cond if alive is None else (alive | cond)
-        self.state.compact(
-            {
-                self.TABLE: lambda df: (
-                    df.groupBy("bucket", *self.group_cols).agg(*sums).filter(alive)
-                )
-            }
+    def _fold(self, df: DataFrame) -> DataFrame:
+        """Compaction fold: one row per group, groups whose every
+        measure cancelled to zero dropped."""
+        alive = functools.reduce(
+            lambda a, b: a | b, [F.col(m) != 0 for m in self.measure_cols]
         )
+        return df.groupBy("bucket", *self.group_cols).agg(*self._measures()).filter(alive)
 
     def result(self) -> DataFrame:
         """Current view: fold the state log per group. O(state) read,
         partial aggregation map-side per bucket."""
-        return self.state.read(self.TABLE).groupBy(*self.group_cols).agg(*self._folds())
+        return self.state.read(self.TABLE).groupBy(*self.group_cols).agg(*self._measures())
 
 
 # ---------------------------------------------------------------------------

@@ -47,8 +47,9 @@ State discipline (LOG-STRUCTURED):
   MULTISETS: the net weight of a key is the SUM over its rows, every
   delta join is linear in each side, so probing un-netted rows is
   exactly correct. Per-epoch cost: zero state-side shuffles, O(delta)
-  data written. `compact_state` (scheduled, not per-epoch) folds the
-  log back to one net row per key and reclaims cancelled keys.
+  data written. Compaction folds the log back to one net row per key
+  and reclaims cancelled keys; the store runs it once a bucket holds
+  too many files, `compact_state` on demand.
 * Empty terms are skipped: a micro-batch carrying no customer events
   contributes nothing through any ΔC term, and a term whose old-state
   side is still empty (Δ⋈∅ = ∅, e.g. every state probe of a stream's
@@ -80,7 +81,7 @@ from __future__ import annotations
 
 import threading
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
@@ -107,6 +108,22 @@ def _selective(df: DataFrame, key: str) -> DataFrame:
     counts as a 'selective' predicate for Spark's PartitionPruning rule,
     which is what arms dynamic partition pruning on the state scans."""
     return df.filter(F.col(key) >= F.lit(-(1 << 62)))
+
+
+def _net(weight: str) -> Callable[[DataFrame], DataFrame]:
+    """Compaction fold of a weight multiset: one row per bucket and key
+    (every column but `bucket` and `weight`), cancelled keys dropped —
+    this reclaims what the append-only commits leave behind."""
+
+    def fold(df: DataFrame) -> DataFrame:
+        keys = [c for c in df.columns if c not in ("bucket", weight)]
+        return (
+            df.groupBy("bucket", *keys)
+            .agg(F.sum(weight).alias(weight))
+            .filter(F.col(weight) != 0)
+        )
+
+    return fold
 
 
 @contextmanager
@@ -158,6 +175,14 @@ class IncrementalQ3:
         "l": "bucket int, l_orderkey long, linenumber int, w_cents long",
         "r": "bucket int, l_orderkey long, o_orderdate timestamp_ntz, cents long",
     }
+    # Every table is a weight multiset: compaction nets its weight per key.
+    _FOLDS = {
+        "c": _net("w_c"),
+        "o": _net("w_o"),
+        "co": _net("w"),
+        "l": _net("w_cents"),
+        "r": _net("cents"),
+    }
 
     def __init__(
         self,
@@ -176,35 +201,13 @@ class IncrementalQ3:
         self.cutoff = cutoff
         # All state mechanics (versioned dirs, hard-link carry-over,
         # atomic pointer commit, GC) live in the shared helper.
-        self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
+        self.state = VersionedBucketedState(spark, state_dir, self._TABLES, folds=self._FOLDS)
         self.swap_lock = self.state.swap_lock
 
     def compact_state(self) -> None:
-        """Maintenance: fold each log-structured table down to one net
-        row per key and drop zero-net-weight keys. The per-epoch commit
-        deliberately only APPENDS (O(delta)); under churn the weight
-        multisets grow with total events, and cancelled keys linger —
-        this is the periodic OPTIMIZE that folds and reclaims them.
-        O(state) — run on a schedule, not per epoch; crash-safe via the
-        version commit (carry-over disabled: emptied buckets vanish),
-        epoch id preserved so the stream continues afterwards."""
-
-        def fold(group_keys: list[str], weight: str):
-            return (
-                lambda df: df.groupBy(*group_keys)
-                .agg(F.sum(weight).alias(weight))
-                .filter(F.col(weight) != 0)
-            )
-
-        self.state.compact(
-            {
-                "c": fold(["bucket", "c_custkey"], "w_c"),
-                "o": fold(["bucket", "o_orderkey", "o_custkey", "o_orderdate"], "w_o"),
-                "co": fold(["bucket", "o_orderkey", "o_orderdate"], "w"),
-                "l": fold(["bucket", "l_orderkey", "linenumber"], "w_cents"),
-                "r": fold(["bucket", "l_orderkey", "o_orderdate"], "cents"),
-            }
-        )
+        """Fold every table to one net row per key now (the store also
+        compacts by itself once a bucket holds too many files)."""
+        self.state.compact()
 
     # -- delta extraction ----------------------------------------------------
 
@@ -244,7 +247,7 @@ class IncrementalQ3:
         changelog an insert and its delete are `window` positions apart
         (≫ one micro-batch), so a per-batch groupBy would cancel
         nothing while costing an extra shuffle. Netting happens where it
-        reclaims rows: `compact_state`.
+        reclaims rows: in compaction (`_net`).
 
         Returns the read-back behind a selective predicate — the shape
         that deterministically arms dynamic partition pruning on every
@@ -342,10 +345,11 @@ class IncrementalQ3:
 
         # Everything is staged — the append commit hard-links
         # every previous state file and moves the staged delta files in
-        # next to them (pure filesystem metadata; no further Spark
-        # jobs), then atomically publishes the epoch.
+        # next to them (filesystem metadata), then atomically publishes
+        # the epoch. Its only Spark jobs are a compaction, when the store
+        # runs one (a bucket past its file bound); `compacted` says so.
         with _phase(phase_sec, "commit"):
-            self.state.commit(epoch_id)
+            compacted = self.state.commit(epoch_id)
         self.spark.sparkContext.setJobDescription(None)
         events = rows["c"] + rows["o"] + rows["l"]
         self.last_stats = {
@@ -357,6 +361,7 @@ class IncrementalQ3:
             "delta_co": rows["co"],
             "delta_r": rows["r"],
             "state_rows_appended": events + rows["co"] + rows["r"],
+            "compacted": compacted,
             "phase_sec": phase_sec,
         }
 
@@ -419,7 +424,7 @@ class IncrementalQ3:
             # with the ΔCO spill and the ΔCO-driven terms (guide §2.6:
             # overlap independent jobs; the state is a weight multiset,
             # so two appended part-sets sum to exactly what one folded
-            # write would; cross-part netting happens in compact_state).
+            # write would; cross-part netting happens in compaction).
             # Pre-fold the delta before it joins the result log (many
             # lineitems per order collapse to one row per group). The
             # repartition keys the JOIN KEY, so partition = bucket mod n
@@ -640,10 +645,10 @@ def run_streaming_q3(
     instead of silently dropping every batch — wipe state and
     checkpoint together.
 
-    `compact_every=N` folds the log-structured state back to net rows
-    after every N applied epochs — the scheduled OPTIMIZE that keeps
-    read amplification bounded on long-running streams (the append-only
-    commit itself never rewrites old state).
+    The state store compacts by itself once a commit leaves too many
+    files in a bucket, which bounds read amplification on long-running
+    streams. `compact_every=N` adds a fixed schedule on top: it folds
+    the state back to net rows after every N applied epochs.
     """
     pipe = IncrementalQ3(
         spark, state_dir, broadcast_threshold_bytes=broadcast_threshold_bytes

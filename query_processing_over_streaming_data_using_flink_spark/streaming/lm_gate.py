@@ -66,9 +66,6 @@ class IncrementalBigramLM:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def model(self) -> tuple[DataFrame, DataFrame, DataFrame]:
         """(bigram_counts, context_counts, vocab) — live view of the
         maintained model, bit-equal to `lm.bigram_lm_train` over the
@@ -111,9 +108,6 @@ class IncrementalKneserNeyLM:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
-
-    def compact(self) -> None:
-        self.agg.compact()
 
     def model(
         self,
@@ -304,9 +298,6 @@ class IncrementalDsirModel:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
-
-    def compact(self) -> None:
-        self.agg.compact()
 
     def counts(self) -> DataFrame:
         """(b, c_q, c_p) live bucket histograms (nonzero raw mass)."""

@@ -15,7 +15,8 @@ fills, while ingest continues.
 State discipline (the engine's standard): the `cursor` table of the
 shared crash-atomic `VersionedBucketedState` gets one row per language
 per epoch (that epoch's token mass); a lane's cursor is the sum of its
-rows, and `compact` folds them to one. Each epoch's assignments
+rows, and compaction folds them to one (`_fold`, the table's declared
+fold). Each epoch's assignments
 (doc → seq) are its store output, so a redelivered epoch returns its
 recorded assignments instead of double-spending the budget —
 exactly-once packing under foreachBatch redelivery. Per-epoch cost is
@@ -62,17 +63,14 @@ class IncrementalSequencePacker:
         self.spark = spark
         self.budget = budget_tokens
         self.merges = merges
-        self.state = VersionedBucketedState(spark, state_dir, self._TABLES, output=self._OUTPUT)
+        self.state = VersionedBucketedState(
+            spark, state_dir, self._TABLES, output=self._OUTPUT, folds={"cursor": _fold}
+        )
 
     def packed_df(self) -> DataFrame:
         """Everything committed so far (doc_id, lang, n_tokens, seq_id,
         seq_offset, epoch)."""
         return self.state.outputs()
-
-    def compact(self) -> None:
-        """Maintenance: fold each lane's per-epoch cursor rows into one
-        (crash-safe version flip, epoch preserved)."""
-        self.state.compact({"cursor": _fold})
 
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Pack one micro-batch of (doc_id, lang, text) rows. Returns

@@ -38,10 +38,19 @@ Contract:
   aggregate, `compact` folds the log down. A crash before the flip
   leaves the previous complete version live and its output unread;
   redelivered epochs are skipped, so replay is exactly-once.
-* `compact(transforms)` is the only rewrite: it passes tables through
-  per-table DataFrame transforms (aggregate a log-structured table
-  down, drop dead rows — carry-over disabled so emptied buckets
-  vanish), preserving the epoch.
+* Each table declares its fold once, when the store is built
+  (`folds`: aggregate a log-structured table to net rows, drop dead
+  keys); a table with no fold is rewritten as it is. `compact()` is
+  the only rewrite: it folds every table, repartitioned on `bucket`
+  so each bucket comes out as ONE file, into version `v<epoch>c`
+  (carry-over disabled, so emptied buckets vanish), preserving the
+  epoch. The store schedules it: after the pointer flip, a commit
+  that leaves more than `_MAX_FILES_PER_BUCKET` parquet files in any
+  bucket compacts, as an LSM-tree merges its runs, and returns True
+  (the count comes from the commit's own link-and-move pass). A crash
+  at the compaction's flip leaves the epoch committed on the
+  uncompacted version; the next commit compacts again. `compact(transforms)`
+  overrides folds per table (the ANN index's re-cluster).
 * A `run_id` (e.g. the Structured Streaming checkpoint's UUID) can be
   bound via `check_run`; it is persisted in the pointer, and a
   mismatch HARD-FAILS instead of silently replay-skipping epochs from
@@ -56,7 +65,8 @@ loss.
 Reader window: `read` resolves the version under `swap_lock`, but the
 returned DataFrame is lazy — GC keeps the current version plus the two
 most recent predecessors, so a reader must materialize within two
-commits of issue or re-issue the read.
+new versions of issue (one commit that compacts makes two) or
+re-issue the read.
 
 On a real cluster the same pipeline swaps this directory dance for
 Delta/Iceberg ``MERGE INTO``; the bucketing & touched-partition
@@ -71,6 +81,7 @@ import os
 import re
 import shutil
 import threading
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -87,6 +98,12 @@ _POINTER = "CURRENT"
 # Current version + this many predecessors survive GC (in-flight lazy
 # readers straddling a commit keep resolving).
 _KEEP_PREDECESSORS = 2
+# A commit that leaves more parquet files than this in any bucket
+# compacts. Every read opens every file: on a 4-core host an sf0.01
+# Q3 epoch took 1.54 s over 12 files per bucket and 2.12 s over 24,
+# against ~1.35 s compacted, while one compaction costs 5-7 s. A face
+# stages at most one file per bucket per epoch, the Q3 IVM two.
+_MAX_FILES_PER_BUCKET = 16
 
 
 def dir_bytes(path: str) -> int:
@@ -144,8 +161,9 @@ def write_partitions(spark: SparkSession) -> int:
 class VersionedBucketedState:
     """Crash-atomic, hard-link-versioned, bucket-partitioned parquet
     state tables. `tables` maps table name -> DDL schema string whose
-    first column is ``bucket int`` (the partition column); `output` is
-    the DDL schema of the per-epoch output rows, if the face has any."""
+    first column is ``bucket int`` (the partition column); `folds` maps
+    a table to its compaction fold; `output` is the DDL schema of the
+    per-epoch output rows, if the face has any."""
 
     def __init__(
         self,
@@ -153,10 +171,12 @@ class VersionedBucketedState:
         state_dir: str,
         tables: dict[str, str],
         output: str | None = None,
+        folds: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
     ) -> None:
         self.spark = spark
         self.state_dir = state_dir
         self.tables = dict(tables)
+        self.folds = dict(folds or {})
         self.output_schema = output
         self._run_id: str | None = None
         self._staging = os.path.join(state_dir, "_staged")
@@ -349,29 +369,50 @@ class VersionedBucketedState:
 
     # -- commit --------------------------------------------------------------
 
-    def commit(self, epoch_id: int) -> None:
+    def commit(self, epoch_id: int) -> bool:
         """Publish the staged files as version v<epoch>: they are added
         to every old bucket's hard-linked contents, so per-epoch cost is
         O(delta) in data AND in shuffles (no read-merge-rewrite of old
-        state). The staged output becomes `output(epoch_id)`."""
-        self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True)
+        state). The staged output becomes `output(epoch_id)`. Compacts
+        when a bucket now holds more than `_MAX_FILES_PER_BUCKET` files,
+        and returns whether it did."""
+        most = self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True)
+        if most <= _MAX_FILES_PER_BUCKET:
+            return False
+        self.compact()
+        return True
 
-    def compact(self, transforms: dict[str, Callable[[DataFrame], DataFrame]]) -> None:
-        """Rewrite tables through their transform (aggregate a
-        log-structured table to net rows, drop dead keys); emptied
-        buckets vanish (no carry-over). Epoch id preserved."""
+    def compact(
+        self, transforms: dict[str, Callable[[DataFrame], DataFrame]] | None = None
+    ) -> None:
+        """Rewrite every table through its declared fold, or its entry
+        in `transforms`, one file per bucket; emptied buckets vanish (no
+        carry-over). Epoch id preserved."""
         committed, ver = self._current()
         if ver is None:
             return
         shutil.rmtree(self._staging, ignore_errors=True)
+        transforms = transforms or {}
         for name in self.tables:
-            fn = transforms.get(name)
+            # Hashed on `bucket`, every bucket is one task's, so it is
+            # written as one file.
             df = self.read(name)
-            self.stage(fn(df) if fn is not None else df, name)
+            if name in transforms:
+                # A transform may move rows to other buckets.
+                df = transforms[name](df).repartition("bucket")
+            else:
+                # A fold groups by bucket and keys, which this
+                # partitioning already satisfies: one exchange, not two.
+                df = self.folds.get(name, lambda d: d)(df.repartition("bucket"))
+            self.stage(df, name)
         self._commit_version(os.path.basename(ver) + "c", committed, carry_over=False)
 
-    def _commit_version(self, version: str, epoch_id: int, carry_over: bool) -> None:
+    def _commit_version(self, version: str, epoch_id: int, carry_over: bool) -> int:
+        """Build `version` from the old one and the staged files, flip
+        the pointer to it; returns the most parquet files any bucket of
+        it holds."""
         _, old_ver = self._current()
+        files: Counter[str] = Counter()  # parquet files per new bucket dir
         new_ver = os.path.join(self.state_dir, version)
         # Debris from a crashed attempt at this same version.
         shutil.rmtree(new_ver, ignore_errors=True)
@@ -390,17 +431,20 @@ class VersionedBucketedState:
                         spath = os.path.join(sdir, fname)
                         if os.path.isfile(spath):
                             os.link(spath, os.path.join(ddir, fname))
+                            files[ddir] += fname.endswith(".parquet")
             for tdir in self._staged_dirs(name):
                 for entry in (e for e in os.listdir(tdir) if e.startswith("bucket=")):
                     sdir = os.path.join(tdir, entry)
                     ddir = os.path.join(dst_table, entry)
+                    staged = os.listdir(sdir)
+                    files[ddir] += sum(f.endswith(".parquet") for f in staged)
                     if not os.path.isdir(ddir):
                         # A bucket new to this version: move it wholesale.
                         os.replace(sdir, ddir)
                         continue
                     # Staged part files land NEXT TO the bucket's files
                     # (names are job-UUID-unique).
-                    for fname in os.listdir(sdir):
+                    for fname in staged:
                         os.replace(os.path.join(sdir, fname), os.path.join(ddir, fname))
         if os.path.isdir(self._staged_output):
             os.makedirs(self._outputs, exist_ok=True)
@@ -430,3 +474,4 @@ class VersionedBucketedState:
             )
             for entry in versions[_KEEP_PREDECESSORS:]:
                 shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
+        return max(files.values(), default=0)

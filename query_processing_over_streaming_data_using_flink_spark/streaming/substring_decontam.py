@@ -91,9 +91,6 @@ class IncrementalSubstringDecontam:
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         self.agg.process_batch(batch, epoch_id)
 
-    def compact(self) -> None:
-        self.agg.compact()
-
     def live_shingles(self) -> DataFrame:
         """(doc_h, pos_h, h) of the net (insert − retract) eval corpus
         — the history side the batch machinery joins against."""

@@ -25,6 +25,7 @@ conjunction of the same lineage is the registered
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import tempfile
@@ -40,11 +41,8 @@ from query_processing_over_streaming_data_using_flink_spark.session import get_s
 from query_processing_over_streaming_data_using_flink_spark.sources.catalog import load_table
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        tempfile.gettempdir(), "curated_corpus"
-    )
+def main(sf_dir: str | None, out_dir: str) -> None:
+    sf_dir = sf_dir or "/root/testdata/sf0.01"
     spark = get_spark("curate_demo")
     spark.sparkContext.setLogLevel("ERROR")
     docs = load_table(spark, sf_dir, "documents")
@@ -176,15 +174,14 @@ def main() -> None:
     )
 
 
-def stream_main() -> None:
+def stream_main(sf_dir: str | None) -> None:
     """`--stream`: the CONTINUOUS-ingest deployment form — drain the
     corpus as micro-batches into the composed live state
     (`streaming/curation.py`), gate with the live models, and prove
     the export manifest equals the batch `curation_pipeline_full`
     artifact row-for-row (the audit a streaming deployment diffs
     instead of re-running the batch chain)."""
-    args = [a for a in sys.argv[1:] if a != "--stream"]
-    sf_dir = args[0] if args else "/root/testdata/sf0.001"
+    sf_dir = sf_dir or "/root/testdata/sf0.001"
     spark = get_spark("curate_demo_stream")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -221,7 +218,16 @@ def stream_main() -> None:
 
 
 if __name__ == "__main__":
-    if "--stream" in sys.argv[1:]:
-        stream_main()
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("sf_dir", nargs="?", help="default sf0.01, or sf0.001 with --stream")
+    ap.add_argument(
+        "out_dir", nargs="?", default=os.path.join(tempfile.gettempdir(), "curated_corpus")
+    )
+    ap.add_argument("--stream", action="store_true", help="the continuous-ingest form")
+    args = ap.parse_args()
+    if args.stream:
+        stream_main(args.sf_dir)
     else:
-        main()
+        main(args.sf_dir, args.out_dir)

@@ -9,6 +9,7 @@ Usage: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -17,7 +18,6 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 # (name, headline, what to look for)
 SELECTED = [
@@ -134,7 +134,7 @@ SELECTED = [
 ]
 
 
-def main() -> int:
+def main(sf_dir: str) -> int:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -152,7 +152,7 @@ def main() -> int:
     out = [
         "# PLANS — formatted physical plans of the headline queries",
         "",
-        f"Generated by `scripts/dump_plans.py` at `{SF_DIR}` "
+        f"Generated by `scripts/dump_plans.py` at `{sf_dir}` "
         "(plan SHAPE is scale-independent; AQE re-sizes at runtime). "
         "Read these next to SCALING.md: every claim there about pushdown, "
         "broadcasts, partial aggregation and top-k tails is visible here.",
@@ -166,7 +166,7 @@ def main() -> int:
         # curation pipeline) dump their real subtree instead of a
         # single `Scan ExistingRDD` (round-11 verdict).
         with unpinned_for_explain():
-            df = queries[name](spark, SF_DIR)
+            df = queries[name](spark, sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
@@ -189,4 +189,6 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    raise SystemExit(main(ap.parse_args().sf_dir))

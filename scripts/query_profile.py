@@ -17,6 +17,7 @@ For the streaming IVM's per-phase, per-job breakdown use
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -26,8 +27,17 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    mode = sys.argv[1]
-    sf_dir = sys.argv[2]
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("mode", choices=["time", "plan", "all"])
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="?", help="comma-separated query names (not for `all`)")
+    ap.add_argument("suffix", nargs="?", default="before", help="plan file suffix")
+    args = ap.parse_args()
+    mode, sf_dir = args.mode, args.sf_dir
+    if mode != "all" and not args.names:
+        ap.error(f"{mode} needs a list of query names")
     import bench
     from query_processing_over_streaming_data_using_flink_spark import registry
     from query_processing_over_streaming_data_using_flink_spark.session import get_spark
@@ -38,7 +48,7 @@ def main() -> None:
     if mode == "all":
         names = list(queries)
     else:
-        names = [n.strip() for n in sys.argv[3].split(",") if n.strip()]
+        names = [n.strip() for n in args.names.split(",") if n.strip()]
 
     unknown = [n for n in names if n not in queries]
     if unknown:
@@ -52,7 +62,7 @@ def main() -> None:
             unpinned_for_explain,
         )
 
-        suffix = sys.argv[4] if len(sys.argv) > 4 else "before"
+        suffix = args.suffix
         outdir = os.path.join(REPO, "plans", "profile")
         os.makedirs(outdir, exist_ok=True)
         for n in names:

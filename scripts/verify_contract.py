@@ -8,6 +8,7 @@ Usage: python scripts/verify_contract.py [sf_dir] [--only name1,name2]
 
 from __future__ import annotations
 
+import argparse
 import importlib.util
 import math
 import os
@@ -17,13 +18,6 @@ import time
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ONLY: set[str] | None = None
-_args = sys.argv[1:]
-if "--only" in _args:
-    i = _args.index("--only")
-    ONLY = set(_args[i + 1].split(","))
-    _args = _args[:i] + _args[i + 2:]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -98,6 +92,10 @@ def _shared_oracle_rewrites(
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", type=lambda s: set(s.split(",")), help="name1,name2,...")
+    args = ap.parse_args()
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
@@ -128,10 +126,10 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     qs, oracles = mod.queries(), mod.oracle_sql()
-    selected = [n for n in qs if ONLY is None or n in ONLY]
+    selected = [n for n in qs if args.only is None or n in args.only]
     rewrites, setup = _shared_oracle_rewrites(oracles, selected)
     for tname, create_sql in setup:
         t0 = time.time()
@@ -141,14 +139,14 @@ def main() -> int:
     oracles = {**oracles, **rewrites}
     failures = []
     for name, fn in sorted(qs.items()):
-        if ONLY is not None and name not in ONLY:
+        if args.only is not None and name not in args.only:
             continue
         t0 = time.time()
         # One query crashing (driver OOM, analysis error) must produce a
         # red row, not kill the remaining sweep — found the hard way when
         # an exponential plan tree OOMed the driver mid-sweep (round 8).
         try:
-            _check_one(spark, con, oracles, name, fn, failures, t0)
+            _check_one(spark, con, oracles, name, fn, failures, t0, args.sf_dir)
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
             msg = str(exc).splitlines()[0][:200] if str(exc) else type(exc).__name__
@@ -169,8 +167,8 @@ def main() -> int:
     return 1 if failures else 0
 
 
-def _check_one(spark, con, oracles, name, fn, failures, t0) -> None:
-        sdf = fn(spark, SF_DIR)
+def _check_one(spark, con, oracles, name, fn, failures, t0, sf_dir) -> None:
+        sdf = fn(spark, sf_dir)
         # Schema lint (round-4 lesson): the round driver canonicalizes
         # results with pandas sort/factorize, which throws on list-valued
         # cells — a top-level array/map/struct column is an automatic red

@@ -49,7 +49,7 @@ def test_streamed_gate_equals_batch_query(spark, tmp_path):
     assert got == want
     assert any(r[3] for r in got), "fixture should contain planted collisions"
     # compaction folds the gram log — same gate
-    pipe.compact()
+    pipe.agg.state.compact()
     assert _rows(pipe.flag(train_docs)) == want
 
 

@@ -150,6 +150,23 @@ def test_no_script_shadows_a_stdlib_module():
     assert not names & sys.stdlib_module_names, sorted(names & sys.stdlib_module_names)
 
 
+def test_every_script_prints_usage_on_help():
+    """Every script parses its arguments before it starts Spark, so
+    `--help` prints usage and exits 0 instead of a traceback."""
+    import subprocess
+
+    scripts = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+    broken = []
+    for f in sorted(f for f in os.listdir(scripts) if f.endswith(".py")):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(scripts, f), "--help"],
+            capture_output=True, text=True, timeout=120,
+        )
+        if proc.returncode != 0 or "usage:" not in proc.stdout:
+            broken.append(f"{f}: exit {proc.returncode}: {proc.stderr[-300:]}")
+    assert not broken, "\n".join(broken)
+
+
 def test_complex_column_lint_catches_planted_offender(spark):
     """The round-4 red row (`embedding_label_centroids`) was a correct
     query whose array<double> column crashed the driver's pandas

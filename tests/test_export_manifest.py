@@ -52,7 +52,7 @@ def test_streamed_manifest_equals_batch(spark, tmp_path):
         pipe.process_batch(docs.filter(F.col("doc_id") % 3 == e), e + 1)
     assert _rows(pipe.manifest()) == _batch_rows(spark, SF_SMOKE)
     # compaction folds the 3-epoch log to one row per group — same view
-    pipe.compact()
+    pipe.agg.state.compact()
     assert _rows(pipe.manifest()) == _batch_rows(spark, SF_SMOKE)
 
 
@@ -82,7 +82,7 @@ def test_streamed_manifest_retraction_and_redelivery(spark, tmp_path):
 
     # retract the rest: every group cancels, liveness drops all rows
     pipe.process_batch(base.withColumn("op", F.lit(-1)), 4)
-    pipe.compact()
+    pipe.agg.state.compact()
     assert _rows(pipe.manifest()) == []
 
 

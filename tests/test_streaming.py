@@ -1398,13 +1398,18 @@ def test_ivm_crash_at_pointer_flip_recovers(spark, tmp_path, monkeypatch):
     assert _cust_weight(pipe) == [(NEW_CUST_KEY, 1)]
 
 
-@pytest.mark.parametrize("face", ["near_dedup", "packing"])
+@pytest.mark.parametrize("face", ["near_dedup", "packing", "compaction"])
 def test_face_output_crash_at_pointer_flip_recovers(spark, tmp_path, monkeypatch, face):
     """A crash at epoch 1's pointer flip comes after the store moved
     the epoch's output in. Only epoch 0's output may be visible, and
-    the retried epoch 1 then appears exactly once, in output and state."""
+    the retried epoch 1 then appears exactly once, in output and state.
+    `compaction`: the packer's epoch 1 commit passes the file bound, and
+    the crash hits the compaction's flip instead — epoch 1 stays
+    committed on the uncompacted v1, and the next commit compacts."""
+    import json
     import os as _os
 
+    from query_processing_over_streaming_data_using_flink_spark.streaming import state_table
     from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
         IncrementalNearDedup,
     )
@@ -1427,31 +1432,167 @@ def test_face_output_crash_at_pointer_flip_recovers(spark, tmp_path, monkeypatch
         )
 
     h.process_batch(batch(0), 0)
+    if face == "compaction":
+        # Epoch 0 left one cursor file: epoch 1's second one compacts.
+        monkeypatch.setattr(state_table, "_MAX_FILES_PER_BUCKET", 1)
+    crash_version = "c" if face == "compaction" else ""
     real_replace = _os.replace
 
     def flaky_replace(src, dst, **kw):
         if _os.path.basename(dst) == "CURRENT":
-            raise OSError("injected crash at pointer flip")
+            with open(src) as fh:
+                if json.load(fh)["version"].endswith(crash_version):
+                    raise OSError("injected crash at pointer flip")
         return real_replace(src, dst, **kw)
 
-    monkeypatch.setattr("os.replace", flaky_replace)
-    with pytest.raises(OSError, match="pointer flip"):
-        h.process_batch(batch(10), 1)
-    monkeypatch.undo()
+    with monkeypatch.context() as m:
+        m.setattr("os.replace", flaky_replace)
+        with pytest.raises(OSError, match="pointer flip"):
+            h.process_batch(batch(10), 1)
+
+    want = [(0, 0), (0, 1), (0, 2), (1, 10), (1, 11), (1, 12)]
+    if face == "compaction":
+        assert h.state.committed_epoch() == 1
+        assert h.state._pointer()["version"] == "v1"
+        assert sorted((r["epoch"], r["doc_id"]) for r in log().collect()) == want
+        h.process_batch(batch(20), 2)
+        assert h.state._pointer()["version"] == "v2c"
+        assert h.state.read("cursor").count() == 1
+        assert _folded_cursors(h) == {("en", sum(r["n_tokens"] for r in log().collect()))}
+        return
 
     assert h.state.committed_epoch() == 0
     assert sorted((r["epoch"], r["doc_id"]) for r in log().collect()) == [(0, 0), (0, 1), (0, 2)]
 
     h.process_batch(batch(10), 1)
     got = log().collect()
-    assert sorted((r["epoch"], r["doc_id"]) for r in got) == [
-        (0, 0), (0, 1), (0, 2), (1, 10), (1, 11), (1, 12)
-    ]
+    assert sorted((r["epoch"], r["doc_id"]) for r in got) == want
     if face == "near_dedup":
         bands = h.state.read("bands")
         assert bands.count() == bands.select("band_key").distinct().count()
     else:
         assert _folded_cursors(h) == {("en", sum(r["n_tokens"] for r in got))}
+
+
+def _files_per_bucket(version_dir):
+    """Most parquet files any bucket of any table holds in a version."""
+    import collections
+    import glob
+
+    files = glob.glob(os.path.join(version_dir, "*", "bucket=*", "*.parquet"))
+    return max(collections.Counter(map(os.path.dirname, files)).values(), default=0)
+
+
+def _face_epochs(spark, face, state_dir):
+    """(handle, four epoch batches, result(), batch oracle) of a face."""
+    from query_processing_over_streaming_data_using_flink_spark.plans.suite_llm_data import (
+        pack_sequences_bpe,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.plans.suite_streaming import (
+        changelog_monthly_revenue_state,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
+        IncrementalNearDedup,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import (
+        monthly_revenue_rollup,
+        present_monthly_revenue,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
+        IncrementalQ3,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.packing import (
+        IncrementalSequencePacker,
+    )
+
+    if face in ("q3", "rollup"):
+        n_total = sum(
+            load_table(spark, SF_SMOKE, t).count() for t in ("customer", "orders", "lineitem")
+        )
+        # The rollup oracle's changelog: deletes from 2/3 in, cut at 1.5 N.
+        k = n_total + n_total // 2
+        log = build_changelog(spark, SF_SMOKE, window=(n_total * 2) // 3).filter(
+            F.col("seq") <= k
+        )
+        batches = [log.filter((F.col("seq") > k * e // 4) & (F.col("seq") <= k * (e + 1) // 4))
+                   for e in range(4)]
+        if face == "q3":
+            h = IncrementalQ3(spark, state_dir)
+            # Every group, not only the Top-20: a bad fold anywhere shows.
+            return h, batches, lambda: h.top_n(10**6), q3_on_state(log, limit=10**6)
+        h = monthly_revenue_rollup(spark, state_dir)
+        return (h, batches, lambda: present_monthly_revenue(h.result()),
+                changelog_monthly_revenue_state(spark, SF_SMOKE))
+    docs = load_table(spark, SF_SMOKE, "documents")
+    # doc_ids run 0..499: four epochs in doc_id order.
+    batches = [docs.filter(F.floor(F.col("doc_id") / 125) == e) for e in range(4)]
+    if face == "packing":
+        h = IncrementalSequencePacker(spark, state_dir, budget_tokens=2048)
+        return (h, batches, lambda: h.packed_df().drop("epoch"), pack_sequences_bpe(spark, SF_SMOKE))
+    # Near-dedup's batch verdicts: every doc in one epoch. Batches in
+    # doc_id order give the same first-wins owners as one batch.
+    oracle = IncrementalNearDedup(spark, state_dir + "_batch").process_batch(docs, 0)
+    h = IncrementalNearDedup(spark, state_dir)
+    return h, batches, lambda: h.verdicts_df().drop("epoch"), oracle
+
+
+@pytest.mark.parametrize("face", ["q3", "rollup", "near_dedup", "packing"])
+def test_store_compacts_past_the_file_bound(spark, tmp_path, monkeypatch, face):
+    """The store schedules compaction itself: with the bound at 2 files
+    per bucket, no commit of a 4-epoch stream leaves a bucket above it,
+    at least one compacted version `v<e>c` appears (the IVM's epoch
+    stats say which epochs compacted), and the face's result still
+    equals its batch oracle."""
+    from query_processing_over_streaming_data_using_flink_spark.streaming import state_table
+
+    h, batches, result, oracle = _face_epochs(spark, face, str(tmp_path / "state"))
+    monkeypatch.setattr(state_table, "_MAX_FILES_PER_BUCKET", 2)
+    versions = []
+    for e, b in enumerate(batches):
+        h.process_batch(b, e)
+        _, ver = h.state._current()
+        versions.append(os.path.basename(ver))
+        assert _files_per_bucket(ver) <= 2, (e, ver)
+        if face == "q3":
+            assert h.last_stats["compacted"] == ver.endswith("c"), (e, ver)
+    assert any(v.endswith("c") for v in versions), versions
+    assert _rows(result()) == _rows(oracle)
+
+
+def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
+    """`compact()` repartitions each table on its bucket before staging
+    it: the near-dedup store, after four epochs of band claims staged
+    as the face stages them (one file per touched bucket each), compacts
+    to one parquet file per bucket with the same band owners."""
+    from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
+        IncrementalNearDedup,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
+        NUM_BUCKETS,
+        bucket_of,
+        write_partitions,
+    )
+
+    state = IncrementalNearDedup(spark, str(tmp_path / "state")).state
+    for e in range(4):
+        claims = spark.range(200 * e, 200 * e + 200).select(
+            F.col("id").alias("band_key"), F.col("id").alias("owner")
+        )
+        state.begin_epoch(e)
+        state.stage(
+            claims.withColumn("bucket", bucket_of("band_key")).repartition(
+                write_partitions(spark), "band_key"
+            ),
+            "bands",
+        )
+        state.commit(e)
+    assert _files_per_bucket(state._current()[1]) == 4
+    before = _rows(state.read("bands"))
+    state.compact()
+    ver = state._current()[1]
+    assert _files_per_bucket(ver) == 1
+    assert len(os.listdir(os.path.join(ver, "bands"))) == NUM_BUCKETS
+    assert _rows(state.read("bands")) == before
 
 
 def test_ivm_never_publishes_stale_staged_files(spark, tmp_path):
@@ -1614,7 +1755,7 @@ def test_incragg_rollup_stream_matches_batch(spark, tmp_path):
     # Compaction folds the appended epoch deltas without changing the view.
     pipe = monthly_revenue_rollup(spark, str(tmp_path / "state"))
     before = pipe.state.read(pipe.TABLE).count()
-    pipe.compact()
+    pipe.state.compact()
     after = pipe.state.read(pipe.TABLE).count()
     assert after <= before
     folded = present_monthly_revenue(pipe.result())
@@ -1966,7 +2107,7 @@ def test_streaming_sequence_packing_matches_batch(spark, tmp_path):
     assert after == before
 
     # Compaction folds each lane's per-epoch cursor rows into one.
-    packer.compact()
+    packer.state.compact()
     assert packer.state.read("cursor").count() == len(before)
     assert _folded_cursors(packer) == before
 

@@ -51,7 +51,8 @@ def test_stream_manifest_equals_batch_pipeline(spark, tmp_path):
     )
     # fold the state logs first: the gate must read identically from
     # COMPACTED state (one row per live group) as from the epoch log
-    pipe.compact()
+    for face in (pipe.kn, pipe.dedup, pipe.eval_mh):
+        face.agg.state.compact()
     got = sorted(tuple(r) for r in pipe.manifest(docs).collect())
     pipe.release_gate_cache()
     want = sorted(
@@ -84,7 +85,7 @@ def test_streamed_eval_minhash_flag_equals_batch(spark, tmp_path):
     want = rows(decontaminate_eval_minhash(spark, SF_SMOKE))
     assert got == want
     assert got, "fixture should contain planted near-dup contamination"
-    emh.compact()
+    emh.agg.state.compact()
     assert rows(emh.flag(train_docs)) == want
 
 
@@ -366,7 +367,7 @@ def test_streamed_dedup_telemetry_equals_batch(spark, tmp_path):
     tel.release_cache()
     assert got == want
     assert any(r[2] > 0 for r in want), "fixture should contain dup clusters"
-    tel.compact()
+    tel.agg.state.compact()
     got2 = rows(tel.report())
     tel.release_cache()
     assert got2 == want

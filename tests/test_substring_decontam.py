@@ -60,7 +60,7 @@ def test_streamed_span_gate_equals_batch_query(spark, tmp_path):
     want = _rows(decontaminate_eval_substring(spark, SF_SMOKE))
     assert got == want
     assert any(not r[4] for r in got), "fixture should contain planted spans"
-    pipe.compact()
+    pipe.agg.state.compact()
     assert _rows(pipe.flag(train_docs)) == want
 
 
