@@ -133,33 +133,33 @@ class IncrementalIVFIndex:
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         """Ingest one micro-batch of (vec_id, embedding) rows."""
-        if not self.state.begin_epoch(epoch_id):
-            return  # redelivered epoch — its vectors are already indexed
-        first_epoch = self.state.committed_epoch() < 0
-        if first_epoch:
-            cents = (
-                self._bootstrap_cents
-                if self._bootstrap_cents is not None
-                else sim.ivf_centroids(batch, cells=self.cells)
+        def ingest() -> None:
+            first_epoch = self.state.committed_epoch() < 0
+            if first_epoch:
+                cents = (
+                    self._bootstrap_cents
+                    if self._bootstrap_cents is not None
+                    else sim.ivf_centroids(batch, cells=self.cells)
+                )
+                # KB-sized quantizer tables: one file, not one per partition.
+                self.state.stage(self._cents_long(cents).repartition(1), "cents")
+            else:
+                cents = self.centroids()
+            corpus = batch.select(
+                F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
             )
-            # KB-sized quantizer tables: one file, not one per partition.
-            self.state.stage(self._cents_long(cents).repartition(1), "cents")
-        else:
-            cents = self.centroids()
-        corpus = batch.select(
-            F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
-        )
-        assigned = sim._nearest_cells(corpus, cents, 1)
-        delta = assigned.select(
-            F.col("cell").cast("int").alias("bucket"),
-            F.col("id").alias("n_id"),
-            F.col("vec").alias("n_vec"),
-            F.col("cell").cast("int").alias("cell"),
-        )
-        self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
+            assigned = sim._nearest_cells(corpus, cents, 1)
+            delta = assigned.select(
+                F.col("cell").cast("int").alias("bucket"),
+                F.col("id").alias("n_id"),
+                F.col("vec").alias("n_vec"),
+                F.col("cell").cast("int").alias("cell"),
+            )
+            self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
+
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
-        self.state.commit(epoch_id)
+        self.state.apply(epoch_id, ingest)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -353,43 +353,43 @@ class IncrementalIVFPQIndex:
         to codes under the frozen codebooks, append the codes to the
         cell's inverted list. The raw embedding is read once, here, and
         never stored."""
-        if not self.state.begin_epoch(epoch_id):
-            return  # redelivered epoch — already indexed
-        first_epoch = self.state.committed_epoch() < 0
-        if first_epoch:
-            cents = (
-                self._bootstrap_cents
-                if self._bootstrap_cents is not None
-                else sim.ivf_centroids(batch, cells=self.cells)
+        def ingest() -> None:
+            first_epoch = self.state.committed_epoch() < 0
+            if first_epoch:
+                cents = (
+                    self._bootstrap_cents
+                    if self._bootstrap_cents is not None
+                    else sim.ivf_centroids(batch, cells=self.cells)
+                )
+                books = (
+                    self._bootstrap_books
+                    if self._bootstrap_books is not None
+                    else sim.pq_codebooks(batch, self.m)
+                )
+                # KB-sized quantizer tables: one file, not one per partition.
+                self.state.stage(self._cents_long(cents).repartition(1), "cents")
+                self.state.stage(self._books_long(books).repartition(1), "books")
+            else:
+                cents = self.centroids()
+                books = self.books()
+            corpus = batch.select(
+                F.col("vec_id").alias("id"),
+                F.col("embedding").cast("array<double>").alias("vec"),
             )
-            books = (
-                self._bootstrap_books
-                if self._bootstrap_books is not None
-                else sim.pq_codebooks(batch, self.m)
+            assigned = sim._nearest_cells(corpus, cents, 1).select(F.col("id"), "cell")
+            delta = (
+                assigned.join(sim.pq_encode(batch, books, self.m), "id")
+                .select(
+                    F.col("cell").cast("int").alias("bucket"),
+                    F.col("id").alias("n_id"),
+                    F.col("cell").cast("int").alias("cell"),
+                    F.col("s").cast("int").alias("s"),
+                    F.col("code").cast("int").alias("code"),
+                )
             )
-            # KB-sized quantizer tables: one file, not one per partition.
-            self.state.stage(self._cents_long(cents).repartition(1), "cents")
-            self.state.stage(self._books_long(books).repartition(1), "books")
-        else:
-            cents = self.centroids()
-            books = self.books()
-        corpus = batch.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").cast("array<double>").alias("vec"),
-        )
-        assigned = sim._nearest_cells(corpus, cents, 1).select(F.col("id"), "cell")
-        delta = (
-            assigned.join(sim.pq_encode(batch, books, self.m), "id")
-            .select(
-                F.col("cell").cast("int").alias("bucket"),
-                F.col("id").alias("n_id"),
-                F.col("cell").cast("int").alias("cell"),
-                F.col("s").cast("int").alias("s"),
-                F.col("code").cast("int").alias("code"),
-            )
-        )
-        self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
-        self.state.commit(epoch_id)
+            self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
+
+        self.state.apply(epoch_id, ingest)
 
     # -- maintenance ---------------------------------------------------------
 

@@ -129,48 +129,47 @@ class IncrementalNearDedup:
         and records the verdict frame (doc_id, dup_of nullable)."""
         from query_processing_over_streaming_data_using_flink_spark.operators import dedup as dd
 
-        if not self.state.begin_epoch(epoch):
-            # Redelivered epoch: its claims are already committed —
-            # return the recorded verdicts instead of re-applying.
-            return self.state.output(epoch)
+        def claim() -> None:
+            if self._band_fn is not None:
+                band_rows = self._band_fn(batch)
+            else:
+                band_rows = dd.band_keys(
+                    dd.minhash_signatures(batch.select("doc_id", "text"))
+                ).select("doc_id", "band_key")
+            bands = (
+                band_rows.distinct()
+                .withColumn("bucket", bucket_of("band_key"))
+                .persist()
+            )
+            # Only the buckets this batch touches are read...
+            touched_state = self.state.restrict(self.state.read("bands"), bands)
+            batch_owner = bands.groupBy("bucket", "band_key").agg(
+                F.min("doc_id").alias("batch_owner")
+            )
+            owners = (
+                bands.join(touched_state, ["bucket", "band_key"], "left")
+                .join(batch_owner, ["bucket", "band_key"])
+                .withColumn("eff_owner", F.coalesce(F.col("owner"), F.col("batch_owner")))
+            )
+            verdicts = owners.groupBy("doc_id").agg(
+                F.min(
+                    F.when(F.col("eff_owner") != F.col("doc_id"), F.col("eff_owner"))
+                ).alias("dup_of")
+            )
+            # ...and only the new claims are appended: a claimed band_key
+            # had no owner, so no bucket row is rewritten. One task per
+            # write partition owns whole buckets (see `write_partitions`).
+            new_claims = (
+                owners.filter(F.col("owner").isNull())
+                .select("bucket", "band_key", F.col("batch_owner").alias("owner"))
+                .repartition(write_partitions(self.spark), "band_key")
+                .distinct()
+            )
+            self.state.stage(new_claims, "bands")
+            self.state.stage_output(verdicts.select("doc_id", "dup_of"))
+            bands.unpersist()
 
-        if self._band_fn is not None:
-            band_rows = self._band_fn(batch)
-        else:
-            band_rows = dd.band_keys(
-                dd.minhash_signatures(batch.select("doc_id", "text"))
-            ).select("doc_id", "band_key")
-        bands = (
-            band_rows.distinct()
-            .withColumn("bucket", bucket_of("band_key"))
-            .persist()
-        )
-        # Only the buckets this batch touches are read...
-        touched_state = self.state.restrict(self.state.read("bands"), bands)
-        batch_owner = bands.groupBy("bucket", "band_key").agg(
-            F.min("doc_id").alias("batch_owner")
-        )
-        owners = (
-            bands.join(touched_state, ["bucket", "band_key"], "left")
-            .join(batch_owner, ["bucket", "band_key"])
-            .withColumn("eff_owner", F.coalesce(F.col("owner"), F.col("batch_owner")))
-        )
-        verdicts = owners.groupBy("doc_id").agg(
-            F.min(
-                F.when(F.col("eff_owner") != F.col("doc_id"), F.col("eff_owner"))
-            ).alias("dup_of")
-        )
-        # ...and only the new claims are appended: a claimed band_key
-        # had no owner, so no bucket row is rewritten. One task per
-        # write partition owns whole buckets (see `write_partitions`).
-        new_claims = (
-            owners.filter(F.col("owner").isNull())
-            .select("bucket", "band_key", F.col("batch_owner").alias("owner"))
-            .repartition(write_partitions(self.spark), "band_key")
-            .distinct()
-        )
-        self.state.stage(new_claims, "bands")
-        self.state.stage_output(verdicts.select("doc_id", "dup_of"))
-        self.state.commit(epoch)
-        bands.unpersist()
+        # A redelivered epoch's claims are already committed: it returns
+        # the recorded verdicts instead of re-applying.
+        self.state.apply(epoch, claim)
         return self.state.output(epoch)

@@ -129,7 +129,7 @@ def run_face(
     * bind every state in `states` to the checkpoint's run id once it
       is readable, so old state under a NEW checkpoint (batch ids
       restarted at 0) raises instead of replay-skipping every batch;
-    * `process(batch, epoch_id)` (the face skips epochs it committed);
+    * `process(batch, epoch_id)` (the store's `apply` skips committed epochs);
     * count the epoch as applied if a committed epoch advanced, and
       `maintain()` after every `maintain_every` applied epochs;
     * `on_epoch(epoch_id)`.

@@ -106,21 +106,21 @@ class IncrementalGroupedAgg:
         ]
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if not self.state.begin_epoch(epoch_id):
-            return  # redelivered epoch: already folded into state
         if "op" not in batch.columns:
             batch = batch.withColumn("op", F.lit(1))
         keys = [F.col(c) for c in self.group_cols]
         # Keyed on the group columns (the bucket's source key): each of
         # the `write_partitions` tasks owns whole buckets, so the write
         # emits at most one file per bucket (see write_partitions).
-        self.state.stage(
-            self.delta_fn(batch)
-            .withColumn("bucket", bucket_of(*keys))
-            .repartition(write_partitions(self.spark), *keys),
-            self.TABLE,
+        self.state.apply(
+            epoch_id,
+            lambda: self.state.stage(
+                self.delta_fn(batch)
+                .withColumn("bucket", bucket_of(*keys))
+                .repartition(write_partitions(self.spark), *keys),
+                self.TABLE,
+            ),
         )
-        self.state.commit(epoch_id)
 
     def _fold(self, df: DataFrame) -> DataFrame:
         """Compaction fold: one row per group, groups whose every

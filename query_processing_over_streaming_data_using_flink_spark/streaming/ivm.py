@@ -59,12 +59,15 @@ State discipline (LOG-STRUCTURED):
 * Every per-epoch write shuffles into `write_partitions` tasks — the
   cores, not the NUM_BUCKETS buckets — keyed so that each task owns
   whole buckets (partition = bucket mod n; see `write_partitions`).
+* Each epoch is one store transaction (`VersionedBucketedState.apply`)
+  whose record times the phases `spill_l`, `spill_co`, `co`, `r_dco`,
+  `r_dl`, `telemetry` and `commit`; `last_stats` adds delta rows.
 * Crash atomicity: a crash anywhere before the
   pointer flip leaves ``CURRENT`` on the last complete version — every
   reader sees a consistent all-tables snapshot; the half-built version
   dir is debris, removed on the retried commit, and the retry clears
   the crashed attempt's staged files before staging its own. A
-  replayed epoch (``epoch_id <= committed``) is skipped entirely, so
+  replayed epoch (``epoch_id <= committed``) runs nothing, so
   Structured Streaming's redelivery after failure is idempotent — and
   the state dir is BOUND to its stream: the checkpoint's run id is
   persisted in the ``CURRENT`` pointer and a mismatch hard-fails
@@ -80,10 +83,8 @@ like the reference's keyBy(0) TopN.
 from __future__ import annotations
 
 import threading
-import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,14 +125,6 @@ def _net(weight: str) -> Callable[[DataFrame], DataFrame]:
         )
 
     return fold
-
-
-@contextmanager
-def _phase(phase_sec: dict[str, float], name: str) -> Iterator[None]:
-    """Record the block's wall seconds as `phase_sec[name]`."""
-    t0 = time.time()
-    yield
-    phase_sec[name] = round(time.time() - t0, 3)
 
 
 class IncrementalQ3:
@@ -195,14 +188,14 @@ class IncrementalQ3:
         self.spark = spark
         if broadcast_threshold_bytes is not None:
             self.broadcast_threshold_bytes = broadcast_threshold_bytes
-        # Per-epoch delta-row telemetry; populated by process_batch.
+        # The last applied epoch's record (`state.last_epoch`) plus
+        # delta rows per stage; populated by process_batch.
         self.last_stats: dict | None = None
         self.segment = segment
         self.cutoff = cutoff
         # All state mechanics (versioned dirs, hard-link carry-over,
         # atomic pointer commit, GC) live in the shared helper.
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES, folds=self._FOLDS)
-        self.swap_lock = self.state.swap_lock
 
     def compact_state(self) -> None:
         """Fold every table to one net row per key now (the store also
@@ -323,37 +316,21 @@ class IncrementalQ3:
     # -- the foreachBatch hook ----------------------------------------------
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if not self.state.begin_epoch(epoch_id):
-            # Redelivered epoch (restart after a crash between commit
-            # and checkpoint ack): its delta is already in the committed
-            # version — applying it again would double the weights.
+        # A redelivered epoch applies nothing: its delta is already
+        # committed, and applying it again would double the weights.
+        record = self.state.apply(epoch_id, lambda: self._maintain(batch, epoch_id))
+        self.spark.sparkContext.setJobDescription(None)
+        if record is None:
             return
-        # Wall seconds per phase, exported through last_stats.
-        phase_sec: dict[str, float] = {}
-        with _phase(phase_sec, "maintain_wall"):  # covers the spill lanes too
-            self._maintain(batch, epoch_id, phase_sec)
-
-        # Per-epoch pipeline telemetry (dashboard DAG view): delta rows
-        # per stage, read from the staged files' parquet FOOTERS —
-        # driver-side metadata, no extra Spark jobs. `events` counts
-        # the PREDICATE-SURVIVING rows (the split applies Q3's
+        # Delta rows per stage for the dashboard DAG view. `events`
+        # counts the PREDICATE-SURVIVING rows (the split applies Q3's
         # segment/date filters before spilling), i.e. what actually
         # enters the pipeline — not the raw micro-batch size, which
         # would cost an extra action to know.
-        with _phase(phase_sec, "telemetry"):
-            rows = {n: self.state.staged_rows(n) for n in self._TABLES}
-
-        # Everything is staged — the append commit hard-links
-        # every previous state file and moves the staged delta files in
-        # next to them (filesystem metadata), then atomically publishes
-        # the epoch. Its only Spark jobs are a compaction, when the store
-        # runs one (a bucket past its file bound); `compacted` says so.
-        with _phase(phase_sec, "commit"):
-            compacted = self.state.commit(epoch_id)
-        self.spark.sparkContext.setJobDescription(None)
+        rows = record["rows"]
         events = rows["c"] + rows["o"] + rows["l"]
         self.last_stats = {
-            "epoch": epoch_id,
+            **record,
             "events": events,
             "delta_c": rows["c"],
             "delta_o": rows["o"],
@@ -361,11 +338,9 @@ class IncrementalQ3:
             "delta_co": rows["co"],
             "delta_r": rows["r"],
             "state_rows_appended": events + rows["co"] + rows["r"],
-            "compacted": compacted,
-            "phase_sec": phase_sec,
         }
 
-    def _maintain(self, batch: DataFrame, epoch_id: int, phase_sec: dict[str, float]) -> None:
+    def _maintain(self, batch: DataFrame, epoch_id: int) -> None:
         """Stage the epoch's delta of every table: the two spill lanes
         and the maintenance terms they feed."""
         sc = self.spark.sparkContext
@@ -445,7 +420,7 @@ class IncrementalQ3:
             """Stage 1 (ΔCO = ΔC·O + C·ΔO + ΔC·ΔO, staged once as the
             co table's epoch delta) followed by the ΔCO-driven r terms
             (ΔCO·L + ΔCO·ΔL) — the dependent chain, one thread."""
-            with _phase(phase_sec, "co"):
+            with self.state.phase("co"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-CO join+spill")
                 co_parts: list[DataFrame] = []
                 if dc is not None and old_bytes["o"]:
@@ -492,7 +467,7 @@ class IncrementalQ3:
             dco = self._delta("co", "o_orderkey")
             if dco is None:
                 return
-            with _phase(phase_sec, "r_dco"):
+            with self.state.phase("r_dco"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
                 # The ΔCO⋈ΔL term needs the L lane's spill on disk; the
                 # ΔCO spill above takes longer than the L spill, so this
@@ -541,7 +516,7 @@ class IncrementalQ3:
             dl_small = _dl_box.get("dl_small")
             if dl_small is None or not old_bytes["co"]:
                 return
-            with _phase(phase_sec, "r_dl"):
+            with self.state.phase("r_dl"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (CO.dL term) join+spill")
                 dl_h, co_h = sides(dl_small, self.state.staged_bytes("l"), co_old, old_bytes["co"])
                 fold_spill_r(
@@ -563,7 +538,7 @@ class IncrementalQ3:
         # ΔCO-driven R terms); no maintenance waits on a whole-batch
         # spill (numbers in OPTIMIZATION_r15.md).
         def lane_l() -> None:
-            with _phase(phase_sec, "spill_l"):
+            with self.state.phase("spill_l"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
                 try:
                     dl = self._spill_l(batch)
@@ -576,7 +551,7 @@ class IncrementalQ3:
             maintain_r_dl()
 
         def lane_co() -> None:
-            with _phase(phase_sec, "spill_co"):
+            with self.state.phase("spill_co"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-C/O spill")
                 dc, do = self._spill_co(batch)
             maintain_co_chain(dc, do)
@@ -631,15 +606,17 @@ def run_streaming_q3(
     Top-N.
 
     `on_progress(epoch_id, top_df, stats)` mirrors the periodic Top-N
-    emission (console/WebSocket sink in the reference); `stats` is the
-    pipeline's `IncrementalQ3.last_stats` telemetry (a replayed epoch
-    applies nothing and leaves it unchanged). Pass e.g.
-    ``lambda e, df, stats: df.show()``.
+    emission (console/WebSocket sink in the reference); `stats` is
+    `IncrementalQ3.last_stats`: the store's record of the last applied
+    epoch (`state.last_epoch`: epoch, staged rows per table, phase
+    seconds, whether it compacted) plus the IVM's delta rows per stage
+    (a replayed epoch applies nothing and leaves it unchanged). Pass
+    e.g. ``lambda e, df, stats: df.show()``.
 
     With `checkpoint_dir`, a restart resumes from the last acknowledged
-    batch with stable epoch ids; together with the state store's
-    atomic epoch commit + replay skip this gives exactly-once state
-    maintenance across crashes. The driver binds the checkpoint's
+    batch with stable epoch ids; together with the state store's epoch
+    transaction (atomic commit, replay skip) this gives exactly-once
+    state maintenance across crashes. `run_face` binds the checkpoint's
     stream UUID to the state dir: pointing old state at a NEW
     checkpoint (whose batch ids restart at 0) raises `RuntimeError`
     instead of silently dropping every batch — wipe state and

@@ -75,41 +75,41 @@ class IncrementalSequencePacker:
     def process_batch(self, batch: DataFrame, epoch: int) -> DataFrame:
         """Pack one micro-batch of (doc_id, lang, text) rows. Returns
         and records (doc_id, lang, n_tokens, seq_id, seq_offset)."""
-        if not self.state.begin_epoch(epoch):
-            # Redelivered epoch — return the recorded assignments
-            # rather than re-spending the budget.
-            return self.state.output(epoch)
-        counts = bp.bpe_token_counts(batch, self.merges).select(
-            "doc_id", F.col("n_tokens_bpe").alias("n_tokens")
-        )
-        rows = (
-            batch.select("doc_id", "lang")
-            .join(counts, "doc_id")
-            .withColumn("bucket", bucket_of("lang"))
-        )
-        w = (
-            Window.partitionBy("lang")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        rows = rows.withColumn(
-            "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        ).persist()
-        touched = _fold(self.state.restrict(self.state.read("cursor"), rows))
-        carried = rows.join(
-            touched.select("lang", "spent"), "lang", "left"
-        ).withColumn("offset", F.coalesce(F.col("spent"), F.lit(0)) + F.col("cum_before"))
-        out = carried.select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            F.floor(F.col("offset") / self.budget).cast("long").alias("seq_id"),
-            (F.col("offset") % self.budget).cast("long").alias("seq_offset"),
-        )
-        # This batch's token mass per lane is appended as a cursor row.
-        batch_mass = rows.groupBy("bucket", "lang").agg(F.sum("n_tokens").alias("spent"))
-        self.state.stage(batch_mass, "cursor")
-        self.state.stage_output(out)
-        self.state.commit(epoch)
-        rows.unpersist()
+        def pack() -> None:
+            counts = bp.bpe_token_counts(batch, self.merges).select(
+                "doc_id", F.col("n_tokens_bpe").alias("n_tokens")
+            )
+            rows = (
+                batch.select("doc_id", "lang")
+                .join(counts, "doc_id")
+                .withColumn("bucket", bucket_of("lang"))
+            )
+            w = (
+                Window.partitionBy("lang")
+                .orderBy("doc_id")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
+            rows = rows.withColumn(
+                "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+            ).persist()
+            touched = _fold(self.state.restrict(self.state.read("cursor"), rows))
+            carried = rows.join(
+                touched.select("lang", "spent"), "lang", "left"
+            ).withColumn("offset", F.coalesce(F.col("spent"), F.lit(0)) + F.col("cum_before"))
+            out = carried.select(
+                "doc_id",
+                "lang",
+                "n_tokens",
+                F.floor(F.col("offset") / self.budget).cast("long").alias("seq_id"),
+                (F.col("offset") % self.budget).cast("long").alias("seq_offset"),
+            )
+            # This batch's token mass per lane is appended as a cursor row.
+            batch_mass = rows.groupBy("bucket", "lang").agg(F.sum("n_tokens").alias("spent"))
+            self.state.stage(batch_mass, "cursor")
+            self.state.stage_output(out)
+            rows.unpersist()
+
+        # A redelivered epoch returns its recorded assignments rather
+        # than re-spending the budget.
+        self.state.apply(epoch, pack)
         return self.state.output(epoch)

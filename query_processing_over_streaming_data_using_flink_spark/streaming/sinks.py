@@ -128,10 +128,10 @@ def pipeline_json_payload(
     """One `{"type":"pipeline",...}` frame per epoch — the dashboard's
     job-graph view (reference `simple_index.html` pipeline DAG): node
     list, edge list, and the epoch that just flowed through it. With
-    `stats` (IncrementalQ3.last_stats — per-epoch delta rows read from
-    the spill files' parquet footers), each node carries the row count
-    that flowed out of it, the reference DAG's per-node event
-    counters."""
+    `stats` (IncrementalQ3.last_stats: the store's `state.last_epoch`
+    record plus delta rows per stage, from parquet footers), each node
+    carries the row count that flowed out of it, the reference DAG's
+    per-node event counters."""
     counts: dict[str, int] = {}
     if stats:
         events = stats.get("events", 0)

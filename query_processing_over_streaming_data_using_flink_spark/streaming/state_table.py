@@ -14,10 +14,16 @@ Layout::
 
 Contract:
 
-* `begin_epoch(epoch)` opens an epoch — or returns False for a
-  redelivered one, which the caller skips. Opening clears `_staged/`
-  and any output past the committed epoch, so a crashed attempt's
-  files are never published.
+* `apply(epoch, body)` is the one epoch transaction. A redelivered
+  epoch (`epoch <= committed`) returns None and runs nothing. Otherwise
+  it clears `_staged/` and any output past the committed epoch, so a
+  crashed attempt's files are never published; runs `body()`, which
+  stages the epoch's writes and may time named phases with
+  `phase(name)`; sizes each table's staged delta from parquet footers
+  (phase `telemetry`); commits (phase `commit`); and returns the
+  epoch's record ``{"epoch", "rows": {table: n}, "phase_sec",
+  "compacted"}``, also kept as `last_epoch`. A body that raises
+  commits nothing.
 * `stage(df, table, part=...)` is one Spark write of `df`, partitioned
   by (table, bucket), into its own part-set. `df` carries a `table`
   column when one write stages several tables (the IVM's ΔC/ΔO
@@ -28,9 +34,9 @@ Contract:
 * `stage_output(df)` stages the epoch's output rows (a face's verdicts
   or assignments, declared by the `output` schema); `output(epoch)`
   reads one committed epoch's output back, `outputs()` every committed
-  epoch's, with an `epoch` column. A redelivered epoch returns its
-  recorded output instead of being re-applied.
-* `commit(epoch)` builds the next version — every old file carried
+  epoch's, with an `epoch` column, so a face returns a redelivered
+  epoch's recorded output instead of re-applying it.
+* `apply`'s commit builds the next version — every old file carried
   over as a hard link (metadata only, no row data), the staged files
   of every part-set moved in next to them — moves the staged output to
   `_outputs/epoch=<epoch>/`, then flips the pointer. State is
@@ -46,11 +52,12 @@ Contract:
   (carry-over disabled, so emptied buckets vanish), preserving the
   epoch. The store schedules it: after the pointer flip, a commit
   that leaves more than `_MAX_FILES_PER_BUCKET` parquet files in any
-  bucket compacts, as an LSM-tree merges its runs, and returns True
-  (the count comes from the commit's own link-and-move pass). A crash
-  at the compaction's flip leaves the epoch committed on the
-  uncompacted version; the next commit compacts again. `compact(transforms)`
-  overrides folds per table (the ANN index's re-cluster).
+  bucket compacts, as an LSM-tree merges its runs, and the epoch's
+  record says `compacted` (the count comes from the commit's own
+  link-and-move pass). A crash at the compaction's flip leaves the
+  epoch committed on the uncompacted version; the next commit compacts
+  again. `compact(transforms)` overrides folds per table (the ANN
+  index's re-cluster).
 * A `run_id` (e.g. the Structured Streaming checkpoint's UUID) can be
   bound via `check_run`; it is persisted in the pointer, and a
   mismatch HARD-FAILS instead of silently replay-skipping epochs from
@@ -81,8 +88,10 @@ import os
 import re
 import shutil
 import threading
+import time
 from collections import Counter
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -185,6 +194,8 @@ class VersionedBucketedState:
         # REENTRANT: read() takes it internally; external emission
         # timers may already hold it around a read.
         self.swap_lock = threading.RLock()
+        self.last_epoch: dict | None = None  # see `apply`
+        self._phase_sec: dict[str, float] = {}
         os.makedirs(state_dir, exist_ok=True)
         self._check_layout()
 
@@ -303,22 +314,6 @@ class VersionedBucketedState:
 
     # -- staging -------------------------------------------------------------
 
-    def begin_epoch(self, epoch_id: int) -> bool:
-        """Open `epoch_id` for staging: False for a redelivered epoch
-        (already committed — the caller skips it), else True with the
-        staging area cleared, so files a crashed attempt staged are
-        never published by this one. An attempt that crashed at the
-        pointer flip has already moved its output in: outputs past the
-        committed epoch are removed too."""
-        committed = self.committed_epoch()
-        if epoch_id <= committed:
-            return False
-        shutil.rmtree(self._staging, ignore_errors=True)
-        for entry in os.listdir(self._outputs) if os.path.isdir(self._outputs) else []:
-            if int(entry.removeprefix("epoch=")) > committed:
-                shutil.rmtree(os.path.join(self._outputs, entry))
-        return True
-
     def stage(self, df: DataFrame, table: str | None = None, part: str | None = None) -> None:
         """Stage `df` for the next commit as part-set `part` (default
         `table`): one Spark write partitioned by (table, bucket). Rows go
@@ -367,20 +362,44 @@ class VersionedBucketedState:
         output, published by its commit."""
         df.write.mode("overwrite").parquet(self._staged_output)
 
-    # -- commit --------------------------------------------------------------
+    # -- the epoch transaction -----------------------------------------------
 
-    def commit(self, epoch_id: int) -> bool:
-        """Publish the staged files as version v<epoch>: they are added
-        to every old bucket's hard-linked contents, so per-epoch cost is
-        O(delta) in data AND in shuffles (no read-merge-rewrite of old
-        state). The staged output becomes `output(epoch_id)`. Compacts
-        when a bucket now holds more than `_MAX_FILES_PER_BUCKET` files,
-        and returns whether it did."""
-        most = self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True)
-        if most <= _MAX_FILES_PER_BUCKET:
-            return False
-        self.compact()
-        return True
+    def apply(self, epoch_id: int, body: Callable[[], None]) -> dict | None:
+        """Run `body` as epoch `epoch_id` and commit what it staged,
+        appended in O(delta); None, running nothing, for a committed
+        epoch. Returns the epoch's record, also kept as `last_epoch`."""
+        committed = self.committed_epoch()
+        if epoch_id <= committed:
+            return None
+        # An attempt that crashed at the pointer flip has already moved
+        # its output in: outputs past the committed epoch go too.
+        shutil.rmtree(self._staging, ignore_errors=True)
+        for entry in os.listdir(self._outputs) if os.path.isdir(self._outputs) else []:
+            if int(entry.removeprefix("epoch=")) > committed:
+                shutil.rmtree(os.path.join(self._outputs, entry))
+        self._phase_sec = {}
+        body()
+        with self.phase("telemetry"):
+            rows = {name: self.staged_rows(name) for name in self.tables}
+        with self.phase("commit"):
+            most = self._commit_version(f"v{epoch_id}", epoch_id, carry_over=True)
+            compacted = most > _MAX_FILES_PER_BUCKET
+            if compacted:
+                self.compact()
+        self.last_epoch = {
+            "epoch": epoch_id,
+            "rows": rows,
+            "phase_sec": self._phase_sec,
+            "compacted": compacted,
+        }
+        return self.last_epoch
+
+    @contextmanager
+    def phase(self, name: str) -> Iterator[None]:
+        """Time the block as the open epoch's `phase_sec[name]`."""
+        t0 = time.time()
+        yield
+        self._phase_sec[name] = round(time.time() - t0, 3)
 
     def compact(
         self, transforms: dict[str, Callable[[DataFrame], DataFrame]] | None = None

@@ -6,10 +6,12 @@ windowed aggregation.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -23,6 +25,10 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.retraction
     changelog_state,
     q3_on_state,
 )
+
+
+# Top-level keys of every face's per-epoch record (`state.last_epoch`).
+EPOCH_RECORD_KEYS = {"epoch", "rows", "phase_sec", "compacted"}
 
 
 def _rows(df):
@@ -128,7 +134,9 @@ def test_ivm_progress_stats_telemetry(spark, tmp_path):
     counts of the spilled deltas — the dashboard DAG's per-node
     counters); summed across epochs they must equal the changelog's
     PREDICATE-SURVIVING event count exactly (the split applies Q3's
-    segment/date filters before spilling)."""
+    segment/date filters before spilling). Each epoch's record carries
+    the store's phases, and together the epochs time every IVM phase
+    under the names perfbench reads."""
     n_total = sum(
         load_table(spark, SF_SMOKE, t).count() for t in ("customer", "orders", "lineitem")
     )
@@ -136,7 +144,12 @@ def test_ivm_progress_stats_telemetry(spark, tmp_path):
         F.col("seq") <= n_total // 2
     )
     changelog_dir = str(tmp_path / "changelog")
-    log.repartition(4).write.parquet(changelog_dir)
+    # The file source takes the oldest files first: epoch 0 is every
+    # customer and order event, so epoch 1's lineitems probe a CO view
+    # that holds rows (the CO⋈ΔL phase, r_dl, runs).
+    is_l = F.col("relation") == "lineitem"
+    log.filter(~is_l).repartition(2).write.parquet(changelog_dir)
+    log.filter(is_l).repartition(2).write.mode("append").parquet(changelog_dir)
 
     seen = []
 
@@ -163,6 +176,11 @@ def test_ivm_progress_stats_telemetry(spark, tmp_path):
     for s in seen:
         assert s["events"] == s["delta_c"] + s["delta_o"] + s["delta_l"]
         assert s["state_rows_appended"] >= s["events"]
+        # The store's epoch record, under the names perfbench reads.
+        assert EPOCH_RECORD_KEYS <= set(s)
+        assert {"commit", "telemetry"} <= set(s["phase_sec"])
+    phases = set().union(*(s["phase_sec"] for s in seen))
+    assert {"spill_l", "spill_co", "co", "r_dco", "r_dl"} <= phases, phases
 
 
 @pytest.mark.slow  # soak variant: checkpoint-resume stays attested by
@@ -1312,7 +1330,7 @@ def test_ivm_top_n_reentrant_under_swap_lock(spark, tmp_path):
 
     pipe = IncrementalQ3(spark, str(tmp_path / "state"))
     pipe.process_batch(_single_customer_batch(spark), 0)
-    with pipe.swap_lock:
+    with pipe.state.swap_lock:
         assert pipe.top_n(5).count() == 0  # completes without deadlock
 
 
@@ -1542,7 +1560,9 @@ def test_store_compacts_past_the_file_bound(spark, tmp_path, monkeypatch, face):
     per bucket, no commit of a 4-epoch stream leaves a bucket above it,
     at least one compacted version `v<e>c` appears (the IVM's epoch
     stats say which epochs compacted), and the face's result still
-    equals its batch oracle."""
+    equals its batch oracle. The IVM's input tables must also fold to
+    the batch state per key: at this scale its result tables are too
+    small to show a fold that corrupts some buckets."""
     from query_processing_over_streaming_data_using_flink_spark.streaming import state_table
 
     h, batches, result, oracle = _face_epochs(spark, face, str(tmp_path / "state"))
@@ -1557,6 +1577,48 @@ def test_store_compacts_past_the_file_bound(spark, tmp_path, monkeypatch, face):
             assert h.last_stats["compacted"] == ver.endswith("c"), (e, ver)
     assert any(v.endswith("c") for v in versions), versions
     assert _rows(result()) == _rows(oracle)
+    if face == "q3":
+        applied = functools.reduce(DataFrame.unionByName, batches)
+        assert _ivm_inputs_by_key(h) == _q3_inputs_by_key(applied)
+
+
+def _ivm_inputs_by_key(pipe):
+    """The IVM's c, o and l state tables, each folded to net weight per
+    key (every column but `bucket` and the weight), zeros dropped."""
+    folded = {}
+    for table, w in (("c", "w_c"), ("o", "w_o"), ("l", "w_cents")):
+        df = pipe.state.read(table)
+        keys = [c for c in df.columns if c not in ("bucket", w)]
+        folded[table] = _rows(
+            df.groupBy(*keys).agg(F.sum(w).alias(w)).filter(F.col(w) != 0)
+        )
+    return folded
+
+
+def _q3_inputs_by_key(log):
+    """Net live rows of Q3's three inputs after `log`, under Q3's
+    segment and date filters, in the IVM tables' column order."""
+    cut = F.lit("1995-03-15").cast("timestamp_ntz")
+    cents = F.round(F.col("extendedprice") * (F.lit(1.0) - F.col("discount")) * 10000, 0)
+    line = changelog_state(
+        log.filter(F.col("shipdate") > cut), "lineitem", ["orderkey", "linenumber"],
+        payload_cols=["orderkey", "linenumber", "extendedprice", "discount"],
+    )
+    return {
+        "c": _rows(changelog_state(
+            log.filter(F.col("mktsegment") == "BUILDING"), "customer", ["custkey"],
+            payload_cols=["custkey"],
+        )),
+        "o": _rows(changelog_state(
+            log.filter(F.col("orderdate") < cut), "orders", ["orderkey"],
+            payload_cols=["orderkey", "o_custkey", "orderdate"],
+        )),
+        # The IVM keys l on (orderkey, linenumber), which two live
+        # lineitems of the fixture may share: their weights add up.
+        "l": _rows(line.groupBy("orderkey", "linenumber").agg(
+            F.sum(F.col("w") * cents.cast("long")).alias("w_cents")
+        )),
+    }
 
 
 def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
@@ -1578,14 +1640,15 @@ def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
         claims = spark.range(200 * e, 200 * e + 200).select(
             F.col("id").alias("band_key"), F.col("id").alias("owner")
         )
-        state.begin_epoch(e)
-        state.stage(
-            claims.withColumn("bucket", bucket_of("band_key")).repartition(
-                write_partitions(spark), "band_key"
+        state.apply(
+            e,
+            lambda: state.stage(
+                claims.withColumn("bucket", bucket_of("band_key")).repartition(
+                    write_partitions(spark), "band_key"
+                ),
+                "bands",
             ),
-            "bands",
         )
-        state.commit(e)
     assert _files_per_bucket(state._current()[1]) == 4
     before = _rows(state.read("bands"))
     state.compact()
@@ -1609,12 +1672,19 @@ def test_ivm_never_publishes_stale_staged_files(spark, tmp_path):
     pipe = IncrementalQ3(spark, str(tmp_path / "state"))
     pipe.process_batch(log, 0)
 
-    # A stale ΔR row large enough to top the Top-20 if it were published.
+    # An attempt at epoch 1 crashes after staging a ΔR row large enough
+    # to top the Top-20 if it were published.
     stale = spark.createDataFrame(
         [(0, NEW_CUST_KEY, datetime.datetime(1995, 1, 1), 10**15)],
         "bucket int, l_orderkey long, o_orderdate timestamp_ntz, cents long",
     )
-    pipe.state.stage(stale, "r", part="r_dco")
+
+    def crashed():
+        pipe.state.stage(stale, "r", part="r_dco")
+        raise RuntimeError("crash after staging")
+
+    with pytest.raises(RuntimeError, match="after staging"):
+        pipe.state.apply(1, crashed)
     assert pipe.state.staged_rows("r") == 1
 
     # One new customer with no orders: no ΔCO, no ΔL, so no r terms.
@@ -1762,22 +1832,95 @@ def test_incragg_rollup_stream_matches_batch(spark, tmp_path):
     assert sorted(map(tuple, folded.collect())) == sorted(map(tuple, expect.collect()))
 
 
-def test_incragg_replay_is_idempotent(spark, tmp_path):
-    """Redelivering an epoch to the grouped-aggregate maintainer (crash
-    between commit and checkpoint ack) must not double the weights —
-    same replay-skip contract as the join IVM."""
+def _replay_face(spark, face, state_dir):
+    """(handle, two small epoch batches) of each stateful face."""
+    from query_processing_over_streaming_data_using_flink_spark.operators import similarity as sim
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ann_index import (
+        IncrementalIVFIndex,
+        IncrementalIVFPQIndex,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
+        IncrementalNearDedup,
+    )
     from query_processing_over_streaming_data_using_flink_spark.streaming.incragg import (
         monthly_revenue_rollup,
-        present_monthly_revenue,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
+        IncrementalQ3,
+    )
+    from query_processing_over_streaming_data_using_flink_spark.streaming.packing import (
+        IncrementalSequencePacker,
     )
 
-    log = build_changelog(spark, SF_SMOKE).filter(F.col("seq") <= 2000)
-    pipe = monthly_revenue_rollup(spark, str(tmp_path / "state"))
-    pipe.process_batch(log, 0)
-    once = sorted(map(tuple, present_monthly_revenue(pipe.result()).collect()))
-    pipe.process_batch(log, 0)  # replayed epoch
-    twice = sorted(map(tuple, present_monthly_revenue(pipe.result()).collect()))
-    assert once == twice
+    if face in ("ivm", "incragg"):
+        log = build_changelog(spark, SF_SMOKE)
+        batches = [log.filter(F.col("seq") <= 1000),
+                   log.filter((F.col("seq") > 1000) & (F.col("seq") <= 2000))]
+        if face == "ivm":
+            return IncrementalQ3(spark, state_dir), batches
+        return monthly_revenue_rollup(spark, state_dir), batches
+    if face in ("ivf", "ivfpq"):
+        emb = load_table(spark, SF_SMOKE, "embeddings")
+        batches = [emb.filter(F.col("vec_id") % 2 == e) for e in range(2)]
+        cents = sim.ivf_centroids(emb)
+        if face == "ivf":
+            return IncrementalIVFIndex(spark, state_dir, centroids=cents), batches
+        books = sim.pq_codebooks(emb)
+        return IncrementalIVFPQIndex(spark, state_dir, centroids=cents, books=books), batches
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "lang", "text")
+    batches = [docs.filter(F.col("doc_id") < 60),
+               docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 120))]
+    if face == "near_dedup":
+        return IncrementalNearDedup(spark, state_dir), batches
+    return IncrementalSequencePacker(spark, state_dir), batches
+
+
+def _tables(h):
+    return {t: _rows(h.state.read(t)) for t in h.state.tables}
+
+
+@pytest.mark.parametrize("face", ["ivm", "incragg", "ivf", "ivfpq", "near_dedup", "packing"])
+def test_replay_is_idempotent(spark, tmp_path, monkeypatch, face):
+    """Every face applies an epoch through the store's one transaction.
+    A body that raises after staging commits nothing, and the retried
+    epoch applies exactly once (the state equals a clean run's). A
+    redelivered epoch (crash between commit and checkpoint ack) leaves
+    the pointer and every table unchanged; near-dedup and packing
+    return its recorded output. Every face's epoch record has one
+    schema."""
+    clean, batches = _replay_face(spark, face, str(tmp_path / "clean"))
+    for e, b in enumerate(batches):
+        clean.process_batch(b, e)
+    h, _ = _replay_face(spark, face, str(tmp_path / "state"))
+    h.process_batch(batches[0], 0)
+    pointer, tables = h.state._pointer(), _tables(h)
+
+    real_stage = h.state.stage
+
+    def crash_after_staging(*args, **kw):
+        real_stage(*args, **kw)
+        raise RuntimeError("injected crash after staging")
+
+    with monkeypatch.context() as m:
+        m.setattr(h.state, "stage", crash_after_staging)
+        with pytest.raises(RuntimeError, match="after staging"):
+            h.process_batch(batches[1], 1)
+    assert h.state._pointer() == pointer
+    assert _tables(h) == tables
+
+    h.process_batch(batches[1], 1)
+    assert h.state.committed_epoch() == 1
+    assert set(h.state.last_epoch) == EPOCH_RECORD_KEYS
+    tables = _tables(h)
+    assert tables == _tables(clean)
+
+    pointer = h.state._pointer()
+    replayed = h.process_batch(batches[1], 1)
+    assert h.state._pointer() == pointer
+    assert _tables(h) == tables
+    if face in ("near_dedup", "packing"):
+        recorded = _rows(clean.state.output(1))
+        assert recorded and _rows(replayed) == recorded
 
 
 def test_two_pipelines_share_one_source_scan(spark, tmp_path):
@@ -1923,9 +2066,9 @@ def test_state_layout_mismatch_hard_fails(spark, tmp_path):
     old = VersionedBucketedState(
         spark, str(tmp_path / "state"), {"o2": "bucket int, k long"}
     )
-    assert old.begin_epoch(0)
-    old.stage(spark.range(3).selectExpr("0 as bucket", "id as k"), "o2")
-    old.commit(0)
+    assert old.apply(
+        0, lambda: old.stage(spark.range(3).selectExpr("0 as bucket", "id as k"), "o2")
+    )
 
     with _pytest.raises(RuntimeError, match="different pipeline version"):
         VersionedBucketedState(
