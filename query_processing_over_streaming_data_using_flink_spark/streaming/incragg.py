@@ -2,7 +2,7 @@
 changelog stream — the aggregate-only face of the IVM framework.
 
 `streaming/ivm.py` maintains a three-way join view (Q3) with the
-multilinear delta expansion; this module is the same discipline for
+two-term delta rule of each join; this module is the same discipline for
 views with no join: because a signed-weight aggregate is LINEAR in its
 input, the delta of the view is simply the same aggregate applied to
 the micro-batch (`Δagg(R) = agg(ΔR)`), appended to the log-structured

@@ -4,17 +4,23 @@ streaming pipeline (`TPCHQuery3_StreamProcessor.java:183-265`).
 
 The reference maintains per-key operator state (ValueState/MapState in
 two CoProcessFunctions + a keyed aggregate) and pushes Insert/Delete
-actions through it event-by-event. Here each micro-batch of events is
-applied with the full multilinear delta expansion
+actions through it event-by-event; each arrival probes the opposite
+side's CURRENT state, which already holds earlier arrivals
+(`CustomerOrderJoinFunction`, `TPCHQuery3_StreamProcessor.java:390-449`).
+That is the two-term delta rule of a join,
 
-    Δ(C⋈O⋈L) = ΔC·O·L + C·ΔO·L + C·O·ΔL
-             + ΔC·ΔO·L + ΔC·O·ΔL + C·ΔO·ΔL + ΔC·ΔO·ΔL
+    Δ(A⋈B) = ΔA⋈B + A′⋈ΔB,    A′ = A + ΔA,
 
-where every term is DELTA-DRIVEN: a chain of equi-joins starting from a
-(broadcast) micro-batch delta against the *on-disk* state tables — the
-old/new-state staging problem disappears because only old state appears
-on the right of any join. The signed-weight algebra is commutative, so
-any batching/ordering of events converges to the same state (unlike the
+and here each micro-batch of events is applied with it, once per join:
+
+    ΔCO = ΔC⋈O + C′⋈ΔO
+    ΔR  = ΔCO⋈L′ + CO⋈ΔL
+
+Every term is DELTA-DRIVEN: an equi-join of a (broadcast) micro-batch
+delta against a state table on disk — O and CO as committed, C′ and L′
+as committed ∪ this epoch's staged delta, i.e. as the epoch's commit
+will leave them. The signed-weight algebra is commutative, so any
+batching/ordering of events converges to the same state (unlike the
 reference, which needs an ordered single-threaded source).
 
 State discipline (LOG-STRUCTURED):
@@ -23,10 +29,9 @@ State discipline (LOG-STRUCTURED):
   ``bucket = pmod(hash(key), NUM_BUCKETS)`` — and stored as
   bucket-partitioned parquet. The intermediate view ``CO = C⋈O`` is
   itself a maintained state table (bucketed by orderkey, the key of its
-  downstream join): Δ(C⋈O⋈L) factorizes into ΔCO = ΔC·O + C·ΔO + ΔC·ΔO
-  followed by ΔR = ΔCO·L + CO·ΔL + ΔCO·ΔL, so ΔCO is computed once and
-  spilled, and every state table is scanned exactly once per epoch —
-  higher-order IVM in the style of recursive delta compilation.
+  downstream join), so Δ(C⋈O⋈L) factorizes into the two joins above:
+  ΔCO is computed once and spilled, and four delta joins run per
+  epoch — higher-order IVM in the style of recursive delta compilation.
 * Micro-batch deltas are spilled bucket-partitioned into the state
   store's staging area (`VersionedBucketedState.stage`; this module
   never touches a file itself) and read back with a trivially-true
@@ -51,17 +56,17 @@ State discipline (LOG-STRUCTURED):
   and reclaims cancelled keys; the store runs it once a bucket holds
   too many files, `compact_state` on demand.
 * Empty terms are skipped: a micro-batch carrying no customer events
-  contributes nothing through any ΔC term, and a term whose old-state
-  side is still empty (Δ⋈∅ = ∅, e.g. every state probe of a stream's
-  first epoch) contributes nothing either, so those joins are never
-  built (zero-job probes: a listing of the staged delta, the on-disk
-  bytes of the committed table).
+  contributes nothing through the ΔC term, and a term whose state side
+  is still empty (Δ⋈∅ = ∅, e.g. every committed-state probe of a
+  stream's first epoch) contributes nothing either, so those joins are
+  never built (zero-job probes: a listing of the staged delta, the
+  on-disk bytes of the committed table).
 * Every per-epoch write shuffles into `write_partitions` tasks — the
   cores, not the NUM_BUCKETS buckets — keyed so that each task owns
   whole buckets (partition = bucket mod n; see `write_partitions`).
 * Each epoch is one store transaction (`VersionedBucketedState.apply`)
   whose record times the phases `spill_l`, `spill_co`, `co`, `r_dco`,
-  `r_dl`, `telemetry` and `commit`; `last_stats` adds delta rows.
+  `r_dl`, `telemetry` and `commit`; `last_stats` adds the event count.
 * Crash atomicity: a crash anywhere before the
   pointer flip leaves ``CURRENT`` on the last complete version — every
   reader sees a consistent all-tables snapshot; the half-built version
@@ -156,8 +161,8 @@ class IncrementalQ3:
     # MAINTAINED INTERMEDIATE VIEW C⋈O (weight = w_c·w_o, bucketed by
     # orderkey — the key of its downstream join): maintaining the
     # two-way join as its own state table means ΔCO is computed once,
-    # spilled, and every L-side term probes it from disk — instead of
-    # re-deriving the (ΔC·O + C·ΔO + ΔC·ΔO) union per consumer and
+    # spilled, and both L-side terms probe it from disk — instead of
+    # re-deriving ΔC⋈O + C′⋈ΔO per consumer and
     # keeping a second full orders projection (`o2`) just to chain
     # ΔL→orders→customer. CO is also ~5× smaller than orders (segment
     # and date filters applied), so the ΔL probe reads less state.
@@ -189,7 +194,7 @@ class IncrementalQ3:
         if broadcast_threshold_bytes is not None:
             self.broadcast_threshold_bytes = broadcast_threshold_bytes
         # The last applied epoch's record (`state.last_epoch`) plus
-        # delta rows per stage; populated by process_batch.
+        # its event count; populated by process_batch.
         self.last_stats: dict | None = None
         self.segment = segment
         self.cutoff = cutoff
@@ -322,27 +327,16 @@ class IncrementalQ3:
         self.spark.sparkContext.setJobDescription(None)
         if record is None:
             return
-        # Delta rows per stage for the dashboard DAG view. `events`
-        # counts the PREDICATE-SURVIVING rows (the split applies Q3's
-        # segment/date filters before spilling), i.e. what actually
-        # enters the pipeline — not the raw micro-batch size, which
-        # would cost an extra action to know.
+        # `events` counts the PREDICATE-SURVIVING rows (the split
+        # applies Q3's segment/date filters before spilling), i.e. what
+        # actually enters the pipeline — not the raw micro-batch size,
+        # which would cost an extra action to know.
         rows = record["rows"]
-        events = rows["c"] + rows["o"] + rows["l"]
-        self.last_stats = {
-            **record,
-            "events": events,
-            "delta_c": rows["c"],
-            "delta_o": rows["o"],
-            "delta_l": rows["l"],
-            "delta_co": rows["co"],
-            "delta_r": rows["r"],
-            "state_rows_appended": events + rows["co"] + rows["r"],
-        }
+        self.last_stats = {**record, "events": rows["c"] + rows["o"] + rows["l"]}
 
     def _maintain(self, batch: DataFrame, epoch_id: int) -> None:
         """Stage the epoch's delta of every table: the two spill lanes
-        and the maintenance terms they feed."""
+        and the four delta joins they feed."""
         sc = self.spark.sparkContext
 
         # Adaptive physical strategy, sized from REAL on-disk bytes of
@@ -373,30 +367,36 @@ class IncrementalQ3:
                 return delta_df, F.broadcast(state_df)
             return delta_df, state_df
 
-        c_old = self.state.read("c")
         o_old = self.state.read("o")      # bucketed by o_custkey
         co_old = self.state.read("co")    # maintained C⋈O view, bucketed by o_orderkey
-        l_old = self.state.read("l")
         # Committed on-disk bytes of the old state (zero Spark jobs):
         # they size the broadcast side, and 0 means the table holds no
         # rows, so every term probing it is empty (Δ⋈∅ = ∅) and skipped.
         old_bytes = {n: self.state.bytes(n) for n in ("c", "o", "co", "l")}
         nparts = write_partitions(self.spark)
 
+        def primed(name: str) -> tuple[DataFrame, int]:
+            """X′: `name` as this epoch's commit will leave it (committed
+            ∪ staged), and its on-disk bytes (0: no rows). An empty
+            committed side is left out of the union: in a stream's first
+            epoch it cost ~0.2 s (half the sf0.01 changelog, 4 cores)."""
+            df, delta = self.state.read(name), self.state.staged(name)
+            if delta is not None:
+                df = df.unionByName(delta) if old_bytes[name] else delta
+            return df, old_bytes[name] + self.state.staged_bytes(name)
+
         REKEY = bucket_of(F.col("o_orderkey")).alias("bucket")
 
-        # Lane handshake (split-lane spill, guide §2.6): the L lane
-        # publishes its spilled delta here and sets the event; the CO
-        # lane waits on it only at the point it builds the ΔCO⋈ΔL term
-        # — by which time the (faster) L spill has long landed.
+        # Lane handshake (split-lane spill, guide §2.6): the CO lane
+        # reads L′ only once the L lane has staged ΔL — by which time
+        # the (faster) L spill has long landed.
         l_spilled = threading.Event()
-        _dl_box: dict[str, DataFrame] = {}
 
         def fold_spill_r(part: DataFrame, part_set: str) -> None:
             # The r delta lands as TWO independently-staged part-sets
             # (r_dco, r_dl) so the CO⋈ΔL term — which depends only on
             # the OLD co state and the ΔL spill — can run concurrently
-            # with the ΔCO spill and the ΔCO-driven terms (guide §2.6:
+            # with the ΔCO spill and the ΔCO⋈L′ term (guide §2.6:
             # overlap independent jobs; the state is a weight multiset,
             # so two appended part-sets sum to exactly what one folded
             # write would; cross-part netting happens in compaction).
@@ -417,9 +417,9 @@ class IncrementalQ3:
             )
 
         def maintain_co_chain(dc: DataFrame | None, do: DataFrame | None) -> None:
-            """Stage 1 (ΔCO = ΔC·O + C·ΔO + ΔC·ΔO, staged once as the
-            co table's epoch delta) followed by the ΔCO-driven r terms
-            (ΔCO·L + ΔCO·ΔL) — the dependent chain, one thread."""
+            """ΔCO = ΔC⋈O + C′⋈ΔO, staged once as the co table's epoch
+            delta, followed by the ΔCO-driven r term ΔCO⋈L′ — the
+            dependent chain, one thread."""
             with self.state.phase("co"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-CO join+spill")
                 co_parts: list[DataFrame] = []
@@ -434,25 +434,21 @@ class IncrementalQ3:
                         )
                         .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
                     )
-                if do is not None and old_bytes["c"]:
-                    # C ⋈ ΔO — the segment-filtered customer state is
-                    # often the smaller side here; `sides` picks per-epoch.
+                c_new, c_bytes = primed("c")
+                if do is not None and c_bytes:
+                    # C′ ⋈ ΔO — C′ already holds ΔC, so this term also
+                    # joins the epoch's new customers to its new orders.
+                    # The segment-filtered customer state is often the
+                    # smaller side here; `sides` picks per-epoch.
                     do_c = do.select(
                         F.col("bucket").alias("b_c"), "o_orderkey", "o_custkey", "o_orderdate", "w_o"
                     )
-                    do_h, c_h = sides(do_c, self.state.staged_bytes("o"), c_old, old_bytes["c"])
+                    do_h, c_h = sides(do_c, self.state.staged_bytes("o"), c_new, c_bytes)
                     co_parts.append(
                         c_h.join(
                             do_h,
                             (F.col("bucket") == F.col("b_c")) & (F.col("c_custkey") == F.col("o_custkey")),
                         )
-                        .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
-                    )
-                if dc is not None and do is not None:
-                    # ΔC ⋈ ΔO (both tiny)
-                    co_parts.append(
-                        dc.select("c_custkey", "w_c")
-                        .join(do, F.col("c_custkey") == F.col("o_custkey"))
                         .select(REKEY, "o_orderkey", "o_orderdate", (F.col("w_c") * F.col("w_o")).alias("w"))
                     )
                 if co_parts:
@@ -463,62 +459,48 @@ class IncrementalQ3:
                     # (whole buckets per task, at most one file per
                     # bucket, no hash-collision stragglers — see _spill_l).
                     self.state.stage(dco_all.repartition(nparts, "o_orderkey"), "co")
-            # With no ΔCO rows there are no ΔCO-driven r terms.
+            # With no ΔCO rows there is no ΔCO-driven r term.
             dco = self._delta("co", "o_orderkey")
             if dco is None:
                 return
             with self.state.phase("r_dco"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
-                # The ΔCO⋈ΔL term needs the L lane's spill on disk; the
-                # ΔCO spill above takes longer than the L spill, so this
-                # wait is effectively free.
+                # L′ holds the L lane's ΔL; the ΔCO spill above takes
+                # longer than the L spill, so this wait is effectively free.
                 l_spilled.wait()
-                dl_small = _dl_box.get("dl_small")
-                terms = []
-                if old_bytes["l"]:
-                    # ΔCO ⋈ L — the old-lineitem probe.
-                    dco_h, l_h = sides(dco, self.state.staged_bytes("co"), l_old, old_bytes["l"])
-                    terms.append(
-                        l_h.join(
-                            dco_h,
-                            (l_old["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
-                        )
-                        .select(
-                            l_old["bucket"].alias("bucket"),
-                            "l_orderkey",
-                            "o_orderdate",
-                            (F.col("w") * F.col("w_cents")).alias("cents"),
-                        )
+                l_new, l_bytes = primed("l")
+                if not l_bytes:
+                    return
+                # ΔCO ⋈ L′
+                dco_h, l_h = sides(dco, self.state.staged_bytes("co"), l_new, l_bytes)
+                fold_spill_r(
+                    l_h.join(
+                        dco_h,
+                        (l_new["bucket"] == dco["bucket"]) & (F.col("l_orderkey") == F.col("o_orderkey")),
                     )
-                if dl_small is not None:
-                    # ΔCO ⋈ ΔL (both tiny)
-                    terms.append(
-                        dco.join(
-                            dl_small,
-                            (dco["bucket"] == F.col("b_l")) & (F.col("o_orderkey") == F.col("l_orderkey")),
-                        )
-                        .select(
-                            F.col("b_l").alias("bucket"), "l_orderkey", "o_orderdate",
-                            (F.col("w") * F.col("w_cents")).alias("cents"),
-                        )
-                    )
-                if terms:
-                    fold_spill_r(terms[0] if len(terms) == 1 else terms[0].unionByName(terms[1]), "r_dco")
+                    .select(
+                        l_new["bucket"].alias("bucket"),
+                        "l_orderkey",
+                        "o_orderdate",
+                        (F.col("w") * F.col("w_cents")).alias("cents"),
+                    ),
+                    "r_dco",
+                )
 
-        def maintain_r_dl() -> None:
-            """CO ⋈ ΔL — probe the maintained view with the lineitem
+        def maintain_r_dl(dl: DataFrame | None) -> None:
+            """CO ⋈ ΔL — probe the committed view with the lineitem
             delta; depends only on OLD state + the ΔL spill, so it runs
             concurrently with the whole CO chain and starts the moment
             the L spill lands — before the C/O spill has even finished.
             In a bulk epoch ΔL is millions of rows while the filtered
             CO view stays compact — `sides` flips the broadcast to the
             view."""
-            dl_small = _dl_box.get("dl_small")
-            if dl_small is None or not old_bytes["co"]:
+            if dl is None or not old_bytes["co"]:
                 return
             with self.state.phase("r_dl"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (CO.dL term) join+spill")
-                dl_h, co_h = sides(dl_small, self.state.staged_bytes("l"), co_old, old_bytes["co"])
+                dl_b = dl.select(F.col("bucket").alias("b_l"), "l_orderkey", "w_cents")
+                dl_h, co_h = sides(dl_b, self.state.staged_bytes("l"), co_old, old_bytes["co"])
                 fold_spill_r(
                     co_h.join(
                         dl_h,
@@ -535,20 +517,16 @@ class IncrementalQ3:
         # own maintenance chain, so the spills themselves overlap too —
         # lane L (ΔL spill → CO⋈ΔL probe) runs entirely inside the
         # shadow of lane CO's critical path (ΔC/ΔO spill → ΔCO spill →
-        # ΔCO-driven R terms); no maintenance waits on a whole-batch
-        # spill (numbers in OPTIMIZATION_r15.md).
+        # ΔCO⋈L′); no maintenance waits on a whole-batch spill (numbers
+        # in OPTIMIZATION_r15.md).
         def lane_l() -> None:
             with self.state.phase("spill_l"):
                 sc.setJobDescription(f"ivm epoch {epoch_id}: delta-L spill")
                 try:
                     dl = self._spill_l(batch)
-                    if dl is not None:
-                        _dl_box["dl_small"] = dl.select(
-                            F.col("bucket").alias("b_l"), "l_orderkey", "w_cents"
-                        )
                 finally:
                     l_spilled.set()  # never deadlock lane CO on a failed spill
-            maintain_r_dl()
+            maintain_r_dl(dl)
 
         def lane_co() -> None:
             with self.state.phase("spill_co"):
@@ -609,8 +587,9 @@ def run_streaming_q3(
     emission (console/WebSocket sink in the reference); `stats` is
     `IncrementalQ3.last_stats`: the store's record of the last applied
     epoch (`state.last_epoch`: epoch, staged rows per table, phase
-    seconds, whether it compacted) plus the IVM's delta rows per stage
-    (a replayed epoch applies nothing and leaves it unchanged). Pass
+    seconds, whether it compacted) plus `events`, the rows that passed
+    Q3's filters (a replayed epoch applies nothing and leaves it
+    unchanged). Pass
     e.g. ``lambda e, df, stats: df.show()``.
 
     With `checkpoint_dir`, a restart resumes from the last acknowledged

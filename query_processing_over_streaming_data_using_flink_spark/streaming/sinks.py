@@ -105,13 +105,13 @@ def threads_json_payload(spark=None, ts: float | None = None) -> str:
 # the reference's simple_index.html renders a 9-node pipeline graph of
 # its Flink job; this is the engine's actual dataflow
 # (streaming/ivm.py): changelog source → relation split → bucketed
-# delta spills → 7-term delta expansion → Δresult fold → append commit
+# delta spills → delta joins ΔCO, ΔR → Δresult fold → append commit
 # → Top-N emission.
 PIPELINE_NODES: tuple[tuple[str, str], ...] = (
     ("source", "changelog source"),
     ("split", "relation split ΔC/ΔO/ΔL"),
     ("spill", "bucketed delta spill"),
-    ("expand", "7-term delta expansion"),
+    ("expand", "delta joins ΔCO, ΔR"),
     ("fold", "Δresult fold"),
     ("commit", "append commit (epoch)"),
     ("topn", "Top-N emission"),
@@ -129,20 +129,20 @@ def pipeline_json_payload(
     job-graph view (reference `simple_index.html` pipeline DAG): node
     list, edge list, and the epoch that just flowed through it. With
     `stats` (IncrementalQ3.last_stats: the store's `state.last_epoch`
-    record plus delta rows per stage, from parquet footers), each node
-    carries the row count that flowed out of it, the reference DAG's
-    per-node event counters."""
+    record, whose `rows` are each table's staged delta rows from parquet
+    footers, plus `events`), each node carries the row count that flowed
+    out of it, the reference DAG's per-node event counters."""
     counts: dict[str, int] = {}
     if stats:
-        events = stats.get("events", 0)
+        events, rows = stats["events"], stats["rows"]
         counts = {
             "source": events,
             "split": events,
             "spill": events,
-            "expand": stats.get("delta_co", 0),
-            "fold": stats.get("delta_r", 0),
-            "commit": stats.get("state_rows_appended", 0),
-            "topn": min(20, stats.get("delta_r", 0)),
+            "expand": rows["co"],
+            "fold": rows["r"],
+            "commit": sum(rows.values()),
+            "topn": min(20, rows["r"]),
         }
     return json.dumps(
         {

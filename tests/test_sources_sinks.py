@@ -92,9 +92,8 @@ def test_topn_sinks(spark, tmp_path):
     # With IVM epoch stats each node carries its per-epoch row count
     # (the reference DAG's per-node event counters).
     stats = {
-        "epoch": 7, "events": 100, "delta_c": 10, "delta_o": 30,
-        "delta_l": 60, "delta_co": 25, "delta_r": 12,
-        "state_rows_appended": 137,
+        "epoch": 7, "events": 100,
+        "rows": {"c": 10, "o": 30, "l": 60, "co": 25, "r": 12},
     }
     pipe = json.loads(sinks.pipeline_json_payload(7, stats=stats))
     by_id = {n["id"]: n["count"] for n in pipe["nodes"]}
@@ -562,9 +561,8 @@ def test_websocket_topn_push():
         from query_processing_over_streaming_data_using_flink_spark.streaming import sinks as _sinks
 
         stats = {
-            "epoch": 3, "events": 42, "delta_c": 2, "delta_o": 10,
-            "delta_l": 30, "delta_co": 9, "delta_r": 5,
-            "state_rows_appended": 56,
+            "epoch": 3, "events": 42,
+            "rows": {"c": 2, "o": 10, "l": 30, "co": 9, "r": 5},
         }
         srv.broadcast_aux(_sinks.pipeline_json_payload(3, stats=stats))
         while True:  # metrics monitor may interleave threads frames

@@ -174,8 +174,8 @@ def test_ivm_progress_stats_telemetry(spark, tmp_path):
     ).count()
     assert sum(s["events"] for s in seen) == relevant
     for s in seen:
-        assert s["events"] == s["delta_c"] + s["delta_o"] + s["delta_l"]
-        assert s["state_rows_appended"] >= s["events"]
+        assert s["events"] == s["rows"]["c"] + s["rows"]["o"] + s["rows"]["l"]
+        assert sum(s["rows"].values()) >= s["events"]
         # The store's epoch record, under the names perfbench reads.
         assert EPOCH_RECORD_KEYS <= set(s)
         assert {"commit", "telemetry"} <= set(s["phase_sec"])
@@ -910,8 +910,13 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
     bucket directory of the c table, (b) carry every other bucket/table
     file over as a hard link (same inode — metadata only, zero row
     data), and (c) probe the state through a dynamic-partition-pruned
-    scan in the epoch's ΔCO join."""
+    scan in the epoch's ΔCO join. A further epoch then carries one
+    order of that customer and one of its lineitems: the group reaches
+    `r` only through ΔCO ⋈ L′, whose L′ is committed ∪ staged lineitem
+    state, and both of its scans are pruned."""
+    import datetime
     import pathlib
+    import re
 
     from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
         IncrementalQ3,
@@ -972,6 +977,52 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
         assert after[path] == ino, f"untouched {path} was rewritten, not linked"
     # And the new key is in state with weight 1.
     assert _cust_weight(pipe) == [(NEW_CUST_KEY, 1)]
+
+    # Epoch 2: an order of the new customer (before the cutoff) and one
+    # of its lineitems (shipped after it). Committed CO holds no such
+    # order and committed L no such line, so the group's revenue comes
+    # only from ΔCO joined with this epoch's staged ΔL.
+    order_key = 10**9 + 9
+    batch2 = spark.createDataFrame(
+        [
+            (1, "orders", None, None, order_key, NEW_CUST_KEY,
+             datetime.datetime(1995, 1, 1), None, None, None, None),
+            (1, "lineitem", None, None, order_key, None,
+             None, 1, 1e7, 0.0, datetime.datetime(1995, 6, 1)),
+        ],
+        "op int, relation string, custkey long, mktsegment string, orderkey long, "
+        "o_custkey long, orderdate timestamp_ntz, linenumber int, "
+        "extendedprice double, discount double, shipdate timestamp_ntz",
+    )
+    seen = max(x.executionId() for x in executions())
+    pipe.process_batch(batch2, 2)
+    applied = (
+        build_changelog(spark, SF_SMOKE)
+        .unionByName(batch, allowMissingColumns=True)
+        .unionByName(batch2, allowMissingColumns=True)
+    )
+
+    def revenue(df):
+        return [r["revenue"] for r in df.collect() if r["l_orderkey"] == order_key]
+
+    assert revenue(pipe.top_n(20)) == revenue(q3_on_state(applied)) == [1e7]
+    # ΔCO ⋈ L′ prunes both children of the committed ∪ staged union.
+    plan = "\n".join(
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() > seen
+        and x.description() == "ivm epoch 2: delta-R (dCO terms) join+spill"
+    )
+    pruned = {
+        loc
+        for loc, filters in re.findall(
+            r"Location: InMemoryFileIndex \[(\S+)\]\nPartitionFilters: \[(.*)\]", plan
+        )
+        if "dynamicpruningexpression" in filters
+    }
+    assert plan.count("dynamicpruningexpression") >= 2, plan[:4000]
+    assert any(loc.endswith(f"/{os.path.basename(v1)}/l") for loc in pruned), pruned
+    assert any(loc.endswith("/table=l") for loc in pruned), pruned
 
 
 def _last_job_id(spark) -> int:
@@ -1690,7 +1741,7 @@ def test_ivm_never_publishes_stale_staged_files(spark, tmp_path):
     # One new customer with no orders: no ΔCO, no ΔL, so no r terms.
     batch = _single_customer_batch(spark)
     pipe.process_batch(batch, 1)
-    assert pipe.last_stats["delta_r"] == 0
+    assert pipe.last_stats["rows"]["r"] == 0
     applied = log.unionByName(batch, allowMissingColumns=True)
     assert _rows(pipe.top_n(20)) == _rows(q3_on_state(applied))
 
