@@ -93,6 +93,25 @@ def _lsh_tables(vec: Column) -> Column:
     )
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, vec_col array<double>) from a (vec_id, embedding) frame."""
+    return df.select(
+        F.col("vec_id").alias(id_col), _as_double(F.col("embedding")).alias(vec_col)
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """(q_id, n_id, rank, score): each query's `k` best rows by
+    `score`, ties → lower n_id, the score rounded to 6 places — the
+    ranking step every search here ends with."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", "rank", F.round(score, 6).alias(score))
+    )
+
+
 def knn_bruteforce(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -103,12 +122,8 @@ def knn_bruteforce(
     Scale: broadcast-join (queries are small by construction) → no
     shuffle of the big side; the only shuffle is the per-query top-k,
     which AQE sizes by q·n/partitions."""
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
-    ).withColumn("q_n", l2_norm(F.col("q_vec")))
-    c = embeddings.select(
-        F.col("vec_id").alias("n_id"), _as_double(F.col("embedding")).alias("n_vec")
-    ).withColumn("n_n", l2_norm(F.col("n_vec")))
+    q = _vectors(queries, "q_id", "q_vec").withColumn("q_n", l2_norm(F.col("q_vec")))
+    c = _vectors(embeddings, "n_id", "n_vec").withColumn("n_n", l2_norm(F.col("n_vec")))
     scored = (
         c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
         .withColumn(
@@ -118,12 +133,7 @@ def knn_bruteforce(
             ),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _top_k(scored, k, "sim")
 
 
 def knn_bruteforce_dot(
@@ -132,21 +142,12 @@ def knn_bruteforce_dot(
     """Exact top-k INNER-PRODUCT neighbors — the baseline the PQ-ADC
     search approximates (PQ's native measure is the dot product).
     Same plan shape as `knn_bruteforce`."""
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("n_id"), _as_double(F.col("embedding")).alias("n_vec")
-    )
+    q = _vectors(queries, "q_id", "q_vec")
+    c = _vectors(embeddings, "n_id", "n_vec")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).withColumn(
         "score", dot(F.col("q_vec"), F.col("n_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _top_k(scored, k, "score")
 
 
 def knn_lsh(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
@@ -159,10 +160,7 @@ def knn_lsh(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     — never an all-pairs product; table count L and width r trade
     recall against candidate volume."""
     q = (
-        queries.select(
-            F.col("vec_id").alias("q_id"),
-            _as_double(F.col("embedding")).alias("q_vec"),
-        )
+        _vectors(queries, "q_id", "q_vec")
         .withColumn("q_n", l2_norm(F.col("q_vec")))
         .select(
             "q_id", "q_vec", "q_n",
@@ -171,10 +169,7 @@ def knn_lsh(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
         .select("q_id", "q_vec", "q_n", "t.tbl", "t.sig")
     )
     c = (
-        embeddings.select(
-            F.col("vec_id").alias("n_id"),
-            _as_double(F.col("embedding")).alias("n_vec"),
-        )
+        _vectors(embeddings, "n_id", "n_vec")
         .withColumn("n_n", l2_norm(F.col("n_vec")))
         .select(
             "n_id", "n_vec", "n_n",
@@ -192,12 +187,7 @@ def knn_lsh(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
         "sim",
         cosine_norm(F.col("q_vec"), F.col("n_vec"), F.col("q_n"), F.col("n_n")),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _top_k(scored, k, "sim")
 
 
 def knn_bruteforce_pandas(
@@ -218,21 +208,12 @@ def knn_bruteforce_pandas(
             / (np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1))
         )
 
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("n_id"), _as_double(F.col("embedding")).alias("n_vec")
-    )
+    q = _vectors(queries, "q_id", "q_vec")
+    c = _vectors(embeddings, "n_id", "n_vec")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).withColumn(
         "sim", cos_batch(F.col("q_vec"), F.col("n_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _top_k(scored, k, "sim")
 
 
 def cosine_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -286,18 +267,12 @@ def cross_cosine_pairs(
     ``broadcast_b=False`` for two corpus-scale sides, where the sig
     equi-join becomes the one (narrow, 8-byte-key) shuffle."""
     a = (
-        a_embeddings.select(
-            F.col("vec_id").alias("id_a"),
-            _as_double(F.col("embedding")).alias("vec_a"),
-        )
+        _vectors(a_embeddings, "id_a", "vec_a")
         .withColumn("sig", sign_signature(F.col("vec_a")))
         .withColumn("n_a", l2_norm(F.col("vec_a")))
     )
     b = (
-        b_embeddings.select(
-            F.col("vec_id").alias("id_b"),
-            _as_double(F.col("embedding")).alias("vec_b"),
-        )
+        _vectors(b_embeddings, "id_b", "vec_b")
         .withColumn("sig", sign_signature(F.col("vec_b")))
         .withColumn("n_b", l2_norm(F.col("vec_b")))
     )
@@ -336,10 +311,7 @@ def cross_cosine_pairs_multi(
     decontamination use), the A side streams its 10 (table, sig) keys
     map-side, and the only shuffle is the pair-level distinct."""
     a = (
-        a_embeddings.select(
-            F.col("vec_id").alias("id_a"),
-            _as_double(F.col("embedding")).alias("vec_a"),
-        )
+        _vectors(a_embeddings, "id_a", "vec_a")
         .withColumn("n_a", l2_norm(F.col("vec_a")))
         .select(
             "id_a", "vec_a", "n_a",
@@ -348,10 +320,7 @@ def cross_cosine_pairs_multi(
         .select("id_a", "vec_a", "n_a", "t.tbl", "t.sig")
     )
     b = (
-        b_embeddings.select(
-            F.col("vec_id").alias("id_b"),
-            _as_double(F.col("embedding")).alias("vec_b"),
-        )
+        _vectors(b_embeddings, "id_b", "vec_b")
         .withColumn("n_b", l2_norm(F.col("vec_b")))
         .select(
             "id_b", "vec_b", "n_b",
@@ -409,9 +378,7 @@ def ivf_centroids(
     corpus shuffle), repeat the quantized aggregate. Each round is one
     linear corpus pass; cells emptied by a round simply vanish (their
     inverted list would be empty anyway)."""
-    corpus = embeddings.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-    )
+    corpus = _vectors(embeddings, "id", "vec")
     cents = _centroid_sums(corpus.withColumn("cell", (F.col("id") % cells)))
     for _ in range(refine):
         cents = _centroid_sums(_nearest_cells(corpus, cents, 1))
@@ -586,6 +553,34 @@ def pq_encode(embeddings: DataFrame, books: DataFrame, m: int = PQ_M) -> DataFra
     return _pq_assign(_pq_subvectors(embeddings, m), books)
 
 
+def _pq_lut(queries: DataFrame, books: DataFrame, m: int) -> DataFrame:
+    """(q_id, s, code, part): each query's ADC lookup table — the dot
+    of its subvector `s` with every codebook entry of subspace `s`
+    (m·K rows per query, broadcast by every scan that reads it)."""
+    return _pq_subvectors(queries, m).join(F.broadcast(books), "s").select(
+        F.col("id").alias("q_id"),
+        "s",
+        "code",
+        dot(F.col("sub"), F.col("cvec")).alias("part"),
+    )
+
+
+def _adc_scores(pairs: DataFrame) -> DataFrame:
+    """(q_id, n_id, score) from (q_id, n_id, s, part) rows: the
+    approximate inner product Σ_s part, folded in fixed subspace order
+    (no float-merge nondeterminism)."""
+    return pairs.groupBy("q_id", "n_id").agg(
+        F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("s", "part"))),
+                lambda t: t["part"],
+            ),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        ).alias("score")
+    )
+
+
 def knn_pq(
     embeddings: DataFrame, queries: DataFrame, k: int = 5, m: int = PQ_M
 ) -> DataFrame:
@@ -593,77 +588,79 @@ def knn_pq(
     approx_dot(q, x) = Σ_s dot(q_s, codebook[s][code_s(x)]). Per query
     the LUT (m·K dot products against the codebooks) is broadcast; the
     scan touches only the code table, never raw vectors — FAISS
-    PQ-flat, relationally. Scores fold in fixed subspace order (no
-    float-merge nondeterminism). Returns (q_id, n_id, rank, score) —
-    score is approximate INNER PRODUCT (the PQ-native measure), so the
+    PQ-flat, relationally. Returns (q_id, n_id, rank, score) — score
+    is approximate INNER PRODUCT (the PQ-native measure), so the
     recall certification compares against exact-dot top-k."""
     books = pq_codebooks(embeddings, m).persist()
-    codes = pq_encode(embeddings, books, m)
-    qsubs = _pq_subvectors(queries, m)
-    lut = qsubs.join(F.broadcast(books), "s").select(
-        F.col("id").alias("q_id"),
-        "s",
-        "code",
-        dot(F.col("sub"), F.col("cvec")).alias("part"),
+    codes = pq_encode(embeddings, books, m).withColumnRenamed("id", "n_id")
+    pairs = codes.join(F.broadcast(_pq_lut(queries, books, m)), ["s", "code"]).filter(
+        F.col("q_id") != F.col("n_id")
     )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("q_id") != F.col("id"))
-        .groupBy("q_id", F.col("id").alias("n_id"))
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "part"))),
-                    lambda t: t["part"],
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("score", 6).alias("score"))
-    )
+    return _top_k(_adc_scores(pairs), k, "score")
 
 
-def knn_ivf_filtered(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    allowed: DataFrame,
-    k: int = 5,
-    cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Metadata-FILTERED vector search over the shared IVF index: top-k
-    among only the corpus vectors whose id appears in `allowed` (one
-    `id` column — e.g. doc_ids passing a lang/quality/licence
-    predicate). The index (centroids + inverted lists) is built over
-    the FULL corpus — the production situation: one index, many
-    filters — and the predicate applies as a semi-join on the
-    candidate ids inside the probed cells, before any scoring. One
-    extra equi-join over plain `knn_ivf` (broadcast when the allowed
-    set is small, AQE decides otherwise); with a selective filter,
-    raise `nprobe` to hold recall — candidates per probe shrink by the
-    filter's selectivity."""
-    cents = ivf_centroids(embeddings, cells).persist()
-    corpus = embeddings.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-    )
-    inv = _nearest_cells(corpus, cents, 1).select(
+# The IVF index, one copy of each step. Every batch search below and
+# both streaming indexes (`streaming/ann_index.py`) run these, so a
+# stream search equals the batch one because both run the same code:
+#   train   ivf_centroids / pq_codebooks        → the quantizers;
+#   lists   ivf_lists / ivfpq_lists             → (n_id, n_vec | s+code, cell);
+#   search  ivf_search / adc_search             → top-k over probed cells;
+#   rerank  exact_rerank                        → exact top-k of candidates.
+
+
+def ivf_lists(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
+    """(n_id, n_vec, cell): the IVF-flat inverted lists — every
+    (vec_id, embedding) row filed under its nearest centroid."""
+    return _nearest_cells(_vectors(embeddings, "id", "vec"), cents, 1).select(
         F.col("id").alias("n_id"), F.col("vec").alias("n_vec"), "cell"
-    ).join(allowed.select(F.col("id").alias("n_id")), "n_id", "left_semi").withColumn(
-        "n_n", l2_norm(F.col("n_vec"))
     )
-    probes = _nearest_cells(
-        queries.select(F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")),
-        cents,
-        nprobe,
-    ).select(F.col("id").alias("q_id"), F.col("vec").alias("q_vec"), "cell").withColumn(
-        "q_n", l2_norm(F.col("q_vec"))
+
+
+def ivfpq_lists(
+    embeddings: DataFrame, cents: DataFrame, books: DataFrame, m: int = PQ_M
+) -> DataFrame:
+    """(n_id, cell, s, code): the IVF-PQ inverted lists — they hold
+    each vector's PQ CODES (`pq_encode`), not the vector, under its
+    nearest centroid."""
+    return (
+        ivf_lists(embeddings, cents)
+        .select("n_id", "cell")
+        .join(pq_encode(embeddings, books, m).withColumnRenamed("id", "n_id"), "n_id")
     )
+
+
+def _probes(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(q_id, q_vec, cell): each query's `nprobe` nearest cells."""
+    return _nearest_cells(_vectors(queries, "id", "vec"), cents, nprobe).select(
+        F.col("id").alias("q_id"), F.col("vec").alias("q_vec"), "cell"
+    )
+
+
+def _allowed(lists: DataFrame, allowed: DataFrame | None) -> DataFrame:
+    """`lists` restricted to the ids `allowed` (one `id` column) names:
+    a semi-join before any scoring, so one index serves many metadata
+    filters (broadcast when the allowed set is small, AQE decides)."""
+    if allowed is None:
+        return lists
+    return lists.join(allowed.select(F.col("id").alias("n_id")), "n_id", "left_semi")
+
+
+def ivf_search(
+    lists: DataFrame,
+    cents: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    nprobe: int = IVF_NPROBE,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """Top-k cosine neighbors over IVF-flat `lists` (n_id, n_vec,
+    cell): each (vec_id, embedding) query exact-scans only its
+    `nprobe` closest cells, reached through an equi-join on `cell`
+    against the broadcast probes. Returns (q_id, n_id, rank, sim).
+    With a selective `allowed` filter, raise `nprobe` to hold recall —
+    candidates per probe shrink by the filter's selectivity."""
+    inv = _allowed(lists, allowed).withColumn("n_n", l2_norm(F.col("n_vec")))
+    probes = _probes(queries, cents, nprobe).withColumn("q_n", l2_norm(F.col("q_vec")))
     scored = (
         inv.join(F.broadcast(probes), "cell")
         .filter(F.col("q_id") != F.col("n_id"))
@@ -672,12 +669,73 @@ def knn_ivf_filtered(
             cosine_norm(F.col("q_vec"), F.col("n_vec"), F.col("q_n"), F.col("n_n")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
+    return _top_k(scored, k, "sim")
+
+
+def adc_search(
+    lists: DataFrame,
+    cents: DataFrame,
+    books: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    nprobe: int = IVF_NPROBE,
+    m: int = PQ_M,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """Top-k by ADC over IVF-PQ `lists` (n_id, cell, s, code): the
+    code rows of each query's `nprobe` closest cells are scored
+    against its broadcast LUT — neither raw vectors nor unprobed cells
+    are touched. Returns (q_id, n_id, rank, score), score the
+    approximate inner product."""
+    probes = _probes(queries, cents, nprobe).select("q_id", "cell")
+    pairs = (
+        _allowed(lists, allowed)
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("q_id") != F.col("n_id"))
+        .join(F.broadcast(_pq_lut(queries, books, m)), ["q_id", "s", "code"])
     )
+    return _top_k(_adc_scores(pairs), k, "score")
+
+
+def exact_rerank(
+    cand: DataFrame, embeddings: DataFrame, queries: DataFrame, k: int = 5
+) -> DataFrame:
+    """Top-k of the candidate (q_id, n_id) pairs re-scored with the
+    EXACT inner product from raw (vec_id, embedding) rows. The
+    candidate list (R·q rows) is broadcast against the corpus — no
+    corpus shuffle, no all-pairs product. Returns (q_id, n_id, rank,
+    score)."""
+    scored = (
+        _vectors(embeddings, "n_id", "n_vec")
+        .join(F.broadcast(cand), "n_id")
+        .join(F.broadcast(_vectors(queries, "q_id", "q_vec")), "q_id")
+        .withColumn("score", dot(F.col("q_vec"), F.col("n_vec")))
+    )
+    return _top_k(scored, k, "score")
+
+
+def knn_ivf(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    cells: int = IVF_CELLS,
+    nprobe: int = IVF_NPROBE,
+    allowed: DataFrame | None = None,
+) -> DataFrame:
+    """Approximate top-k via IVF-flat: corpus vectors are inverted-
+    listed under their nearest centroid; each query exact-scans only
+    its `nprobe` closest cells. Same output shape as `knn_bruteforce`.
+    `allowed` (one `id` column — e.g. doc_ids passing a lang/quality/
+    licence predicate) keeps only those candidates: the index is built
+    over the FULL corpus — one index, many filters.
+
+    Scale: candidate volume is ~n·nprobe/cells per query instead of n,
+    reached through an equi-join on `cell` — the centroid table is
+    broadcast (cells ≪ corpus), the inverted lists are just a
+    partitioning of the corpus, and nothing driver-side ever sees a
+    vector. This is the relational rendering of FAISS IVF-flat."""
+    cents = ivf_centroids(embeddings, cells).persist()
+    return ivf_search(ivf_lists(embeddings, cents), cents, queries, k, nprobe, allowed)
 
 
 def knn_ivfpq(
@@ -707,51 +765,8 @@ def knn_ivfpq(
     )
 
     materialize_concurrently([cents, books])
-    corpus = embeddings.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-    )
-    # Inverted lists hold CODES, not vectors: (n_id, cell, s, code).
-    inv = (
-        _nearest_cells(corpus, cents, 1)
-        .select(F.col("id"), "cell")
-        .join(pq_encode(embeddings, books, m), "id")
-        .select(F.col("id").alias("n_id"), "cell", "s", "code")
-    )
-    probes = _nearest_cells(
-        queries.select(
-            F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-        ),
-        cents,
-        nprobe,
-    ).select(F.col("id").alias("q_id"), "cell")
-    lut = _pq_subvectors(queries, m).join(F.broadcast(books), "s").select(
-        F.col("id").alias("q_id"),
-        "s",
-        "code",
-        dot(F.col("sub"), F.col("cvec")).alias("part"),
-    )
-    scored = (
-        inv.join(F.broadcast(probes), "cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .join(F.broadcast(lut), ["q_id", "s", "code"])
-        .groupBy("q_id", "n_id")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "part"))),
-                    lambda t: t["part"],
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("score", 6).alias("score"))
-    )
+    lists = ivfpq_lists(embeddings, cents, books, m)
+    return adc_search(lists, cents, books, queries, k, nprobe, m)
 
 
 #
@@ -786,75 +801,11 @@ def knn_ivfpq_rerank(
     only the candidate set is approximate.
 
     Scale: stage 1 is the codes-only IVF-PQ scan (8 B/vector); stage 2
-    touches raw vectors for only R·q candidate rows, fetched by
-    broadcasting the candidate list against the corpus — no corpus
-    shuffle, no all-pairs product."""
+    touches raw vectors for only R·q candidate rows."""
     cand = knn_ivfpq(
         embeddings, queries, k=rerank, cells=cells, nprobe=nprobe, m=m
     ).select("q_id", "n_id")
-    c = embeddings.select(
-        F.col("vec_id").alias("n_id"), _as_double(F.col("embedding")).alias("n_vec")
-    )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
-    )
-    scored = (
-        c.join(F.broadcast(cand), "n_id")
-        .join(F.broadcast(q), "q_id")
-        .withColumn("score", dot(F.col("q_vec"), F.col("n_vec")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("score", 6).alias("score"))
-    )
-
-
-def knn_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Approximate top-k via IVF-flat: corpus vectors are inverted-
-    listed under their nearest centroid; each query exact-scans only
-    its `nprobe` closest cells. Same output shape as `knn_bruteforce`.
-
-    Scale: candidate volume is ~n·nprobe/cells per query instead of n,
-    reached through an equi-join on `cell` — the centroid table is
-    broadcast (cells ≪ corpus), the inverted lists are just a
-    partitioning of the corpus, and nothing driver-side ever sees a
-    vector. This is the relational rendering of FAISS IVF-flat."""
-    cents = ivf_centroids(embeddings, cells).persist()
-    corpus = embeddings.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-    )
-    inv = _nearest_cells(corpus, cents, 1).select(
-        F.col("id").alias("n_id"), F.col("vec").alias("n_vec"), "cell"
-    ).withColumn("n_n", l2_norm(F.col("n_vec")))
-    probes = _nearest_cells(
-        queries.select(F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")),
-        cents,
-        nprobe,
-    ).select(F.col("id").alias("q_id"), F.col("vec").alias("q_vec"), "cell").withColumn(
-        "q_n", l2_norm(F.col("q_vec"))
-    )
-    scored = (
-        inv.join(F.broadcast(probes), "cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "sim",
-            cosine_norm(F.col("q_vec"), F.col("n_vec"), F.col("q_n"), F.col("n_n")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return exact_rerank(cand, embeddings, queries, k)
 
 
 def training_sample(
@@ -971,8 +922,8 @@ def knn_sq8(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
             lambda acc, v: acc + v,
         ).alias("bias"),
     )
-    scored = codes.join(
-        F.broadcast(qside), F.col("q_id") != F.col("vec_id")
+    scored = codes.withColumnRenamed("vec_id", "n_id").join(
+        F.broadcast(qside), F.col("q_id") != F.col("n_id")
     ).withColumn(
         "score",
         F.col("bias")
@@ -982,17 +933,7 @@ def knn_sq8(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
             lambda acc, v: acc + v,
         ),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            "rank",
-            F.round("score", 6).alias("score"),
-        )
-    )
+    return _top_k(scored, k, "score")
 
 
 def semantic_dup_pairs(
@@ -1007,20 +948,16 @@ def semantic_dup_pairs(
     per-cell occupancy (corpus/cells on balanced data), never the
     corpus — the same bounded-block discipline as every dedup path
     here. Returns (cell, id_a, id_b, sim ≥ threshold)."""
-    corpus = embeddings.select(
-        F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("vec")
-    )
-    cents = ivf_centroids(embeddings)
-    assigned = _nearest_cells(corpus, cents, 1).withColumn(
-        "n", l2_norm(F.col("vec"))
+    assigned = ivf_lists(embeddings, ivf_centroids(embeddings)).withColumn(
+        "n", l2_norm(F.col("n_vec"))
     )
     a = assigned.select(
-        F.col("cell"), F.col("id").alias("id_a"),
-        F.col("vec").alias("vec_a"), F.col("n").alias("n_a"),
+        F.col("cell"), F.col("n_id").alias("id_a"),
+        F.col("n_vec").alias("vec_a"), F.col("n").alias("n_a"),
     )
     b = assigned.select(
-        F.col("cell"), F.col("id").alias("id_b"),
-        F.col("vec").alias("vec_b"), F.col("n").alias("n_b"),
+        F.col("cell"), F.col("n_id").alias("id_b"),
+        F.col("n_vec").alias("vec_b"), F.col("n").alias("n_b"),
     )
     return (
         a.join(b, "cell")
@@ -1063,13 +1000,7 @@ def mmr_select(
     pool = (
         knn_bruteforce(embeddings, queries, k=k_pool)
         .select("q_id", "n_id", "sim")
-        .join(
-            embeddings.select(
-                F.col("vec_id").alias("n_id"),
-                _as_double(F.col("embedding")).alias("d_vec"),
-            ),
-            "n_id",
-        )
+        .join(_vectors(embeddings, "n_id", "d_vec"), "n_id")
         .localCheckpoint()
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("mmr"), F.asc("n_id"))

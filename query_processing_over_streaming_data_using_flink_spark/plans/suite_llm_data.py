@@ -421,6 +421,47 @@ def _queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _N_QUERIES)
 
 
+def _recall_at_5(spark: SparkSession, sf_dir: str, exact_knn, approx_knn) -> DataFrame:
+    """ANN quality as an oracle-checked NUMBER: per-query recall@5 of
+    the `approx_knn` search against the `exact_knn` brute force, plus
+    the mean as q_id = -1. The join is per-query top-5 against top-5 —
+    trivially small at any corpus size.
+
+    The exact side is pure scan+score compute; the approx side starts
+    with quantizer training (its own eager jobs). So exact materializes
+    on a background thread while the index side is built and forced
+    here (guide §2.6; identical rows either way, pin.py toggle). The
+    result is pinned, then both persisted sides are released."""
+    e = load_table(spark, sf_dir, "embeddings")
+    q = _queries_df(spark, sf_dir)
+    exact = exact_knn(e, q, k=5).select("q_id", "n_id").persist()
+    wait_exact = materialize_async(exact)
+    approx = approx_knn(e, q, k=5).select("q_id", "n_id").persist()
+    materialize(approx)
+    wait_exact()
+    per_q = (
+        exact.join(approx, ["q_id", "n_id"], "left_semi")
+        .groupBy("q_id")
+        .agg(F.count("*").alias("n_hits"))
+    )
+    per_query = (
+        exact.select("q_id").distinct()
+        .join(per_q, "q_id", "left")
+        .select(
+            "q_id",
+            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
+        )
+    )
+    summary = per_query.agg(
+        F.lit(-1).cast("long").alias("q_id"),
+        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
+    )
+    out = pin_result(per_query.unionByName(summary))
+    exact.unpersist()
+    approx.unpersist()
+    return out
+
+
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return sim.knn_bruteforce(e, _queries_df(spark, sf_dir), k=5)
@@ -1143,15 +1184,16 @@ register("ann_ivf", ann_ivf, _ivf_sql())
 
 def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered vector search (`operators/similarity.py:
-    knn_ivf_filtered`): top-5 among only the vectors whose document is
-    English, against the SHARED full-corpus IVF index — the production
-    one-index-many-filters shape. The predicate is a semi-join on the
-    candidate ids inside the probed cells, never a rebuild."""
+    knn_ivf(..., allowed=)`): top-5 among only the vectors whose
+    document is English, against the SHARED full-corpus IVF index — the
+    production one-index-many-filters shape. The predicate is a
+    semi-join on the candidate ids inside the probed cells, never a
+    rebuild."""
     e = load_table(spark, sf_dir, "embeddings")
     allowed = load_table(spark, sf_dir, "documents").filter(
         F.col("lang") == "en"
     ).select(F.col("doc_id").alias("id"))
-    return sim.knn_ivf_filtered(e, _queries_df(spark, sf_dir), allowed, k=5)
+    return sim.knn_ivf(e, _queries_df(spark, sf_dir), k=5, allowed=allowed)
 
 
 register(
@@ -1245,35 +1287,7 @@ def ann_recall_pq_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC search against exact INNER-PRODUCT brute force (PQ's
     native measure), plus the mean — same certification shape as the
     IVF and LSH ones."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qdf = _queries_df(spark, sf_dir)
-    # The exact side is pure scan+score compute, the approx side starts
-    # with quantizer training (its own eager jobs): overlap them —
-    # exact materializes on a background thread while PQ trains
-    # (guide §2.6; identical rows either way, pin.py toggle).
-    exact = sim.knn_bruteforce_dot(e, qdf, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_pq(e, qdf, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce_dot, sim.knn_pq)
 
 
 def _pq_recall_sql() -> str:
@@ -1469,33 +1483,7 @@ def ann_recall_ivfpq_rerank_vs_exact(spark: SparkSession, sf_dir: str) -> DataFr
     loss entirely — what remains is only cell-containment (did the
     probed cells hold the true neighbors?), so this number certifies
     the recall a user actually gets from the production search path."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qdf = _queries_df(spark, sf_dir)
-    # Exact side overlaps the IVF+PQ training jobs (see
-    # ann_recall_pq_vs_exact; guide §2.6).
-    exact = sim.knn_bruteforce_dot(e, qdf, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_ivfpq_rerank(e, qdf, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce_dot, sim.knn_ivfpq_rerank)
 
 
 def _ivfpq_rerank_recall_sql() -> str:
@@ -1542,33 +1530,7 @@ def ann_recall_ivfpq_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean — the certification every ANN path in this engine carries.
     Necessarily ≤ both the IVF-only and PQ-only recalls; the number is
     the honest price of the 32× memory + nprobe/cells scan reduction."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qdf = _queries_df(spark, sf_dir)
-    # Exact side overlaps the IVF+PQ training jobs (see
-    # ann_recall_pq_vs_exact; guide §2.6).
-    exact = sim.knn_bruteforce_dot(e, qdf, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_ivfpq(e, qdf, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce_dot, sim.knn_ivfpq)
 
 
 def _ivfpq_recall_sql() -> str:
@@ -1926,33 +1888,7 @@ def ann_recall_ivf_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index runs but how good it is. The join is per-query top-5
     against top-5 — trivially small at any corpus size (output is one
     row per query plus one summary row)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = _queries_df(spark, sf_dir)
-    # Exact side overlaps the index side (see ann_recall_pq_vs_exact;
-    # guide 2.6): background exact scan, main-thread index force.
-    exact = sim.knn_bruteforce(e, q, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_ivf(e, q, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce, sim.knn_ivf)
 
 
 _ANN_RECALL_SQL = f"""
@@ -1980,33 +1916,7 @@ def ann_recall_lsh_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Certifies the OR-amplified multi-table LSH as a quality NUMBER, not
     just a runnable plan. Join is top-5 vs top-5 per query — trivially
     small at any corpus size."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = _queries_df(spark, sf_dir)
-    # Exact side overlaps the index side (see ann_recall_pq_vs_exact;
-    # guide 2.6): background exact scan, main-thread index force.
-    exact = sim.knn_bruteforce(e, q, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_lsh(e, q, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce, sim.knn_lsh)
 
 
 _ANN_RECALL_LSH_SQL = f"""
@@ -3911,7 +3821,11 @@ def ann_recall_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    # Pinned, the curve no longer reads the exact side or the training.
+    out = pin_result(reduce(lambda a, b: a.unionByName(b), parts))
+    exact.unpersist()
+    cents.unpersist()
+    return out
 
 
 def _ivf_nprobe_curve_sql() -> str:
@@ -4208,33 +4122,7 @@ def ann_recall_sq8_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     certification shape as the PQ/IVF/LSH ones. Expectation pinned by
     tests: SQ8's 4× compression must land far above PQ's 32× recall
     floor (≈1.0 on these fixtures)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qdf = _queries_df(spark, sf_dir)
-    # Exact side overlaps the index side (see ann_recall_pq_vs_exact;
-    # guide 2.6): background exact scan, main-thread index force.
-    exact = sim.knn_bruteforce_dot(e, qdf, k=5).select("q_id", "n_id").persist()
-    wait_exact = materialize_async(exact)
-    approx = sim.knn_sq8(e, qdf, k=5).select("q_id", "n_id").persist()
-    materialize(approx)
-    wait_exact()
-    per_q = (
-        exact.join(approx, ["q_id", "n_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        exact.select("q_id").distinct()
-        .join(per_q, "q_id", "left")
-        .select(
-            "q_id",
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
-    summary = per_query.agg(
-        F.lit(-1).cast("long").alias("q_id"),
-        F.round(F.avg("recall_at_5"), 6).alias("recall_at_5"),
-    )
-    return per_query.unionByName(summary)
+    return _recall_at_5(spark, sf_dir, sim.knn_bruteforce_dot, sim.knn_sq8)
 
 
 def _sq8_recall_sql() -> str:
@@ -4352,11 +4240,9 @@ def sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    corpus = e.select(
-        F.col("vec_id").alias("id"), sim._as_double(F.col("embedding")).alias("vec")
+    assigned = sim.ivf_lists(e, sim.ivf_centroids(e)).select(
+        F.col("n_id").alias("id"), "cell"
     )
-    cents = sim.ivf_centroids(e)
-    assigned = sim._nearest_cells(corpus, cents, 1).select("id", "cell")
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("cell_size"))
     w = Window.partitionBy("cell").orderBy(F.asc("draw"), F.asc("id"))
     return (
@@ -5383,7 +5269,7 @@ def decontaminate_semantic_recall_vs_exact(
         .persist()
     )
     # Overlap the brute-force exact side with the two bucketed passes
-    # (guide 2.6; see ann_recall_pq_vs_exact).
+    # (guide 2.6; see _recall_at_5).
     wait_exact = materialize_async(exact)
     single = single.persist()
     multi = multi.persist()

@@ -29,16 +29,21 @@ Design:
 * replayed epochs are skipped via the store's committed-epoch pointer:
   exactly-once index maintenance under foreachBatch redelivery.
 
-Search equals the batch `knn_ivf` over the union of all ingested
-batches whenever both use the same centroids (equivalence-tested) —
-the stream-batch convergence criterion applied to an index structure.
+Ingest, recluster and search run the batch index's own steps
+(`operators/similarity.py`: `ivf_lists` / `ivfpq_lists`, `ivf_search`
+/ `adc_search`, `exact_rerank`) on the store's tables. So a search
+equals the batch `knn_ivf` / `knn_ivfpq` over the union of all
+ingested batches whenever both use the same quantizers, because both
+run the same code (equivalence-tested) — the stream-batch convergence
+criterion applied to an index structure.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from query_processing_over_streaming_data_using_flink_spark.operators import similarity as sim
 from query_processing_over_streaming_data_using_flink_spark.streaming.drain import (
@@ -49,6 +54,67 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.state_tabl
     VersionedBucketedState,
     write_partitions,
 )
+
+
+# The quantizer tables' long layout in the store: the key columns and
+# the position within `cvec` that each row holds one component of.
+_LAYOUT = {"cents": (["cell"], "dim"), "books": (["s", "code"], "sdim")}
+
+
+def _explode(table: DataFrame, name: str) -> DataFrame:
+    """Quantizer table (keys…, cvec) → the store's long format (bucket
+    0, keys…, position, v). The batch trainers emit long keys; the
+    state schema pins the narrower int."""
+    keys, pos = _LAYOUT[name]
+    return table.select(
+        F.lit(0).alias("bucket"),
+        *[F.col(c).cast("int").alias(c) for c in keys],
+        F.posexplode("cvec").alias(pos, "v"),
+    )
+
+
+def _assemble(state: VersionedBucketedState, name: str) -> DataFrame:
+    """`_explode`'s inverse: (keys…, cvec) reassembled from state."""
+    keys, pos = _LAYOUT[name]
+    return state.read(name).groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(pos, "v"))), lambda t: t["v"]
+        ).alias("cvec")
+    )
+
+
+def _frozen(
+    state: VersionedBucketedState,
+    name: str,
+    given: DataFrame | None,
+    train: Callable[[], DataFrame],
+) -> DataFrame:
+    """The frozen quantizer `name`: read back from state once an epoch
+    has committed; in the first epoch `given` (or `train()`), staged
+    as one file — KB-sized tables, not one file per partition."""
+    if state.committed_epoch() >= 0:
+        return _assemble(state, name)
+    table = given if given is not None else train()
+    state.stage(_explode(table, name).repartition(1), name)
+    return table
+
+
+def _bucketed(lists: DataFrame) -> DataFrame:
+    """Inverted-list rows from the batch step → the store's `inv`
+    layout: bucket == cell, and the int columns the state schema pins
+    (the batch steps emit longs)."""
+    ints = {"cell", "s", "code"}
+    return lists.select(
+        F.col("cell").cast("int").alias("bucket"),
+        *[F.col(c).cast("int").alias(c) if c in ints else c for c in lists.columns],
+    )
+
+
+def _lists(state: VersionedBucketedState) -> DataFrame:
+    """The committed inverted lists with `cell` read from the partition
+    column (bucket == cell by construction): the search's probe join on
+    `cell` then prunes the scan to the probed cells' bucket dirs."""
+    return state.read("inv").drop("cell").withColumnRenamed("bucket", "cell")
 
 
 def run_streaming_ann_index(
@@ -108,54 +174,21 @@ class IncrementalIVFIndex:
         self._bootstrap_cents = centroids
         self.state = VersionedBucketedState(spark, state_dir, self._TABLES)
 
-    # -- centroids -----------------------------------------------------------
-
-    def _cents_long(self, cents: DataFrame) -> DataFrame:
-        """(cell, cvec) → the store's long format (bucket, cell, dim, v)."""
-        return cents.select(
-            F.lit(0).alias("bucket"),
-            # ivf_centroids emits cell as long (vec_id % cells); the
-            # state schema pins the narrower int.
-            F.col("cell").cast("int").alias("cell"),
-            F.posexplode("cvec").alias("dim", "v"),
-        )
-
     def centroids(self) -> DataFrame:
         """(cell, cvec) reassembled from state — the frozen quantizer."""
-        c = self.state.read("cents")
-        return c.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "v"))), lambda t: t["v"]
-            ).alias("cvec")
-        )
+        return _assemble(self.state, "cents")
 
     # -- ingestion -----------------------------------------------------------
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         """Ingest one micro-batch of (vec_id, embedding) rows."""
         def ingest() -> None:
-            first_epoch = self.state.committed_epoch() < 0
-            if first_epoch:
-                cents = (
-                    self._bootstrap_cents
-                    if self._bootstrap_cents is not None
-                    else sim.ivf_centroids(batch, cells=self.cells)
-                )
-                # KB-sized quantizer tables: one file, not one per partition.
-                self.state.stage(self._cents_long(cents).repartition(1), "cents")
-            else:
-                cents = self.centroids()
-            corpus = batch.select(
-                F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
+            cents = _frozen(
+                self.state, "cents", self._bootstrap_cents,
+                lambda: sim.ivf_centroids(batch, cells=self.cells),
             )
-            assigned = sim._nearest_cells(corpus, cents, 1)
-            delta = assigned.select(
-                F.col("cell").cast("int").alias("bucket"),
-                F.col("id").alias("n_id"),
-                F.col("vec").alias("n_vec"),
-                F.col("cell").cast("int").alias("cell"),
-            )
-            self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
+            lists = _bucketed(sim.ivf_lists(batch, cents))
+            self.state.stage(lists.repartition(write_partitions(self.spark), "cell"), "inv")
 
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
@@ -178,32 +211,22 @@ class IncrementalIVFIndex:
         the previous version. Cost is one corpus pass per Lloyd round
         plus one corpus rewrite — run it like any compaction (hourly /
         daily / on a drift monitor's signal, cf. OPERATIONS.md)."""
-        inv = self.state.read("inv")
-        corpus = inv.select(
-            F.col("n_id").alias("vec_id"), F.col("n_vec").alias("embedding")
-        )
+        def corpus(inv: DataFrame) -> DataFrame:
+            return inv.select(
+                F.col("n_id").alias("vec_id"), F.col("n_vec").alias("embedding")
+            )
+
         # Pin the retrained quantizer: the transforms below run inside
         # the compaction (whose writes must not re-trigger training),
         # and the table is KB-sized (≤ cells × d rows).
-        cents = sim.ivf_centroids(corpus, cells=self.cells, refine=refine).localCheckpoint(
-            eager=True
-        )
-
-        def reassign(inv_df: DataFrame) -> DataFrame:
-            assigned = sim._nearest_cells(
-                inv_df.select(F.col("n_id").alias("id"), F.col("n_vec").alias("vec")),
-                cents,
-                1,
-            )
-            return assigned.select(
-                F.col("cell").cast("int").alias("bucket"),
-                F.col("id").alias("n_id"),
-                F.col("vec").alias("n_vec"),
-                F.col("cell").cast("int").alias("cell"),
-            )
-
+        cents = sim.ivf_centroids(
+            corpus(self.state.read("inv")), cells=self.cells, refine=refine
+        ).localCheckpoint(eager=True)
         self.state.compact(
-            {"inv": reassign, "cents": lambda _old: self._cents_long(cents)}
+            {
+                "inv": lambda inv: _bucketed(sim.ivf_lists(corpus(inv), cents)),
+                "cents": lambda _old: _explode(cents, "cents"),
+            }
         )
 
     # -- search --------------------------------------------------------------
@@ -212,53 +235,13 @@ class IncrementalIVFIndex:
         self, queries: DataFrame, k: int = 5, allowed: DataFrame | None = None
     ) -> DataFrame:
         """Top-k cosine neighbors of (vec_id, embedding) query rows over
-        everything ingested so far — same output shape and semantics as
-        the batch `knn_ivf` (q_id, n_id, rank, sim). The probe join is
-        on `cell` == the state's bucket column, so only the probed
-        cells' directories are read. `allowed` (one `id` column)
-        restricts candidates to ids passing a metadata predicate —
-        same one-index-many-filters semantics as the batch
-        `knn_ivf_filtered`, applied as a semi-join on the lists."""
-        cents = self.centroids()
-        inv = self.state.read("inv")
-        if allowed is not None:
-            inv = inv.join(
-                allowed.select(F.col("id").alias("n_id")), "n_id", "left_semi"
-            )
-        probes = sim._nearest_cells(
-            queries.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").cast("array<double>").alias("vec"),
-            ),
-            cents,
-            self.nprobe,
-        ).select(
-            F.col("id").alias("q_id"),
-            F.col("vec").alias("q_vec"),
-            "cell",
-            # bucket == cell by construction; joining on the partition
-            # column lets the scan prune to the probed cells' dirs.
-            F.col("cell").cast("int").alias("bucket"),
-        )
-        scored = (
-            inv.withColumn("n_n", sim.l2_norm(F.col("n_vec")))
-            .join(
-                F.broadcast(probes.withColumn("q_n", sim.l2_norm(F.col("q_vec")))),
-                ["bucket", "cell"],
-            )
-            .filter(F.col("q_id") != F.col("n_id"))
-            .withColumn(
-                "sim",
-                sim.cosine_norm(
-                    F.col("q_vec"), F.col("n_vec"), F.col("q_n"), F.col("n_n")
-                ),
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", "rank", F.round("sim", 6).alias("sim"))
+        everything ingested so far — the batch `similarity.ivf_search`
+        over the store's lists, so the same output (q_id, n_id, rank,
+        sim) as `knn_ivf`; only the probed cells' directories are read.
+        `allowed` (one `id` column) restricts candidates to ids passing
+        a metadata predicate, as in `knn_ivf(..., allowed=)`."""
+        return sim.ivf_search(
+            _lists(self.state), self.centroids(), queries, k, self.nprobe, allowed
         )
 
 
@@ -314,36 +297,11 @@ class IncrementalIVFPQIndex:
 
     # -- quantizers ----------------------------------------------------------
 
-    def _cents_long(self, cents: DataFrame) -> DataFrame:
-        return cents.select(
-            F.lit(0).alias("bucket"),
-            F.col("cell").cast("int").alias("cell"),
-            F.posexplode("cvec").alias("dim", "v"),
-        )
-
-    def _books_long(self, books: DataFrame) -> DataFrame:
-        return books.select(
-            F.lit(0).alias("bucket"),
-            F.col("s").cast("int").alias("s"),
-            F.col("code").cast("int").alias("code"),
-            F.posexplode("cvec").alias("sdim", "v"),
-        )
-
     def centroids(self) -> DataFrame:
-        c = self.state.read("cents")
-        return c.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "v"))), lambda t: t["v"]
-            ).alias("cvec")
-        )
+        return _assemble(self.state, "cents")
 
     def books(self) -> DataFrame:
-        b = self.state.read("books")
-        return b.groupBy("s", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sdim", "v"))), lambda t: t["v"]
-            ).alias("cvec")
-        )
+        return _assemble(self.state, "books")
 
     # -- ingestion -----------------------------------------------------------
 
@@ -354,40 +312,16 @@ class IncrementalIVFPQIndex:
         cell's inverted list. The raw embedding is read once, here, and
         never stored."""
         def ingest() -> None:
-            first_epoch = self.state.committed_epoch() < 0
-            if first_epoch:
-                cents = (
-                    self._bootstrap_cents
-                    if self._bootstrap_cents is not None
-                    else sim.ivf_centroids(batch, cells=self.cells)
-                )
-                books = (
-                    self._bootstrap_books
-                    if self._bootstrap_books is not None
-                    else sim.pq_codebooks(batch, self.m)
-                )
-                # KB-sized quantizer tables: one file, not one per partition.
-                self.state.stage(self._cents_long(cents).repartition(1), "cents")
-                self.state.stage(self._books_long(books).repartition(1), "books")
-            else:
-                cents = self.centroids()
-                books = self.books()
-            corpus = batch.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").cast("array<double>").alias("vec"),
+            cents = _frozen(
+                self.state, "cents", self._bootstrap_cents,
+                lambda: sim.ivf_centroids(batch, cells=self.cells),
             )
-            assigned = sim._nearest_cells(corpus, cents, 1).select(F.col("id"), "cell")
-            delta = (
-                assigned.join(sim.pq_encode(batch, books, self.m), "id")
-                .select(
-                    F.col("cell").cast("int").alias("bucket"),
-                    F.col("id").alias("n_id"),
-                    F.col("cell").cast("int").alias("cell"),
-                    F.col("s").cast("int").alias("s"),
-                    F.col("code").cast("int").alias("code"),
-                )
+            books = _frozen(
+                self.state, "books", self._bootstrap_books,
+                lambda: sim.pq_codebooks(batch, self.m),
             )
-            self.state.stage(delta.repartition(write_partitions(self.spark), "cell"), "inv")
+            lists = _bucketed(sim.ivfpq_lists(batch, cents, books, self.m))
+            self.state.stage(lists.repartition(write_partitions(self.spark), "cell"), "inv")
 
         self.state.apply(epoch_id, ingest)
 
@@ -413,27 +347,12 @@ class IncrementalIVFPQIndex:
             corpus, cells=self.cells, refine=refine
         ).localCheckpoint(eager=True)
         books = sim.pq_codebooks(corpus, self.m).localCheckpoint(eager=True)
-        src = corpus.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").cast("array<double>").alias("vec"),
-        )
-        codes = (
-            sim._nearest_cells(src, cents, 1)
-            .select("id", "cell")
-            .join(sim.pq_encode(corpus, books, self.m), "id")
-            .select(
-                F.col("cell").cast("int").alias("bucket"),
-                F.col("id").alias("n_id"),
-                F.col("cell").cast("int").alias("cell"),
-                F.col("s").cast("int").alias("s"),
-                F.col("code").cast("int").alias("code"),
-            )
-        )
+        lists = _bucketed(sim.ivfpq_lists(corpus, cents, books, self.m))
         self.state.compact(
             {
-                "inv": lambda _old: codes,
-                "cents": lambda _old: self._cents_long(cents),
-                "books": lambda _old: self._books_long(books),
+                "inv": lambda _old: lists,
+                "cents": lambda _old: _explode(cents, "cents"),
+                "books": lambda _old: _explode(books, "books"),
             }
         )
 
@@ -447,83 +366,27 @@ class IncrementalIVFPQIndex:
         rerank_from: DataFrame | None = None,
         rerank: int = sim.IVFPQ_RERANK,
     ) -> DataFrame:
-        """Top-k by ADC over the probed cells' code lists — identical
-        scoring (fixed-subspace-order fold, approximate inner product)
-        and output shape to the batch `knn_ivfpq`: (q_id, n_id, rank,
-        score). Per query the LUT is m·K dot products against the
-        broadcast codebooks; the scan touches only code rows in the
-        probed cells' bucket directories. `allowed` (one `id` column)
-        restricts candidates by metadata predicate — semi-join on the
-        code rows, one index serving many filters. `rerank_from` (a raw
-        (vec_id, embedding) source — the upstream corpus) switches on
-        IVFPQ+R refinement: the top `rerank` ADC candidates per query
-        are re-scored with the EXACT inner product fetched from the
-        source by broadcasting the R·q candidate list (the batch
-        `knn_ivfpq_rerank` composition, against the live index)."""
-        cents = self.centroids()
-        books = self.books()
-        inv = self.state.read("inv")
-        if allowed is not None:
-            inv = inv.join(
-                allowed.select(F.col("id").alias("n_id")), "n_id", "left_semi"
-            )
-        probes = sim._nearest_cells(
-            queries.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").cast("array<double>").alias("vec"),
-            ),
-            cents,
+        """Top-k by ADC over the probed cells' code lists — the batch
+        `similarity.adc_search` over the store's lists, so the same
+        scoring and output (q_id, n_id, rank, score) as `knn_ivfpq`;
+        the scan touches only code rows in the probed cells' bucket
+        directories. `allowed` (one `id` column) restricts candidates
+        by metadata predicate — one index serving many filters.
+        `rerank_from` (a raw (vec_id, embedding) source — the upstream
+        corpus) switches on IVFPQ+R refinement: the top `rerank` ADC
+        candidates per query are re-scored by `similarity.exact_rerank`
+        (the batch `knn_ivfpq_rerank` composition, against the live
+        index)."""
+        cand = sim.adc_search(
+            _lists(self.state),
+            self.centroids(),
+            self.books(),
+            queries,
+            k if rerank_from is None else rerank,
             self.nprobe,
-        ).select(
-            F.col("id").alias("q_id"),
-            "cell",
-            F.col("cell").cast("int").alias("bucket"),
+            self.m,
+            allowed,
         )
-        lut = sim._pq_subvectors(queries, self.m).join(F.broadcast(books), "s").select(
-            F.col("id").alias("q_id"),
-            "s",
-            "code",
-            sim.dot(F.col("sub"), F.col("cvec")).alias("part"),
-        )
-        scored = (
-            inv.join(F.broadcast(probes), ["bucket", "cell"])
-            .filter(F.col("q_id") != F.col("n_id"))
-            .join(F.broadcast(lut), ["q_id", "s", "code"])
-            .groupBy("q_id", "n_id")
-            .agg(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("s", "part"))),
-                        lambda t: t["part"],
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("score")
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-        ranked = scored.withColumn("rank", F.row_number().over(w))
         if rerank_from is None:
-            return ranked.filter(F.col("rank") <= k).select(
-                "q_id", "n_id", "rank", F.round("score", 6).alias("score")
-            )
-        cand = ranked.filter(F.col("rank") <= rerank).select("q_id", "n_id")
-        raw = rerank_from.select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").cast("array<double>").alias("n_vec"),
-        )
-        qraw = queries.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").cast("array<double>").alias("q_vec"),
-        )
-        rescored = (
-            raw.join(F.broadcast(cand), "n_id")
-            .join(F.broadcast(qraw), "q_id")
-            .withColumn("score", sim.dot(F.col("q_vec"), F.col("n_vec")))
-        )
-        w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("n_id"))
-        return (
-            rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", "rank", F.round("score", 6).alias("score"))
-        )
+            return cand
+        return sim.exact_rerank(cand.select("q_id", "n_id"), rerank_from, queries, k)

@@ -464,7 +464,7 @@ class IncrementalQ3:
             if dco is None:
                 return
             with self.state.phase("r_dco"):
-                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO terms) join+spill")
+                sc.setJobDescription(f"ivm epoch {epoch_id}: delta-R (dCO.L' term) join+spill")
                 # L′ holds the L lane's ΔL; the ΔCO spill above takes
                 # longer than the L spill, so this wait is effectively free.
                 l_spilled.wait()

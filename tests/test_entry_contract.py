@@ -111,6 +111,29 @@ def test_library_reads_only_deployment_env_settings():
     assert not offenders, "environment reads outside the deployment settings:\n" + "\n".join(offenders)
 
 
+def _package_calls(names: set[str], owner: str) -> list[str]:
+    """`path:line calls name()` for every call of one of `names` in a
+    package module other than `owner` (a path inside the package)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "query_processing_over_streaming_data_using_flink_spark")
+    owner = os.path.join(pkg, owner)
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for path in (os.path.join(root, f) for f in sorted(files) if f.endswith(".py")):
+            if path == owner:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, repo)}:{node.lineno} calls {name}()"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and (name := getattr(node.func, "attr", getattr(node.func, "id", None)))
+                in names
+            ]
+    return offenders
+
+
 # Stream-run binding: the calls only the shared stream driver may make.
 _BINDING_CALLS = {"check_run", "checkpoint_run_id"}
 
@@ -120,24 +143,23 @@ def test_only_the_stream_driver_binds_state_to_a_run():
     once never bound, so a recreated checkpoint silently dropped every
     new batch. Binding lives in `streaming/drain.py:run_face`, and no
     other package module may call `check_run` or `checkpoint_run_id`."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(repo, "query_processing_over_streaming_data_using_flink_spark")
-    driver = os.path.join(pkg, "streaming", "drain.py")
-    offenders = []
-    for root, _dirs, files in os.walk(pkg):
-        for path in (os.path.join(root, f) for f in sorted(files) if f.endswith(".py")):
-            if path == driver:
-                continue
-            with open(path) as fh:
-                tree = ast.parse(fh.read(), path)
-            offenders += [
-                f"{os.path.relpath(path, repo)}:{node.lineno} calls {name}()"
-                for node in ast.walk(tree)
-                if isinstance(node, ast.Call)
-                and (name := getattr(node.func, "attr", getattr(node.func, "id", None)))
-                in _BINDING_CALLS
-            ]
+    offenders = _package_calls(_BINDING_CALLS, os.path.join("streaming", "drain.py"))
     assert not offenders, "run binding outside the stream driver:\n" + "\n".join(offenders)
+
+
+# The IVF index's cell-assignment and PQ-subvector (LUT) steps.
+_ANN_STEP_CALLS = {"_nearest_cells", "_pq_subvectors"}
+
+
+def test_only_the_ann_operator_assigns_cells_and_builds_luts():
+    """A face that assigns vectors to cells or builds a PQ lookup table
+    itself holds a second copy of the IVF index, and its search can
+    drift from the batch one. The steps live in
+    `operators/similarity.py` (`ivf_lists`, `ivfpq_lists`,
+    `ivf_search`, `adc_search`), and no other package module may call
+    `_nearest_cells` or `_pq_subvectors`."""
+    offenders = _package_calls(_ANN_STEP_CALLS, os.path.join("operators", "similarity.py"))
+    assert not offenders, "ANN steps outside the operator:\n" + "\n".join(offenders)
 
 
 def test_no_script_shadows_a_stdlib_module():

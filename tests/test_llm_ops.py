@@ -243,7 +243,7 @@ def test_round6_ops_degenerate_inputs(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     empty = emb.filter(F.lit(False)).select(F.col("vec_id").alias("id"))
-    assert sim.knn_ivf_filtered(emb, queries, empty, k=5).count() == 0
+    assert sim.knn_ivf(emb, queries, k=5, allowed=empty).count() == 0
 
 
 def test_knn_ivf_filtered_respects_predicate(spark):
@@ -259,12 +259,12 @@ def test_knn_ivf_filtered_respects_predicate(spark):
         F.col("vec_id").alias("id")
     )
 
-    res = sim.knn_ivf_filtered(emb, queries, allowed, k=5)
+    res = sim.knn_ivf(emb, queries, k=5, allowed=allowed)
     assert res.count() > 0
     assert res.filter(F.col("n_id") % 2 != 0).count() == 0
 
-    full = sim.knn_ivf_filtered(
-        emb, queries, allowed, k=5, cells=sim.IVF_CELLS, nprobe=sim.IVF_CELLS
+    full = sim.knn_ivf(
+        emb, queries, k=5, cells=sim.IVF_CELLS, nprobe=sim.IVF_CELLS, allowed=allowed
     )
     exact = sim.knn_bruteforce(
         emb.filter(F.col("vec_id") % 2 == 0), queries, k=5
@@ -313,6 +313,29 @@ def test_pq_adc_recall_floor(spark):
     assert mean >= 0.4, mean
     per_q = [r["recall_at_5"] for r in rows if r["q_id"] >= 0]
     assert len(per_q) == 20 and all(0.0 <= r <= 1.0 for r in per_q)
+
+
+def test_recall_certification_releases_what_it_persists(spark):
+    """A recall certification persists both top-5 sides to overlap
+    them; once its result is pinned it must release them, or a
+    long-lived session (the registry sweep) keeps every cert's frames
+    cached. A rebuilt frame with the same plan finds a live cache
+    entry through the cache manager, so its storage level shows it."""
+    from pyspark import StorageLevel
+
+    from query_processing_over_streaming_data_using_flink_spark.plans.suite_llm_data import (
+        _queries_df,
+        ann_recall_ivf_vs_exact,
+    )
+
+    rows = ann_recall_ivf_vs_exact(spark, SF_SMOKE).collect()
+    assert len(rows) == 21
+    e = load_table(spark, SF_SMOKE, "embeddings")
+    q = _queries_df(spark, SF_SMOKE)
+    exact = sim.knn_bruteforce(e, q, k=5).select("q_id", "n_id")
+    approx = sim.knn_ivf(e, q, k=5).select("q_id", "n_id")
+    assert exact.storageLevel == StorageLevel.NONE
+    assert approx.storageLevel == StorageLevel.NONE
 
 
 def test_audio_ahash_volume_scaled_recall(spark):

@@ -607,6 +607,22 @@ def test_ivm_checkpoint_restart_end_to_end(spark, tmp_path):
     assert _rows(result) == _rows(q3_on_state(log))
 
 
+def _assert_inv_scan_pruned(search):
+    """Every scan of the `inv` lists in `search`'s executed plan carries
+    a dynamic partition filter on `bucket`, so only the probed cells'
+    directories are read (a plain partition-column mention proves
+    nothing: every scan of `inv` lists `bucket`)."""
+    plan = search._jdf.queryExecution().executedPlan().toString()
+    # The `inv` scan is the one partitioned scan that reads `n_id`
+    # (long locations are elided in the plan string).
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and "n_id#" in ln and "bucket#" in ln
+    ]
+    assert scans, plan
+    assert all("dynamicpruningexpression(bucket#" in ln for ln in scans), scans
+
+
 def test_incremental_ivf_index_matches_batch(spark, tmp_path):
     """The streaming IVF index (vectors ingested across 3 micro-batches,
     inverted lists appended in the versioned state store) must return
@@ -639,13 +655,12 @@ def test_incremental_ivf_index_matches_batch(spark, tmp_path):
     # filtered search (one index, many filters — streaming rendering).
     allowed = emb.filter(F.col("vec_id") % 2 == 0).select(F.col("vec_id").alias("id"))
     got_f = _rows(idx.search(queries, k=5, allowed=allowed))
-    want_f = _rows(sim.knn_ivf_filtered(emb, queries, allowed, k=5))
+    want_f = _rows(sim.knn_ivf(emb, queries, k=5, allowed=allowed))
     assert got_f == want_f
 
     # The probe path reads only the probed cells' bucket directories
     # (cell == partition column → partition filters prune the rest).
-    plan = idx.search(queries, k=5)._jdf.queryExecution().executedPlan().toString()
-    assert "bucket" in plan.lower()
+    _assert_inv_scan_pruned(idx.search(queries, k=5))
 
 
 def test_incremental_ivf_index_restart(spark, tmp_path):
@@ -808,6 +823,9 @@ def test_incremental_ivfpq_index_matches_batch(spark, tmp_path):
     allowed = emb.filter(F.col("vec_id") % 2 == 0).select(F.col("vec_id").alias("id"))
     filt = idx.search(queries, k=5, allowed=allowed).collect()
     assert filt and all(r["n_id"] % 2 == 0 for r in filt)
+
+    # The code-list scan prunes to the probed cells' directories.
+    _assert_inv_scan_pruned(idx.search(queries, k=5))
 
 
 def test_incremental_ivfpq_index_restart(spark, tmp_path):
@@ -1011,7 +1029,7 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
         x.physicalPlanDescription()
         for x in executions()
         if x.executionId() > seen
-        and x.description() == "ivm epoch 2: delta-R (dCO terms) join+spill"
+        and x.description() == "ivm epoch 2: delta-R (dCO.L' term) join+spill"
     )
     pruned = {
         loc
@@ -1124,7 +1142,7 @@ def test_bucketed_writes_are_sized_to_the_cores(spark, tmp_path):
         "ivm epoch 1: delta-CO join+spill",
         "ivm epoch 1: delta-L spill",
         "ivm epoch 1: delta-R (CO.dL term) join+spill",
-        "ivm epoch 1: delta-R (dCO terms) join+spill",
+        "ivm epoch 1: delta-R (dCO.L' term) join+spill",
     ], writes
     assert all(n <= cores for tasks in writes.values() for n in tasks), (cores, writes)
     per_bucket = _new_files_per_bucket_write(before, after)
