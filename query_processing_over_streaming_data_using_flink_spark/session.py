@@ -40,6 +40,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # List up to 1024 paths of one read on the driver. At the default
+        # 32, a micro-batch of more than 32 files is listed by its own
+        # Spark job, on the epoch's critical path: 0.87 s for 100 files
+        # of a 4-core local run, whose tasks only stat the same disk
+        # from the same JVM. A cluster job listing thousands of object-
+        # store paths still goes parallel.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # UTC pins timestamp semantics to match the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / createDataFrame(pandas) path.

@@ -52,7 +52,6 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.drain impo
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
-    write_partitions,
 )
 
 
@@ -188,7 +187,7 @@ class IncrementalIVFIndex:
                 lambda: sim.ivf_centroids(batch, cells=self.cells),
             )
             lists = _bucketed(sim.ivf_lists(batch, cents))
-            self.state.stage(lists.repartition(write_partitions(self.spark), "cell"), "inv")
+            self.state.stage(lists.repartition(self.state.write_partitions(), "cell"), "inv")
 
         # Append-mode commit: inverted lists only ever GROW — the new
         # vectors' part files land next to the hard-linked old ones.
@@ -321,7 +320,7 @@ class IncrementalIVFPQIndex:
                 lambda: sim.pq_codebooks(batch, self.m),
             )
             lists = _bucketed(sim.ivfpq_lists(batch, cents, books, self.m))
-            self.state.stage(lists.repartition(write_partitions(self.spark), "cell"), "inv")
+            self.state.stage(lists.repartition(self.state.write_partitions(), "cell"), "inv")
 
         self.state.apply(epoch_id, ingest)
 

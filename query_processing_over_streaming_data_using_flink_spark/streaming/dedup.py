@@ -23,7 +23,13 @@ first-wins/min-doc-id collision policy, held in the same versioned
 bucketed state store as the Q3 IVM (`streaming/state_table.py`): each
 epoch READS only the state buckets its band keys hash into and APPENDS
 only its new claims, so per-epoch cost is O(batch × state/buckets),
-not O(state).
+not O(state). The store sizes the bucket count to the cores (4 on a
+4-core host, 32 from 32 cores). With 4 buckets a one-doc epoch's 4
+band keys reach about 2.7 of them, so it reads most of the bands; it
+still ran no slower than with 32 buckets, as per-epoch fixed cost
+outweighs the bands read (one-doc epoch median 1.25 s at 4 buckets
+against 1.42 s at 32 over the 5 000-doc sf0.1 seed, 1.36 s against
+1.51 s over sf0.01's 500 docs; local[4], warm JVM).
 
 The ownership machinery is MODALITY-AGNOSTIC: `band_fn` swaps the
 candidate-key generator, so the same class does streaming perceptual
@@ -41,8 +47,6 @@ from query_processing_over_streaming_data_using_flink_spark.functions.scalar imp
 from query_processing_over_streaming_data_using_flink_spark.operators.text import normalized_text
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
-    bucket_of,
-    write_partitions,
 )
 
 
@@ -138,7 +142,7 @@ class IncrementalNearDedup:
                 ).select("doc_id", "band_key")
             bands = (
                 band_rows.distinct()
-                .withColumn("bucket", bucket_of("band_key"))
+                .withColumn("bucket", self.state.bucket_of("band_key"))
                 .persist()
             )
             # Only the buckets this batch touches are read...
@@ -162,7 +166,7 @@ class IncrementalNearDedup:
             new_claims = (
                 owners.filter(F.col("owner").isNull())
                 .select("bucket", "band_key", F.col("batch_owner").alias("owner"))
-                .repartition(write_partitions(self.spark), "band_key")
+                .repartition(self.state.write_partitions(), "band_key")
                 .distinct()
             )
             self.state.stage(new_claims, "bands")

@@ -42,8 +42,6 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.drain impo
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
-    bucket_of,
-    write_partitions,
 )
 
 
@@ -110,14 +108,14 @@ class IncrementalGroupedAgg:
             batch = batch.withColumn("op", F.lit(1))
         keys = [F.col(c) for c in self.group_cols]
         # Keyed on the group columns (the bucket's source key): each of
-        # the `write_partitions` tasks owns whole buckets, so the write
-        # emits at most one file per bucket (see write_partitions).
+        # the store's `write_partitions()` tasks owns whole buckets, so
+        # the write emits at most one file per bucket.
         self.state.apply(
             epoch_id,
             lambda: self.state.stage(
                 self.delta_fn(batch)
-                .withColumn("bucket", bucket_of(*keys))
-                .repartition(write_partitions(self.spark), *keys),
+                .withColumn("bucket", self.state.bucket_of(*keys))
+                .repartition(self.state.write_partitions(), *keys),
                 self.TABLE,
             ),
         )

@@ -26,7 +26,8 @@ reference, which needs an ordered single-threaded source).
 State discipline (LOG-STRUCTURED):
 
 * Every state table is hash-bucketed on its join key —
-  ``bucket = pmod(hash(key), NUM_BUCKETS)`` — and stored as
+  ``bucket = pmod(hash(key), buckets)``, the count the state store
+  records with the state (`VersionedBucketedState.bucket_of`) — and stored as
   bucket-partitioned parquet. The intermediate view ``CO = C⋈O`` is
   itself a maintained state table (bucketed by orderkey, the key of its
   downstream join), so Δ(C⋈O⋈L) factorizes into the two joins above:
@@ -61,9 +62,9 @@ State discipline (LOG-STRUCTURED):
   stream's first epoch) contributes nothing either, so those joins are
   never built (zero-job probes: a listing of the staged delta, the
   on-disk bytes of the committed table).
-* Every per-epoch write shuffles into `write_partitions` tasks — the
-  cores, not the NUM_BUCKETS buckets — keyed so that each task owns
-  whole buckets (partition = bucket mod n; see `write_partitions`).
+* Every per-epoch write shuffles into the store's `write_partitions()`
+  tasks — no more than the cores — keyed so that each task owns whole
+  buckets (partition = bucket mod n; see `write_partitions`).
 * Each epoch is one store transaction (`VersionedBucketedState.apply`)
   whose record times the phases `spill_l`, `spill_co`, `co`, `r_dco`,
   `r_dl`, `telemetry` and `commit`; `last_stats` adds the event count.
@@ -100,13 +101,10 @@ from query_processing_over_streaming_data_using_flink_spark.streaming.drain impo
     run_face,
 )
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
-    NUM_BUCKETS,
     VersionedBucketedState,
-    bucket_of,
-    write_partitions,
 )
 
-__all__ = ["NUM_BUCKETS", "IncrementalQ3", "run_streaming_q3"]
+__all__ = ["IncrementalQ3", "run_streaming_q3"]
 
 
 def _selective(df: DataFrame, key: str) -> DataFrame:
@@ -228,11 +226,13 @@ class IncrementalQ3:
         instead of waiting for the C/O spill (guide §2.6).
 
         The shuffle key is the JOIN KEY, not the derived bucket column,
-        into n = `write_partitions` partitions: Spark's HashPartitioning
-        assigns partition id pmod(murmur3(key), n), and because n
-        divides NUM_BUCKETS that is `bucket_of(key)` mod n — each task
-        owns whole buckets and the dynamic-partition write emits at
-        most one file per bucket. Repartitioning on the 32-valued bucket
+        into n = `state.write_partitions()` partitions: Spark's
+        HashPartitioning assigns partition id pmod(murmur3(key), n), and
+        because n divides the store's bucket count that is
+        `bucket_of(key)` mod n — each task owns whole buckets and the
+        dynamic-partition write emits at most one file per bucket (one
+        file per task on a state dir this host created, whose bucket
+        count is sized to the cores). Repartitioning on the bucket
         column instead would hash bucket values (collisions: some tasks
         own 2-3 buckets, some none — the guide §2.5 synthetic-key skew),
         measured as a ~2× straggler tail on the spill stage. Every other
@@ -265,9 +265,9 @@ class IncrementalQ3:
                     ).cast("long")
                 ).alias("w_cents"),
             )
-            .repartition(write_partitions(self.spark), "l_orderkey")
+            .repartition(self.state.write_partitions(), "l_orderkey")
             .select(
-                bucket_of(F.col("l_orderkey")).alias("bucket"),
+                self.state.bucket_of(F.col("l_orderkey")).alias("bucket"),
                 "l_orderkey",
                 "linenumber",
                 "w_cents",
@@ -303,10 +303,10 @@ class IncrementalQ3:
                 F.col("orderdate").alias("o_orderdate"),
                 F.col("op").cast("long").alias("w"),
             )
-            .repartition(write_partitions(self.spark), "k")
+            .repartition(self.state.write_partitions(), "k")
             .select(
                 "table",
-                bucket_of(F.col("k")).alias("bucket"),
+                self.state.bucket_of(F.col("k")).alias("bucket"),
                 F.when(is_c, F.col("k")).alias("c_custkey"),
                 F.when(is_c, F.col("w")).alias("w_c"),
                 "o_orderkey",
@@ -373,19 +373,17 @@ class IncrementalQ3:
         # they size the broadcast side, and 0 means the table holds no
         # rows, so every term probing it is empty (Δ⋈∅ = ∅) and skipped.
         old_bytes = {n: self.state.bytes(n) for n in ("c", "o", "co", "l")}
-        nparts = write_partitions(self.spark)
+        nparts = self.state.write_partitions()
 
         def primed(name: str) -> tuple[DataFrame, int]:
             """X′: `name` as this epoch's commit will leave it (committed
-            ∪ staged), and its on-disk bytes (0: no rows). An empty
-            committed side is left out of the union: in a stream's first
-            epoch it cost ~0.2 s (half the sf0.01 changelog, 4 cores)."""
+            ∪ staged), and its on-disk bytes (0: no rows)."""
             df, delta = self.state.read(name), self.state.staged(name)
             if delta is not None:
-                df = df.unionByName(delta) if old_bytes[name] else delta
+                df = df.unionByName(delta)
             return df, old_bytes[name] + self.state.staged_bytes(name)
 
-        REKEY = bucket_of(F.col("o_orderkey")).alias("bucket")
+        REKEY = self.state.bucket_of(F.col("o_orderkey")).alias("bucket")
 
         # Lane handshake (split-lane spill, guide §2.6): the CO lane
         # reads L′ only once the L lane has staged ΔL — by which time

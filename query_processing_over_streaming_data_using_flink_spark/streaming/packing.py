@@ -37,7 +37,6 @@ from pyspark.sql.window import Window
 from query_processing_over_streaming_data_using_flink_spark.operators import bpe as bp
 from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
     VersionedBucketedState,
-    bucket_of,
 )
 
 
@@ -82,7 +81,7 @@ class IncrementalSequencePacker:
             rows = (
                 batch.select("doc_id", "lang")
                 .join(counts, "doc_id")
-                .withColumn("bucket", bucket_of("lang"))
+                .withColumn("bucket", self.state.bucket_of("lang"))
             )
             w = (
                 Window.partitionBy("lang")

@@ -6,7 +6,7 @@ DataFrames, the store owns the files.
 
 Layout::
 
-    state_dir/CURRENT                       pointer: live version + epoch
+    state_dir/CURRENT                       pointer (JSON, fields below)
     state_dir/v<epoch>[c...]/<table>/bucket=N/part-*.parquet
     state_dir/_staged/<part>/table=<table>/bucket=N/part-*.parquet
     state_dir/_staged/_output/part-*.parquet
@@ -14,6 +14,14 @@ Layout::
 
 Contract:
 
+* The pointer `CURRENT` holds `epoch` (the last committed epoch),
+  `version` (the live version dir), `buckets` and, once bound,
+  `run_id` (see `check_run`). `buckets` is the tables' bucket count:
+  a new state dir takes the largest divisor of NUM_BUCKETS (32) not
+  above the cores, every commit records it, a reopen reads it back,
+  and a pointer without the field reads 32. Faces bucket a key with
+  `bucket_of(key)` = ``pmod(hash(key), buckets)`` and size a write's
+  shuffle with `write_partitions()`, so one task writes whole buckets.
 * `apply(epoch, body)` is the one epoch transaction. A redelivered
   epoch (`epoch <= committed`) returns None and runs nothing. Otherwise
   it clears `_staged/` and any output past the committed epoch, so a
@@ -96,10 +104,11 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Bucket count of the hash-bucketed state tables (IVM, incragg, near-dedup
-# bands, packing cursors): the unit of dynamic partition pruning and of the touched-bucket carry-over. On
-# a cluster size it to a few× the executor count. It does NOT set the
-# per-epoch write's task count — `write_partitions` does.
+# The most buckets a state table is hashed into (IVM, incragg, near-dedup
+# bands, packing cursors): a new state dir takes the largest divisor of
+# this not above the cores (`VersionedBucketedState.buckets`), and every
+# bucket count is a divisor of it. Also the count of any state dir whose
+# pointer predates the recorded field: they were all written with 32.
 NUM_BUCKETS = 32
 
 _VERSION_RE = re.compile(r"v-?\d+c*")
@@ -138,33 +147,14 @@ def dir_rows(path: str) -> int:
     return total
 
 
-def bucket_of(*cols) -> Column:
-    """The state bucket of a key: ``pmod(hash(cols), NUM_BUCKETS)``."""
-    return F.pmod(F.hash(*cols), F.lit(NUM_BUCKETS))
+def _has_buckets(path: str) -> bool:
+    """Whether `path` is a dir holding at least one ``bucket=`` dir."""
+    return os.path.isdir(path) and any(e.startswith("bucket=") for e in os.listdir(path))
 
 
-def write_partitions(spark: SparkSession) -> int:
-    """Shuffle partition count `n` of a per-epoch bucketed write: the
-    largest divisor of NUM_BUCKETS not above the cores
-    (``sc.defaultParallelism``).
-
-    Callers repartition on the bucket's SOURCE KEY, not on the bucket
-    column: Spark's HashPartitioning puts a row in partition
-    ``pmod(murmur3(key), n)``, and since `n` divides NUM_BUCKETS that is
-    exactly ``bucket_of(key) mod n``. So every task owns whole buckets
-    and the bucket-partitioned write still emits at most one file per
-    bucket. (Repartitioning on the 32-valued bucket column instead would
-    hash bucket values, not keep them: collisions leave some tasks with
-    several buckets and some idle.)
-
-    Why not always NUM_BUCKETS tasks: in local mode a write task pays
-    ~70 ms for the job's Hadoop configuration, and without Hadoop native
-    IO every file and directory it creates forks a ``chmod`` — cost per
-    task and per file, not per row. A 25-row delta written as 32 tasks
-    on 4 cores spent seconds on that. With 32 or more cores `n` is
-    NUM_BUCKETS, i.e. one bucket per task."""
-    cores = spark.sparkContext.defaultParallelism
-    return max(d for d in range(1, min(cores, NUM_BUCKETS) + 1) if NUM_BUCKETS % d == 0)
+def _largest_divisor(n: int, cap: int) -> int:
+    """The largest divisor of `n` not above `cap` (at least 1)."""
+    return max(d for d in range(1, min(cap, n) + 1) if n % d == 0)
 
 
 class VersionedBucketedState:
@@ -197,7 +187,23 @@ class VersionedBucketedState:
         self.last_epoch: dict | None = None  # see `apply`
         self._phase_sec: dict[str, float] = {}
         os.makedirs(state_dir, exist_ok=True)
+        # The bucket count belongs to the state, not to the host: every
+        # commit records it in the pointer, so a restart on another core
+        # count hashes keys into the buckets they were written to (and
+        # DPP prunes the right ones). A new state dir sizes it to the
+        # cores; a pointer without the field predates it and means 32.
+        pointer = self._pointer()
+        cores = spark.sparkContext.defaultParallelism
+        self._buckets: int = pointer.get(
+            "buckets",
+            NUM_BUCKETS if pointer["version"] else _largest_divisor(NUM_BUCKETS, cores),
+        )
         self._check_layout()
+
+    @property
+    def buckets(self) -> int:
+        """The tables' bucket count, fixed for the life of the state dir."""
+        return self._buckets
 
     def _check_layout(self) -> None:
         """Hard-fail on a state dir written by a DIFFERENT table
@@ -257,23 +263,56 @@ class VersionedBucketedState:
             )
         self._run_id = run_id
 
+    # -- buckets -------------------------------------------------------------
+
+    def bucket_of(self, *cols) -> Column:
+        """The state bucket of a key: ``pmod(hash(cols), buckets)``."""
+        return F.pmod(F.hash(*cols), F.lit(self.buckets))
+
+    def write_partitions(self) -> int:
+        """Shuffle partition count `n` of a per-epoch bucketed write: the
+        largest divisor of `buckets` not above the cores
+        (``sc.defaultParallelism``) — `buckets` itself for a state dir
+        this host created.
+
+        Callers repartition on the bucket's SOURCE KEY, not on the bucket
+        column: Spark's HashPartitioning puts a row in partition
+        ``pmod(murmur3(key), n)``, and since `n` divides `buckets` that is
+        exactly ``bucket_of(key) mod n``. So every task owns whole buckets
+        and the bucket-partitioned write still emits at most one file per
+        bucket. (Repartitioning on the bucket column instead would hash
+        bucket values, not keep them: collisions leave some tasks with
+        several buckets and some idle.)
+
+        Why no more tasks, and no more buckets, than cores: in local mode
+        a write task pays ~70 ms for the job's Hadoop configuration, and
+        without Hadoop native IO every file and directory it creates
+        forks a ``chmod`` (3-4 ms each) and gets a ``.crc`` sidecar — cost
+        per task and per file, not per row. A 25-row delta written as 32
+        tasks on 4 cores spent seconds on that, and 32 buckets written
+        by 4 tasks still made 8 files per task and table."""
+        return _largest_divisor(self.buckets, self.spark.sparkContext.defaultParallelism)
+
     # -- I/O -----------------------------------------------------------------
 
     def _empty(self, schema: str) -> DataFrame:
         # Zero partitions, built JVM-side: reading an absent table or
-        # output runs no Spark tasks (a local list would ship a Python RDD).
-        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
+        # output runs no Spark tasks (a local list would ship a Python
+        # RDD). The limit(0) tells Catalyst the relation is empty, so a
+        # union drops it and a join with it is empty at planning time.
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema).limit(0)
 
     def read(self, name: str) -> DataFrame:
         with self.swap_lock:
             _, ver = self._current()
         path = None if ver is None else os.path.join(ver, name)
-        if path is None or not os.path.isdir(path):
+        # Every commit makes every table's dir, so a table no epoch has
+        # written is a dir without bucket subdirs: it reads as `_empty`
+        # too, not as a scan Catalyst cannot see is empty.
+        if path is None or not _has_buckets(path):
             return self._empty(self.tables[name])
-        # Explicit schema: a table dir can exist with zero bucket
-        # subdirs (an epoch that touched nothing) — inference would
-        # fail. Extra data columns in appended delta files are
-        # projected away by the schema.
+        # Extra data columns in appended delta files are projected away
+        # by the explicit schema.
         return self.spark.read.schema(self.tables[name]).parquet(path)
 
     def bytes(self, name: str) -> int:
@@ -331,11 +370,7 @@ class VersionedBucketedState:
         bucket dirs — not bytes — say whether anything was staged."""
         parts = sorted(os.listdir(self._staging)) if os.path.isdir(self._staging) else []
         dirs = [os.path.join(self._staging, p, f"table={name}") for p in parts]
-        return [
-            d
-            for d in dirs
-            if os.path.isdir(d) and any(e.startswith("bucket=") for e in os.listdir(d))
-        ]
+        return [d for d in dirs if _has_buckets(d)]
 
     def staged(self, name: str) -> DataFrame | None:
         """`name`'s staged delta, read with the table's schema (`bucket`
@@ -468,7 +503,7 @@ class VersionedBucketedState:
         if os.path.isdir(self._staged_output):
             os.makedirs(self._outputs, exist_ok=True)
             os.replace(self._staged_output, os.path.join(self._outputs, f"epoch={epoch_id}"))
-        meta = {"epoch": epoch_id, "version": version}
+        meta = {"epoch": epoch_id, "version": version, "buckets": self.buckets}
         run_id = self._run_id if self._run_id is not None else self._pointer().get("run_id")
         if run_id is not None:
             meta["run_id"] = run_id

@@ -111,27 +111,30 @@ def test_library_reads_only_deployment_env_settings():
     assert not offenders, "environment reads outside the deployment settings:\n" + "\n".join(offenders)
 
 
-def _package_calls(names: set[str], owner: str) -> list[str]:
-    """`path:line calls name()` for every call of one of `names` in a
-    package module other than `owner` (a path inside the package)."""
+def _package_trees(owner: str):
+    """(relative path, AST) of every package module other than `owner`
+    (a path inside the package)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = os.path.join(repo, "query_processing_over_streaming_data_using_flink_spark")
     owner = os.path.join(pkg, owner)
-    offenders = []
     for root, _dirs, files in os.walk(pkg):
         for path in (os.path.join(root, f) for f in sorted(files) if f.endswith(".py")):
             if path == owner:
                 continue
             with open(path) as fh:
-                tree = ast.parse(fh.read(), path)
-            offenders += [
-                f"{os.path.relpath(path, repo)}:{node.lineno} calls {name}()"
-                for node in ast.walk(tree)
-                if isinstance(node, ast.Call)
-                and (name := getattr(node.func, "attr", getattr(node.func, "id", None)))
-                in names
-            ]
-    return offenders
+                yield os.path.relpath(path, repo), ast.parse(fh.read(), path)
+
+
+def _package_calls(names: set[str], owner: str) -> list[str]:
+    """`path:line calls name()` for every call of one of `names` in a
+    package module other than `owner` (a path inside the package)."""
+    return [
+        f"{path}:{node.lineno} calls {name}()"
+        for path, tree in _package_trees(owner)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and (name := getattr(node.func, "attr", getattr(node.func, "id", None))) in names
+    ]
 
 
 # Stream-run binding: the calls only the shared stream driver may make.
@@ -160,6 +163,28 @@ def test_only_the_ann_operator_assigns_cells_and_builds_luts():
     `_nearest_cells` or `_pq_subvectors`."""
     offenders = _package_calls(_ANN_STEP_CALLS, os.path.join("operators", "similarity.py"))
     assert not offenders, "ANN steps outside the operator:\n" + "\n".join(offenders)
+
+
+# The state store's bucket arithmetic: a store's own count, read through
+# its `bucket_of` and `write_partitions` methods.
+_BUCKET_NAMES = {"NUM_BUCKETS", "bucket_of", "write_partitions"}
+
+
+def test_buckets_come_from_the_store():
+    """A face that buckets keys with a module-level count hashes them
+    into buckets the store's recorded count does not name, and DPP then
+    prunes the wrong ones after a restart on another core count. No
+    package module but `streaming/state_table.py` may import
+    `NUM_BUCKETS`, `bucket_of` or `write_partitions`."""
+    offenders = [
+        f"{path}:{node.lineno} imports {alias.name}"
+        for path, tree in _package_trees(os.path.join("streaming", "state_table.py"))
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for alias in node.names
+        if alias.name in _BUCKET_NAMES
+    ]
+    assert not offenders, "bucket arithmetic outside the state store:\n" + "\n".join(offenders)
 
 
 def test_no_script_shadows_a_stdlib_module():

@@ -938,7 +938,6 @@ def test_ivm_merge_is_o_delta(spark, tmp_path):
 
     from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
         IncrementalQ3,
-        NUM_BUCKETS,
     )
 
     state = tmp_path / "state"
@@ -1092,7 +1091,7 @@ def _new_files_per_bucket_write(before: set, after: set) -> dict:
 def test_bucketed_writes_are_sized_to_the_cores(spark, tmp_path):
     """Per-epoch work counters: every bucketed write of an IVM epoch and
     of an incragg epoch runs at most `defaultParallelism` tasks (not
-    NUM_BUCKETS) yet still adds at most one file per bucket per write,
+    one per bucket) yet still adds at most one file per bucket per write,
     and reading an absent state table runs no Spark tasks."""
     import pathlib
 
@@ -1157,6 +1156,109 @@ def test_bucketed_writes_are_sized_to_the_cores(spark, tmp_path):
     assert len(tasks) == 1 and tasks[0] <= cores, (cores, tasks)
     per_bucket = _new_files_per_bucket_write(set(), files(agg.state._current()[1]))
     assert per_bucket and max(per_bucket.values()) == 1, per_bucket
+
+
+@pytest.mark.parametrize(
+    "made_on, reopened_on, drop_count, buckets",
+    [(32, None, True, 32), (2, 32, False, 2)],
+    ids=["pointer-without-count", "recorded-count"],
+)
+def test_bucket_count_travels_with_the_state(
+    spark, tmp_path, monkeypatch, made_on, reopened_on, drop_count, buckets
+):
+    """The bucket count belongs to the state dir, not to the host. Epoch 0
+    is committed on `made_on` cores, so the new dir takes that count;
+    epoch 1 is applied after reopening it on `reopened_on` cores (None:
+    this session's). A pointer without the count (`drop_count`, as every
+    pointer written before the count was recorded) reads as 32. Either
+    way every key of every table lands in ``pmod(hash(key), buckets)``
+    — so the delta joins' bucket equalities and DPP still meet epoch 0's
+    rows — the next commit records the count, and the Top-20 over both
+    epochs equals the batch oracle's."""
+    import json
+
+    from pyspark import SparkContext
+
+    from query_processing_over_streaming_data_using_flink_spark.streaming.ivm import (
+        IncrementalQ3,
+    )
+
+    def cores(m, n):
+        if n is not None:
+            m.setattr(SparkContext, "defaultParallelism", property(lambda sc: n))
+
+    log = build_changelog(spark, SF_SMOKE)
+    even = F.col("seq") % 2 == 0
+    state = str(tmp_path / "state")
+    pointer = os.path.join(state, "CURRENT")
+    with monkeypatch.context() as m:
+        cores(m, made_on)
+        IncrementalQ3(spark, state).process_batch(log.filter(even), 0)
+    if drop_count:
+        with open(pointer) as fh:
+            meta = json.load(fh)
+        del meta["buckets"]
+        with open(pointer, "w") as fh:
+            json.dump(meta, fh)
+
+    with monkeypatch.context() as m:
+        cores(m, reopened_on)
+        pipe = IncrementalQ3(spark, state)
+        assert pipe.state.buckets == buckets
+        pipe.process_batch(log.filter(~even), 1)
+    assert pipe.state.committed_epoch() == 1 and pipe.last_stats["rows"]["l"] > 0
+    with open(pointer) as fh:
+        assert json.load(fh)["buckets"] == buckets
+    keys = {"c": "c_custkey", "o": "o_custkey", "co": "o_orderkey", "l": "l_orderkey",
+            "r": "l_orderkey"}
+    for table, key in keys.items():
+        df = pipe.state.read(table)
+        misplaced = df.filter(F.col("bucket") != F.pmod(F.hash(key), F.lit(buckets)))
+        assert df.count() > 0 and misplaced.count() == 0, table
+    assert _rows(pipe.top_n()) == _rows(q3_on_state(log))
+
+
+def test_absent_table_reads_as_an_empty_relation(spark, tmp_path):
+    """Reading a table with no committed files gives a relation Catalyst
+    knows is empty: a union with it optimizes to the other side alone
+    (no Union, no empty RDD scan) — before the first commit, and after
+    a commit that made the table's dir but wrote no bucket into it."""
+    import re
+
+    from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
+        VersionedBucketedState,
+    )
+
+    store = VersionedBucketedState(spark, str(tmp_path / "s"), {"t": "bucket int, k long"})
+    df = spark.range(5).select(F.lit(0).alias("bucket"), F.col("id").alias("k"))
+
+    def optimized(d):
+        # Expression ids differ between two resolutions of one plan.
+        return re.sub(r"#\d+", "#", d._jdf.queryExecution().optimizedPlan().toString())
+
+    assert optimized(store.read("t").unionByName(df)) == optimized(df)
+    store.apply(0, lambda: None)
+    assert os.path.isdir(os.path.join(store._current()[1], "t"))
+    assert optimized(store.read("t").unionByName(df)) == optimized(df)
+
+
+def test_many_file_read_runs_no_listing_job(spark, tmp_path):
+    """A micro-batch's files are listed on the driver: resolving a read
+    of 40 parquet files with an explicit schema starts no Spark job (at
+    Spark's default threshold of 32 paths it starts a parallel listing
+    job)."""
+    import glob
+
+    out = str(tmp_path / "files")
+    spark.range(400).repartition(40).write.parquet(out)
+    paths = glob.glob(os.path.join(out, "*.parquet"))
+    assert len(paths) == 40
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    seen = _last_job_id(spark)
+    df = spark.read.schema("id long").parquet(*paths)
+    assert len(df.inputFiles()) == 40
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert _last_job_id(spark) == seen
 
 
 def test_ivm_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
@@ -1410,6 +1512,7 @@ def test_near_dedup_merge_is_o_delta(spark, tmp_path):
     batch, not the accumulated state."""
     import pathlib
 
+    from query_processing_over_streaming_data_using_flink_spark.operators import dedup as dd
     from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
         IncrementalNearDedup,
     )
@@ -1428,7 +1531,7 @@ def test_near_dedup_merge_is_o_delta(spark, tmp_path):
     e0, v0 = h.state._current()
     before = inodes(v0)
     n_buckets_before = len({p.split("/")[1] for p in before if p.startswith("bands/")})
-    assert n_buckets_before > 4, "seed batch must populate many buckets"
+    assert n_buckets_before == h.state.buckets, "seed batch must populate every bucket"
 
     one_doc = spark.createDataFrame(
         [(9999, "a single fresh document " + " ".join(f"q{j}" for j in range(30)))],
@@ -1442,9 +1545,13 @@ def test_near_dedup_merge_is_o_delta(spark, tmp_path):
     # No bucket is rewritten: every v0 file keeps its inode in v1.
     moved = sorted(p for p, ino in before.items() if after.get(p) != ino)
     assert not moved, moved
-    # One doc emits 4 band keys -> new files in at most 4 buckets.
+    # One doc emits 4 fresh band keys -> new files in exactly the
+    # buckets those keys hash into, at the store's own bucket count.
+    keys = dd.band_keys(dd.minhash_signatures(one_doc))
+    buckets = keys.select(h.state.bucket_of("band_key").alias("b")).collect()
+    touched = {f"bucket={r.b}" for r in buckets}
     grown = {p.split("/")[1] for p in after if p.startswith("bands/") and p not in before}
-    assert 0 < len(grown) <= 4, grown
+    assert 0 < len(grown) <= 4 and grown == touched, (grown, touched)
 
 
 def test_ivm_crash_at_pointer_flip_recovers(spark, tmp_path, monkeypatch):
@@ -1698,11 +1805,6 @@ def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
     from query_processing_over_streaming_data_using_flink_spark.streaming.dedup import (
         IncrementalNearDedup,
     )
-    from query_processing_over_streaming_data_using_flink_spark.streaming.state_table import (
-        NUM_BUCKETS,
-        bucket_of,
-        write_partitions,
-    )
 
     state = IncrementalNearDedup(spark, str(tmp_path / "state")).state
     for e in range(4):
@@ -1712,8 +1814,8 @@ def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
         state.apply(
             e,
             lambda: state.stage(
-                claims.withColumn("bucket", bucket_of("band_key")).repartition(
-                    write_partitions(spark), "band_key"
+                claims.withColumn("bucket", state.bucket_of("band_key")).repartition(
+                    state.write_partitions(), "band_key"
                 ),
                 "bands",
             ),
@@ -1723,7 +1825,7 @@ def test_near_dedup_compaction_leaves_one_file_per_bucket(spark, tmp_path):
     state.compact()
     ver = state._current()[1]
     assert _files_per_bucket(ver) == 1
-    assert len(os.listdir(os.path.join(ver, "bands"))) == NUM_BUCKETS
+    assert len(os.listdir(os.path.join(ver, "bands"))) == state.buckets
     assert _rows(state.read("bands")) == before
 
 
